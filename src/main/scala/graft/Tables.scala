@@ -109,14 +109,20 @@ object Tables {
     * identity-at-scale invariant promises none. An UNREADABLE length now
     * errs the other way (Long.MaxValue/`nFiles`, i.e. assume split-rich,
     * add no exchange): a missed spread costs one under-parallel stage on
-    * a kilobyte table; a spurious exchange at 100 TB is a catastrophe. */
+    * a kilobyte table; a spurious exchange at 100 TB is a catastrophe.
+    *
+    * The ceiling division is overflow-safe for any length `>= 0` and any
+    * split size `>= 1`, up to `Long.MaxValue` for either: the classic
+    * `(len + maxPB - 1) / maxPB` wrapped negative on the unreadable-length
+    * fallback (and on a `maxPartitionBytes` near `Long.MaxValue`), which
+    * planned ONE split — the very exchange the fallback exists to avoid. */
   private[graft] def plannedSplitsOf(p: String, maxPB: Long,
       hconf: org.apache.hadoop.conf.Configuration, nFiles: Int = 1): Long = {
     val len = try {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(hconf).getFileStatus(hp).getLen
     } catch { case _: Throwable => Long.MaxValue / math.max(1, nFiles) }
-    math.max(1L, (len + maxPB - 1) / maxPB)
+    math.max(1L, len / maxPB + (if (len % maxPB == 0) 0L else 1L))
   }
 
   /** Builds a session configured the way this engine expects: AQE on,

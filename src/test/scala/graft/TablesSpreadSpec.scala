@@ -19,6 +19,11 @@ class TablesSpreadSpec extends SparkSpec {
       assert(Tables.plannedSplitsOf(f.toString, 4 * 1024 * 1024, hconf) === 3L)
       assert(Tables.plannedSplitsOf(s"file:$f", 4 * 1024 * 1024, hconf) === 3L)
       assert(Tables.plannedSplitsOf(f.toString, 128 * 1024 * 1024, hconf) === 1L)
+      // a split size near Long.MaxValue must not wrap the ceiling negative
+      assert(Tables.plannedSplitsOf(f.toString, Long.MaxValue, hconf) === 1L)
+      // exact multiple: no extra split for a zero remainder
+      java.nio.file.Files.write(f, new Array[Byte](8 * 1024 * 1024))
+      assert(Tables.plannedSplitsOf(f.toString, 4 * 1024 * 1024, hconf) === 2L)
     } finally java.nio.file.Files.deleteIfExists(f)
   }
 
@@ -38,9 +43,15 @@ class TablesSpreadSpec extends SparkSpec {
   }
 
   test("spreadBy is the identity when planned splits >= slots") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread_").toString
+    // createTempDirectory already makes the root, so the table goes to a
+    // subpath (write.parquet refuses an existing dir). coalesce(1) keeps
+    // it ONE file: under local[4] a plain write makes 4 part files, and
+    // spreadBy's `files.length >= slots` early exit would then return
+    // before any split is estimated, leaving the spread arm unreachable.
+    val root = java.nio.file.Files.createTempDirectory("graft_spread_")
+    val dir = root.resolve("t").toString
     try {
-      spark.range(1000).toDF("id").write.parquet(dir)
+      spark.range(1000).toDF("id").coalesce(1).write.parquet(dir)
       val df = spark.read.parquet(dir)
       // force tiny splits so the (small) file plans >= 4 splits (slots=4)
       spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
@@ -55,6 +66,6 @@ class TablesSpreadSpec extends SparkSpec {
         .queryExecution.optimizedPlan.toString
       assert(plan2.contains("RepartitionByExpression"),
         s"expected a keyed spread on the under-parallel layout, got:\n$plan2")
-    } finally graft.sinks.DbFs.deleteRecursive(dir)
+    } finally graft.sinks.DbFs.deleteRecursive(root.toString)
   }
 }
