@@ -127,6 +127,43 @@ object Bench {
     * remaining round budget before the report is computed. */
   val RelCleanFactor = 1.2
 
+  /** A number of a machine-read line: Locale.ROOT, so a comma-decimal
+    * default locale never prints `1,234` where `1.234` is meant. */
+  private[graft] def num(pattern: String, v: Double): String =
+    pattern.formatLocal(java.util.Locale.ROOT, v)
+  private[graft] def sec(v: Double): String = if (v < 0) "-1" else num("%.4g", v)
+  private[graft] def thr(v: Double): String = if (v < 0) "-1" else num("%.0f", v)
+
+  /** The compact line: `best` holds already-formatted values. */
+  private[graft] def compactLineOf(best: Seq[(String, String)], nc: Seq[String],
+                                   probeBest: Double, sfDir: String): String =
+    s"""{"metric":"compact","best":""" +
+      best.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}") +
+      ""","nc":""" + nc.map(Json.str(_)).mkString("[", ",", "]") +
+      ""","probe_best":""" + num("%.3f", probeBest) + ""","sf":""" +
+      Json.str(sfDir) + "}"
+
+  /** The FINAL stdout line: every result rounded to 6 significant digits,
+    * scale rows, gate ratios and headline medians LAST (see main). */
+  private[graft] def finalLineOf(results: Seq[(String, Double)],
+                                 headlineNames: Set[String], total: Double,
+                                 sfDir: String): String = {
+    def jnum(v: Double): String =
+      if (v.isNaN || v.isInfinite) "-1"
+      else BigDecimal(v).round(new java.math.MathContext(6))
+        .bigDecimal.stripTrailingZeros.toPlainString
+    def rankOf(k: String): Int =
+      if (headlineNames(k)) 3
+      else if (k.endsWith("_ratio")) 2
+      else if (k.startsWith("p_scale_") || k.startsWith("rel_scale_") ||
+        k == "vcf_parse_10m_norm" || k == "vcf_load_1m") 1
+      else 0
+    val qs = results.sortBy(e => rankOf(e._1)) // stable sort
+      .map { case (k, v) => Json.str(k) + ":" + jnum(v) }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,""" +
+      s""""sf":${Json.str(sfDir)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -195,8 +232,9 @@ object Bench {
     // page-cache/writeback contention, which is where the unexplained
     // parse10m/load1m swings on identical code were attributed. Two
     // cheap signals, recorded beside every scale sample's CPU bracket:
-    // (a) a fixed 16 MB O_DSYNC write+delete on the same ext4 volume —
-    // wall time tracks device/writeback pressure; (b) the kernel's
+    // (a) a fixed 16 MB O_DSYNC write+delete beside SPARK_GRAFT_SF_DIR,
+    // on the data's own volume (/tmp may be tmpfs) — wall time tracks
+    // device/writeback pressure; (b) the kernel's
     // Dirty+Writeback backlog from /proc/meminfo in MB — what the next
     // write must queue behind. Series-only evidence (never gates, never
     // results rows): they make environmental-regression claims
@@ -204,7 +242,8 @@ object Bench {
     val ioBuf = new Array[Byte](1 << 20)
     java.util.Arrays.fill(ioBuf, 0x5A.toByte)
     def ioProbeSec(): Double = time {
-      val p = java.nio.file.Paths.get("/tmp/graft_bench_ioprobe.bin")
+      val p = java.nio.file.Paths.get(sfDir).toAbsolutePath
+        .resolveSibling("graft_bench_ioprobe.bin")
       val ch = java.nio.channels.FileChannel.open(p,
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.WRITE,
@@ -1263,11 +1302,11 @@ object Bench {
         ",\"scale\":" + scaleCleanJson +
         ",\"probe_clean_threshold_sec\":" + CleanProbeSec +
         ",\"probe_rel_clean_factor\":" + RelCleanFactor +
-        f""","probe_session_best_sec":$bestProbePar%.3f}"""
+        ""","probe_session_best_sec":""" + num("%.3f", bestProbePar) + "}"
     }
     def rawSeriesLine: String = {
       val rawJson = raw.map { case (k, ts) =>
-        "\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
+        "\"" + k + "\":" + ts.map(num("%.3f", _)).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
       s"""{"metric":"raw_series","raw":$rawJson,"clean":$cleanJson,"sf":"$sfDir"}"""
     }
@@ -1365,8 +1404,6 @@ object Bench {
       else { ncRows += short; scaleMin(name) }
     }
     def rv(name: String): Double = results.getOrElse(name, -1.0)
-    def sec(v: Double): String = if (v < 0) "-1" else f"$v%.4g"
-    def thr(v: Double): String = if (v < 0) "-1" else f"$v%.0f"
     val headlineShort = headline.map(_._1).map { n =>
       val short = n match {
         case "q11_pivot_daily_double" => "q11d"
@@ -1423,15 +1460,11 @@ object Bench {
       // negative g_norm (normalize measured faster than plain, within
       // noise) with "not computed" in the committed r18 line
     ).map { case (s, n) =>
-      s -> results.get(n).map(v => f"$v%.4g").getOrElse("-1")
+      s -> results.get(n).map(num("%.4g", _)).getOrElse("-1")
     }
-    val compactJson =
-      (headlineShort ++ parseShort ++ latencyShort ++ scaleShort ++ gateShort)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val compactLine =
-      s"""{"metric":"compact","best":$compactJson,"nc":""" +
-        ncRows.map("\"" + _ + "\"").mkString("[", ",", "]") +
-        f""","probe_best":$bestProbePar%.3f,"sf":"$sfDir"}"""
+    val compactLine = compactLineOf(
+      headlineShort ++ parseShort ++ latencyShort ++ scaleShort ++ gateShort,
+      ncRows.toSeq, bestProbePar, sfDir)
     // Headroom budget (r14 verdict #6): the committed r14 line measured
     // 1,302 chars against this 1,900 tripwire — ~600 chars spare, or
     // ~20 more "key":0.0000 rows before trimming is needed. Spill
@@ -1459,22 +1492,8 @@ object Bench {
     // round-over-round comparison reads. The same line is written to
     // bench_result.json in the working directory (deleted at startup) so
     // no stdout corruption can lose it.
-    val headlineNameSet = headline.map(_._1).toSet
-    def jnum(v: Double): String =
-      if (v.isNaN || v.isInfinite) "-1"
-      else BigDecimal(v).round(new java.math.MathContext(6))
-        .bigDecimal.stripTrailingZeros.toPlainString
-    def rankOf(k: String): Int =
-      if (headlineNameSet(k)) 3
-      else if (k.endsWith("_ratio")) 2
-      else if (k.startsWith("p_scale_") || k.startsWith("rel_scale_") ||
-        k == "vcf_parse_10m_norm" || k == "vcf_load_1m") 1
-      else 0
-    val finalQs = results.toSeq.sortBy(e => rankOf(e._1)) // stable sort
-      .map { case (k, v) => "\"" + k + "\":" + jnum(v) }
-      .mkString("{", ",", "}")
-    val finalLine = s"""{"metric":"total","value":${jnum(total)}""" +
-      s""","unit":"sec","queries":$finalQs,"sf":"$sfDir"}"""
+    val finalLine = finalLineOf(results.toSeq, headline.map(_._1).toSet,
+      total, sfDir)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_result.json"), finalLine + "\n")
     catch { case t: Throwable =>

@@ -20,11 +20,11 @@ import graft.sinks.DbFs
   */
 object Graft {
 
-  private def arg(args: Array[String], flag: String): Option[String] = {
+  private[graft] def arg(args: Array[String], flag: String): Option[String] = {
     val i = args.indexOf(flag)
     if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
   }
-  private def has(args: Array[String], flag: String): Boolean = args.contains(flag)
+  private[graft] def has(args: Array[String], flag: String): Boolean = args.contains(flag)
 
   /** First positional operand (`args(1)`) for verbs whose input is a
     * parquet path. A missing operand or a flag in its place is a USAGE
@@ -73,22 +73,9 @@ object Graft {
       Seq(("other", other)))
       .filter(_._2 > 0)
       .sortBy { case (l, c) => (if (byCountDesc) -c else 0L, l) }
-      .map { case (l, c) => s"${jsonStr(l)}:$c" }
+      .map { case (l, c) => s"${Json.str(l)}:$c" }
       .mkString("{", ",", "}")
   }
-
-  /** JSON string escape shared by every CLI `--json`/report face —
-    * backslash, quote, and ALL control chars (a newline or tab in a file
-    * path or error message must not emit invalid JSON). */
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c    => c.toString
-  } + "\""
 
   /** Both accepted spellings of the pattern-config flag:
     * `--patterns-config` (the phi verbs) and `--phi-patterns-config`
@@ -123,7 +110,7 @@ object Graft {
     * standalone scan/list faces require an explicit `--db`, so a
     * leftover registry in the world-shared default db cannot alter an
     * unrelated file's scan invisibly. */
-  private def customPhiPatterns(args: Array[String], db: String,
+  private[graft] def customPhiPatterns(args: Array[String], db: String,
       consultDbRegistry: Boolean)
       : Seq[graft.transform.PhiSanitizer.PhiPattern] =
     patternsConfigArg(args)
@@ -167,7 +154,7 @@ object Graft {
     * the `<table>.current` pointer, the plain layout is identity (see
     * `DbFs.resolvePath`). READS and APPENDS go through here; swap
     * DESTINATIONS stay logical so `Writers` can commit by pointer flip. */
-  private def tbl(db: String, name: String): String =
+  private[graft] def tbl(db: String, name: String): String =
     DbFs.resolveTable(db, name)
 
   private def upsertRegistry(spark: SparkSession, dir: String,
@@ -189,102 +176,11 @@ object Graft {
     * through here: the rsID projection is a COVERING full-row copy, so a
     * variants rewrite that skips the index rebuild leaves `lookup rsX`
     * serving stale flag/popmax/LD columns — and silently, because the
-    * swap preserves row counts. The reference maintains its indexes
-    * transactionally with the UPDATE (`references/hapmap3.py:53-107`,
-    * `schema.py:271-275`); this is the parquet-layout analogue. The
-    * projections are cheap column scans of the freshly STAGED variants
-    * temp directory, not a re-run of the incoming plan. */
+    * swap preserves row counts (`references/hapmap3.py:53-107`,
+    * `schema.py:271-275`). */
   private def replaceVariantsStaged(spark: SparkSession, db: String,
                                     updated: DataFrame): Unit =
-    graft.sinks.Writers.replaceInPlaceAllStagedGrouped(Seq(
-      Seq((s"$db/variants", (tmps: Map[String, String]) =>
-        graft.sinks.Writers.writeVariants(updated, tmps(s"$db/variants")))),
-      // both projections scan the staged variants temp and are
-      // independent of each other — they stage concurrently
-      Seq(
-        (s"$db/rsid_idx", (tmps: Map[String, String]) =>
-          graft.sinks.Writers.writeRsidIndex(
-            spark.read.parquet(tmps(s"$db/variants")), tmps(s"$db/rsid_idx"))),
-        (s"$db/gene_idx", (tmps: Map[String, String]) =>
-          graft.sinks.Writers.writeGeneIndex(
-            spark.read.parquet(tmps(s"$db/variants")), tmps(s"$db/gene_idx"))))))
-
-  /** Replace one key's rows in a fact table (per-study / per-score
-    * delete-then-insert, so several studies coexist as in the reference's
-    * keyed tables); whole-table overwrite when the existing layout
-    * predates the key column.
-    *
-    * O(import), not O(table): every import stamps its key and lands as
-    * NEW files, so replacing a key's prior rows is the same surgical
-    * footer-stat drop force-reload uses (`Writers.dropKeyFiles` — the
-    * parquet analogue of the reference's `DELETE WHERE study_id`, which
-    * is O(batch) in Postgres), followed by a plain append of the
-    * incoming batch null-padded to the table schema. On a table holding
-    * hundreds of studies, an import touches one study's files and never
-    * rewrites the others (spec-pinned by file-inventory survival).
-    * A batch whose schema genuinely drifts from the table's (new or
-    * retyped columns) takes the staged full-rewrite union instead,
-    * where unionByName reconciles. Crash window, as on the load path:
-    * a failure between the drop and the append leaves the key's rows
-    * absent — re-running the import recovers; the registry row keeps
-    * the prior counts until then. */
-  private def replaceByKey(spark: SparkSession, dir: String,
-                           incoming: DataFrame, key: String,
-                           value: String): Unit =
-    replaceByKeys(spark, dir, incoming, Seq(key -> value))
-
-  /** Composite-key form (import-frequencies replaces per
-    * (source, subset), the reference's ON CONFLICT key).
-    * `private[graft]` so the validate-before-drop ordering is
-    * spec-pinnable with a deliberately failing incoming plan. */
-  private[graft] def replaceByKeys(spark: SparkSession, dir: String,
-                            incoming: DataFrame,
-                            keys: Seq[(String, String)]): Unit = {
-    // reads, the surgical drop and the append all target the CURRENT
-    // physical dir; only the schema-drift rewrite arm swaps, and it
-    // passes the LOGICAL dir so a versioned db commits by pointer flip
-    val phys = DbFs.resolvePath(dir)
-    lazy val existing = spark.read.parquet(phys)
-    if (DbFs.exists(phys) &&
-        keys.forall(k => existing.columns.contains(k._1))) {
-      val storeSchema = existing.schema
-      val storeTypes = storeSchema.map(f => f.name -> f.dataType).toMap
-      val incomingTypes = incoming.schema.map(f => f.name -> f.dataType)
-      val appendable = incomingTypes.forall { case (c, t) =>
-        storeTypes.get(c).contains(t) } // subset columns, exact types
-      if (appendable) {
-        // the incoming plan is executed and CACHED before the surgical
-        // drop destroys the key's prior rows — a malformed import input
-        // (the plan's first execution is here, not at the verb's start)
-        // must fail BEFORE its key's existing data is gone, mirroring
-        // the load path's parse-before-drop ordering
-        val vc = incoming.select(storeSchema.map(f =>
-          (if (incoming.columns.contains(f.name)) col(f.name)
-           else lit(null).cast(f.dataType)).as(f.name)): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          vc.count()
-          graft.sinks.Writers.dropKeyFiles(spark, dir, keys)
-          vc.write.mode("append").parquet(phys)
-        } finally vc.unpersist()
-      } else {
-        val keep = existing.filter(
-          !keys.map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))
-        graft.sinks.Writers.replaceInPlace(
-          keep.unionByName(incoming, allowMissingColumns = true),
-          dir)((d, p) => d.write.parquet(p))
-      }
-    } else {
-      // an existing table WITHOUT the key column(s) predates per-key
-      // coexistence — replacing it drops every prior import's rows, so
-      // say so instead of doing it silently
-      if (DbFs.exists(phys))
-        println(s"WARNING: existing $dir predates the " +
-          s"'${keys.map(_._1).mkString(",")}' column(s); " +
-          "replacing the WHOLE table (prior imports' rows are dropped)")
-      incoming.write.mode("overwrite").parquet(phys)
-    }
-  }
+    graft.sinks.WritePlan.rewrite(spark, graft.sinks.WritePlan.variants(db), updated)
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(1) }
@@ -382,813 +278,7 @@ object Graft {
     def variants = spark.read.parquet(tbl(db, "variants"))
 
     verb match {
-      case "load" =>
-        val vcf = args(1)
-        // `--report` (`cli.py:282-283,458-497`): a machine-readable JSON
-        // load report for scripting — status/variants_loaded/
-        // variants_skipped/load_batch_id/file_hash plus elapsed_seconds,
-        // vcf_file, an UTC timestamp, sample_id and the target namespace.
-        // `--sample-id` feeds ONLY this report (`cli.py:491` — the
-        // reference CLI uses it nowhere else; default = the file stem,
-        // Python Path.stem = last suffix stripped). "schema" maps to the
-        // db directory — the closest analogue of the reference's Postgres
-        // schema namespace.
-        val reportPath = arg(args, "--report")
-        val loadT0 = System.nanoTime()
-        def writeReport(head: Seq[(String, String)]): Unit =
-          reportPath.foreach { rp =>
-            val base = new org.apache.hadoop.fs.Path(vcf).getName
-            val stem =
-              if (base.contains('.')) base.substring(0, base.lastIndexOf('.'))
-              else base
-            val ts = java.time.format.DateTimeFormatter
-              .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-              .withZone(java.time.ZoneOffset.UTC)
-              .format(java.time.Instant.now())
-            val entries = head ++ Seq(
-              // Locale.ROOT: the f-interpolator renders a comma decimal
-              // separator on de/fr-locale JVMs, which is invalid JSON
-              "elapsed_seconds" -> String.format(java.util.Locale.ROOT,
-                "%.3f", Double.box((System.nanoTime() - loadT0) / 1e9)),
-              "vcf_file" -> jsonStr(vcf),
-              "timestamp" -> jsonStr(ts),
-              "sample_id" -> jsonStr(arg(args, "--sample-id").getOrElse(stem)),
-              "schema" -> jsonStr(db))
-            DbFs.writeStringAtomic(rp, entries
-              .map { case (k, v) => s"${jsonStr(k)}: $v" }
-              .mkString("{\n  ", ",\n  ", "\n}\n"))
-            println(s"  Report: $rp")
-          }
-        // flag-vocabulary validation up front, BEFORE any ledger write —
-        // a typo'd flag must not leave in_progress/failed ledger residue
-        arg(args, "--imputation-source").foreach { s =>
-          if (!Set("minimac4", "beagle", "impute2", "auto")(s))
-            sys.error(s"--imputation-source must be one of minimac4, " +
-              s"beagle, impute2, auto: $s")
-        }
-        val ledger = new graft.audit.Audit.Ledger(spark, s"$db/ledger")
-        val progress = new graft.audit.LoadProgress(spark)
-        // the listener's lifetime spans EVERY exit from here on — the
-        // skip return, a PHI-scan abort, a ledger_begin failure — not
-        // just the load body's try below; a leaked listener would keep
-        // processing task events for the session's lifetime
-        try {
-        val hash = progress.stage("file_hash")(graft.audit.Audit.fileSha256(vcf))
-        val existing = ledger.checkExisting(hash)
-        if (existing.isDefined && !has(args, "--force-reload")) {
-          println(s"skip: file already loaded (batch ${existing.get})")
-          // skipped-report shape (`cli.py:458-463`): load_batch_id carries
-          // the PREVIOUS load's batch so scripts can still key on it
-          writeReport(Seq(
-            "status" -> jsonStr("skipped"),
-            "variants_loaded" -> "0",
-            "load_batch_id" -> jsonStr(existing.get),
-            "file_hash" -> jsonStr(hash)))
-          return
-        }
-        val batchId = java.util.UUID.randomUUID().toString
-        def now() = new java.sql.Timestamp(System.currentTimeMillis())
-        // PHI scan before any load work (`loader.py:275-298`). The scan
-        // surface matches the reference's detector (`phi/detector.py:
-        // 160-214`): ## meta lines, sample names on the #CHROM line, and
-        // a bounded sample of data rows (ID/INFO/FORMAT/sample columns —
-        // the reference scans with sample_rate/max_records; 1000 rows is
-        // a fixed-size driver sample, not a data-sized collect).
-        // --fail-on-phi implies the scan: passing it alone must never be
-        // a silent no-op.
-        var ledgerNote = ""
-        if (has(args, "--phi-scan") || has(args, "--fail-on-phi")) {
-          // custom patterns from the per-db registry (phi-patterns-add) or
-          // an explicit patterns-config flag merge into the builtin scan,
-          // the reference's config-fed PHIScanner (`loader.py:275-277`)
-          val custom = customPhiPatterns(args, db, consultDbRegistry = true)
-          // name-keyed merge, custom wins (the reference's dict registry):
-          // an overridden builtin must not ALSO run, or counts double and
-          // the severity resolves to the shadowed builtin's
-          val customNames = custom.map(_.name).toSet
-          val customPats = custom.map(p => (p.regex, p.name))
-          val allPats = graft.transform.PhiSanitizer.mergedRegistry(custom)
-            .map(p => (p.regex, p.name))
-          val headerLines = graft.vcf.VcfHeader.readHeaderLines(spark, vcf)
-          val meta = graft.transform.PhiSanitizer.sanitizeHeader(headerLines)
-            .redactions.filterNot(r => customNames(r.category)).map(r =>
-              graft.transform.PhiSanitizer.Detection(r.pattern, r.category, "HEADER")) ++
-            graft.transform.PhiSanitizer.scanHeaderCustom(headerLines, customPats)
-          val sampleIds = headerLines.filter(_.startsWith("#CHROM"))
-            .flatMap(l => graft.transform.PhiSanitizer.scanChromLine(l, allPats))
-          val dataRows = spark.read.textFile(vcf)
-            .filter(!$"value".startsWith("#")).limit(1000).collect().toSeq
-            .flatMap(l => graft.transform.PhiSanitizer.scanDataLine(l, allPats))
-          val findings = meta ++ sampleIds ++ dataRows
-          if (findings.nonEmpty) {
-            val cats = findings.map(_.category).distinct.sorted
-            val where = findings.map(_.context.takeWhile(_ != '[')).distinct.sorted
-            ledgerNote = s"phi_scan: ${findings.length} findings " +
-              cats.mkString("(", ",", ")") + " in " + where.mkString(",")
-            println(s"WARNING: PHI detected in VCF: ${findings.length} items " +
-              s"${cats.mkString(",")} in ${where.mkString(",")}")
-            if (has(args, "--fail-on-phi"))
-              sys.error(s"PHI detected in VCF file " +
-                s"(${findings.length} findings). " +
-                "Drop --fail-on-phi to load anyway.")
-          } else ledgerNote = "phi_scan: clean"
-        }
-        // The reference writes the audit row BEFORE loading and flips it on
-        // completion/rollback (`loader.py:547-623`, `schema.py:207-241`):
-        // a crash mid-load must leave a visible in_progress/failed row, not
-        // silence. checkExisting only honors status='completed', so these
-        // rows never satisfy the skip check.
-        progress.stage("ledger_begin") {
-          ledger.append(graft.audit.Audit.LedgerEntry(batchId, vcf, hash,
-            "in_progress", 0L, now(), ledgerNote))
-        }
-        val prevBatch = if (has(args, "--force-reload")) existing else None
-        // commit point = the 'completed' ledger row; post-commit failures
-        // (vault, progress printing) must never roll the batch back
-        var committed = false
-        // only plain appends need row-level rollback; swapped tables are
-        // all-or-nothing
-        var appendedG = false
-        var appendedV = false
-        // the genotype append runs on its own driver thread (see below);
-        // any failure path must drain it before touching the store
-        var genoPending: Option[scala.concurrent.Future[Unit]] = None
-        def drainGeno(): Unit = genoPending.foreach { f =>
-          scala.util.Try(scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration.Inf))
-          genoPending = None
-        }
-        try {
-          // `--imputation-source` (`cli.py:317-323`, `loader.py:292-296`):
-          // pin the imputation-metric extraction to one tool's INFO
-          // vocabulary instead of the header auto-detection; the
-          // reference's Enum vocabulary (`parsers/imputation.py:22-28`),
-          // validated before the ledger_begin row above
-          // normalize DEFAULTS ON like the reference's load
-          // (`cli.py:269`, --normalize/--no-normalize with default True);
-          // --normalize stays accepted as the explicit spelling. vt
-          // normalization is a codegen'd native expression (T5), so the
-          // default costs no UDF barrier on the parse.
-          val opts = graft.vcf.VcfReader.Options(
-            normalize = !has(args, "--no-normalize"),
-            humanGenome = !has(args, "--no-human-genome"),
-            imputationSource =
-              arg(args, "--imputation-source").getOrElse("auto"),
-            minInfoScore = arg(args, "--min-info-score").map(_.toDouble))
-          val v = graft.vcf.VcfReader.variants(spark, vcf, opts)
-            .withColumn("load_batch_id", lit(batchId))
-          val header = progress.stage("read_header")(
-            graft.vcf.VcfHeader.read(spark, vcf))
-          // HIPAA master toggle (`cli.py:303-310,352-359`): compliance
-          // features default ON; --no-hipaa-mode turns anonymization AND
-          // header sanitization off in one flag (the reference also drops
-          // its TLS requirement — transport infra with no analogue here);
-          // the individual --no-anonymize / --no-sanitize-headers still
-          // apply on top. --anonymize stays accepted (it IS the default).
-          val hipaaOff = has(args, "--no-hipaa-mode")
-          val anonymize = !hipaaOff && !has(args, "--no-anonymize")
-          // `--sanitize-headers` default-ON (`cli.py:295-298`,
-          // `loader.py:308-326`): every load scans the header for PHI and
-          // records the outcome — the reference's header_sanitization
-          // audit event; here a printed summary + a ledger-note clause the
-          // phi-report/phi-stats verbs serve. Builtin patterns only, like
-          // the reference's default sanitizer config; the data-row scan
-          // stays the explicit --phi-scan face.
-          if (!hipaaOff && !has(args, "--no-scan-headers") &&
-              !has(args, "--no-sanitize-headers")) {
-            val rep = graft.transform.PhiSanitizer.sanitizeHeader(header.lines)
-            if (rep.redactions.nonEmpty) {
-              val sev = rep.redactions.map(r =>
-                graft.transform.PhiSanitizer.severityOf(r.category,
-                  graft.transform.PhiSanitizer.mergedRegistry(Nil)))
-              val risk = Seq("critical", "high", "medium", "low")
-                .find(sev.contains).getOrElse("low")
-              println(s"header sanitization: detected " +
-                s"${rep.redactions.length} PHI items (risk: $risk)")
-              val clause =
-                s"header_sanitization: ${rep.redactions.length} items " +
-                  s"(risk: $risk)"
-              ledgerNote =
-                if (ledgerNote.isEmpty) clause else s"$ledgerNote; $clause"
-            }
-          }
-          // Sample anonymization (`loader.py:326+`, phi/anonymizer):
-          // deterministic ANON_<sha256(salt||id)[:12]> ids. The mapping is
-          // ONE-WAY by design (deviation from the reference's encrypted
-          // phi_vault, documented): no recoverable original id is stored
-          // anywhere. --anonymize-salt keys the hash so low-entropy sample
-          // ids can't be brute-forced from the anon id.
-          var anonIds: Option[DataFrame] = None
-          val anonSalt = arg(args, "--anonymize-salt").getOrElse("")
-          def anonId(c: org.apache.spark.sql.Column) =
-            concat(lit("ANON_"), substring(sha2(concat(lit(anonSalt), c), 256), 1, 12))
-          // Swapped tables stage together: every new table is fully
-          // written to a temp sibling BEFORE any destination changes, so a
-          // failure anywhere in the expensive write phase leaves both
-          // variants and genotypes exactly as they were — no window where
-          // a force-reload has dropped the previous batch's genotypes but
-          // not yet landed its variants. Entries are (dst, writer(tmps));
-          // later writers may read earlier entries' staged temp data.
-          val swaps = scala.collection.mutable.ArrayBuffer[
-            (String, Map[String, String] => Unit)]()
-          // per-batch QC aggregate, produced by the genotype future below
-          // (cached + counted there); read on the main thread only after
-          // the join-point Await — future completion publishes the write
-          var qcCache: Option[DataFrame] = None
-          // the anonymization MAPPING derives from the header's sample
-          // list and lands in the vault whether or not genotypes are
-          // stored — the reference anonymizes parser.samples up front
-          // (`loader.py:328-345`), independent of store_genotypes
-          if (anonymize && header.samples.nonEmpty)
-            anonIds = Some(header.samples.toDF("sample_id")
-              .select(anonId($"sample_id").as("anon_id")))
-          // per-sample genotype storage is OPT-IN like the reference
-          // (`cli.py:324-326` --store-genotypes default False,
-          // `loader.py:398-402`): a plain load of a cohort VCF must not
-          // silently commit to per-sample×variant storage — at scale that
-          // multiplies the store by sample count. Without the flag the
-          // variants' QC columns stay typed-null (the reference loader
-          // never fills them either — `models.py:54-61` default None).
-          val storeGenotypes =
-            has(args, "--store-genotypes") && header.samples.nonEmpty
-          val dosageOnly = has(args, "--dosage-only")
-          // an explicitly-passed genotype-storage flag that cannot take
-          // effect must not vanish silently (the reference's CLI is
-          // silent here; a printed warning keeps its exit contract while
-          // telling the user storage is opt-in now)
-          if (!storeGenotypes && (dosageOnly || has(args, "--adj-filter")))
-            println("WARNING: --adj-filter/--dosage-only apply to genotype " +
-              "storage, which needs --store-genotypes" +
-              (if (header.samples.isEmpty) " and a sample-bearing VCF"
-               else "") + " — no genotype rows will be stored")
-          if (storeGenotypes) {
-            var g = graft.vcf.VcfReader.genotypes(spark, vcf,
-                opts.humanGenome, opts.skipMalformed)
-              .withColumn("load_batch_id", lit(batchId))
-            if (anonymize)
-              g = g.withColumn("sample_id", anonId($"sample_id"))
-            // `--adj-filter` (`cli.py:327-331`): store only genotype rows
-            // passing gnomAD ADJ — the load-time row DROP the reference
-            // applies per call (`genotype_loader.py:279-282`), reusing the
-            // passes_adj column (F3; same missing-passes semantics, with
-            // the documented multi-allelic-het deviation). Runs BEFORE
-            // --dosage-only, like the reference (the filter reads the
-            // real GQ/DP/AB the nulling would erase).
-            if (has(args, "--adj-filter"))
-              g = g.filter($"passes_adj")
-            // `--dosage-only` (`cli.py:332-334`): space-saving storage —
-            // hard-call fields null out (gt '.', phased false, allele
-            // ints, GQ/DP/AD, allele balance), dosage + its GP/DS sources
-            // survive (`genotype_loader.py:288-293`). passes_adj keeps the
-            // ORIGINAL call's ADJ verdict (our column, no reference
-            // analogue — nulling it would claim the verdict was never
-            // computed).
-            if (dosageOnly)
-              g = g
-                .withColumn("gt", lit("."))
-                .withColumn("phased", lit(false))
-                .withColumn("a1", lit(null).cast("int"))
-                .withColumn("a2", lit(null).cast("int"))
-                .withColumn("gq", lit(null).cast("int"))
-                .withColumn("dp", lit(null).cast("int"))
-                .withColumn("ad", lit(null).cast("array<int>"))
-                .withColumn("allele_balance", lit(null).cast("double"))
-            // flag BEFORE the write: a failure mid-append may have
-            // committed some files, and the rollback must cover them
-            appendedG = true
-            // The genotype side (text parse -> hive append -> reload
-            // drop) runs on ITS OWN DRIVER THREAD, overlapped with the
-            // variants parse_count below: the two are independent scans
-            // of the same file, and together they keep the executor pool
-            // full where running them back-to-back left cores idle in
-            // each phase (the r7/r8 load regression: ~1.4s genotype
-            // write + ~1.7s variants parse sequential; overlapped they
-            // cost ~max of the two). Variant QC DOES depend on the
-            // written files, so it materializes only after the join
-            // point below awaits this future.
-            val gw = g
-            genoPending = Some(scala.concurrent.Future {
-                // hive-partitioned by chrom from the FIRST append (the
-                // variants layout): the genotype point probe then lists
-                // one chrom directory instead of footer-testing every
-                // file in the table. Still a narrow write — no shuffle;
-                // a coordinate-sorted VCF's input splits each span ~1
-                // chromosome, so the per-load file count stays ~tasks.
-                // Rows land unsorted; `compact` pays the ordering debt.
-                // A pre-hive db has FLAT files at the table root: a hive
-                // append there would mix layouts into an unreadable
-                // table, so such stores keep appending flat until a
-                // `compact` migrates them.
-                val gDir = tbl(db, "genotypes")
-                val legacyFlat = DbFs.hasFlatParquet(gDir)
-                progress.stage("write_genotypes") {
-                  val w = gw.write.mode("append")
-                  (if (legacyFlat) w else w.partitionBy("chrom"))
-                    .parquet(gDir)
-                }
-                // an append can land within the directory-mtime tick of
-                // a cached probe listing; drop same-JVM cached listings
-                // so a lookup right after this load sees the new files
-                graft.query.PointLookup.invalidateListings(s"$db/genotypes")
-                // force-reload drops the previous batch's genotype rows —
-                // append alone would double them on every reload. The
-                // drop is SURGICAL (DELETE WHERE load_batch_id
-                // semantics, `loader.py:244-252`): every load stamps
-                // load_batch_id and appends its rows as new files, so
-                // the old batch's files are identified by footer stats
-                // and renamed away at O(batch) metadata cost; only
-                // post-compact files mixing batches pay a filtered
-                // single-file rewrite. It runs AFTER the new batch's
-                // append succeeded (a corrupt reload file never destroys
-                // the batch it replaces) and BEFORE the QC plan below
-                // lists the directory (a lazy plan would capture the
-                // doomed files). Crash semantics deviate from the
-                // reference's single transaction: a failure between this
-                // drop and the ledger commit leaves the old batch
-                // dropped and the new one rolled back/'failed' — the
-                // file reads as not loaded; re-running the load recovers.
-                prevBatch.foreach { b =>
-                  progress.stage("drop_prev_genotypes") {
-                    graft.sinks.Writers.dropBatchFiles(
-                      spark, s"$db/genotypes", b)
-                  }
-                  graft.query.PointLookup.invalidateListings(s"$db/genotypes")
-                }
-                // QC from the WRITTEN batch rows, still on this thread
-                // (it depends only on the files this future just wrote,
-                // so it overlaps the variants parse like the write did):
-                // a column-pruned scan of compressed parquet (row groups
-                // of other batches prune on load_batch_id stats) beats
-                // re-parsing the VCF text a third time. chrom is a hive
-                // partition column on read-back — cast pins it to string
-                // so the join key types match v's. A zero-row batch on a
-                // fresh db leaves no parquet to infer a schema from — QC
-                // falls back to the parse plan (empty aggregate, same
-                // null-filled join). Cached + counted so the table
-                // writes reuse the aggregated rows instead of re-running
-                // the aggregation per write.
-                // a dosage-only store holds NO hard calls by design —
-                // aggregating variant QC from the nulled rows would
-                // PERSIST a claim (call_rate 0, every call missing) the
-                // source data contradicts. Skip the QC join: the
-                // variants' QC columns stay typed-null, exactly the
-                // reference's unfilled defaults (`models.py:54-61`).
-                if (!dosageOnly) {
-                val gHasFiles = DbFs.hasData(gDir)
-                val qc = progress.stage("genotype_qc") {
-                  val q = (if (gHasFiles)
-                      graft.qc.VariantQc.fromGenotypes(
-                        spark.read.parquet(gDir)
-                          .withColumn("chrom", $"chrom".cast("string"))
-                          .filter($"load_batch_id" === batchId))
-                    else graft.qc.VariantQc.fromGenotypes(gw))
-                    .drop("n_samples")
-                    .persist(
-                      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                  // a failed materialization must not leak the cache —
-                  // qcCache is only assigned after a successful count,
-                  // so the finally's unpersist would never see it
-                  try q.count()
-                  catch { case e: Throwable => q.unpersist(); throw e }
-                  q
-                }
-                qcCache = Some(qc)
-                }
-            }(scala.concurrent.ExecutionContext.global))
-          }
-          // (a sample-free reload's genotype drop is deferred past
-          // parse_count below — a corrupt replacement file must fail the
-          // load BEFORE it destroys the batch it was meant to replace)
-          // §2.13 append-only cohort: a db accumulates ONE batch per VCF.
-          // The reference deletes only the SAME file's previous batch and
-          // otherwise appends (`loader.py:244-252`; the acceptance
-          // cross-sample queries depend on multi-file accumulation).
-          //
-          // The common cohort load — an existing store, a NEW file — is
-          // an O(batch) APPEND, like the genotypes side: the batch's rows
-          // land as new pos-sorted files inside the chrom directories and
-          // as new rows of both covering projections, and NO existing
-          // file is read or rewritten. At cohort scale that is the
-          // difference between a load costing O(one VCF) and a load
-          // rewriting the whole store (the reference's INSERTs are
-          // O(batch) for the same reason). Appended files overlap prior
-          // batches' pos ranges within a chrom directory; the serving
-          // faces read every overlapping file and sort driver-side
-          // (`PointLookup`), and `compact` folds the fragmentation back
-          // into disjoint sorted files. The append path requires the
-          // batch schema to be a subset of the store's and both covering
-          // projections to be present in their covering shape — schema
-          // evolution, legacy slim projections, and brand-new dbs take
-          // the staged full-rewrite swap instead. A force-reload on an
-          // append-ready store stays O(batch): the prior batch's files
-          // are surgically dropped (dropBatchFiles) and the new batch
-          // appends like any other file.
-          val vWithId = graft.ingest.VariantMatching.withVariantId(v)
-          // EVERY load path caches the parsed batch and counts it first:
-          // the count fills the cache (so later writes read materialized
-          // rows instead of re-running the parse — repartitionByRange
-          // alone executes its input twice, once sampling range bounds
-          // and once shuffling), it runs CONCURRENTLY with the genotype
-          // append above (the two text parses together fill the executor
-          // pool), and the count IS the per-batch ledger number. A batch
-          // is one VCF — MEMORY_AND_DISK spills rather than OOMs at
-          // cohort scale.
-          val vCache = vWithId.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          var vcJoined: Option[DataFrame] = None
-          var batchN = -1L
-          try {
-          batchN = progress.stage("parse_count")(vCache.count())
-          // join point: the genotype append, any force-reload drop, and
-          // the QC aggregate must all be complete before the batch plan
-          // below is finalized
-          genoPending.foreach(f => scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration.Inf))
-          genoPending = None
-          if (!storeGenotypes) prevBatch.foreach { b =>
-            // reload WITHOUT genotype storage (sample-free file, or
-            // --store-genotypes dropped since) of a file whose previous
-            // batch stored genotype rows: those still must go — the same
-            // surgical O(batch) drop as the genotyped arm, run only now
-            // that the replacement file parsed cleanly
-            if (DbFs.exists(tbl(db, "genotypes"))) {
-              progress.stage("drop_prev_genotypes") {
-                graft.sinks.Writers.dropBatchFiles(spark, s"$db/genotypes", b)
-              }
-              graft.query.PointLookup.invalidateListings(s"$db/genotypes")
-            }
-          }
-          var vc: DataFrame = vCache
-          qcCache.foreach { qc =>
-            // variant QC joins on the full decomposed key —
-            // (chrom,pos,ref) alone would row-multiply sites that share
-            // a position across ALTs. The left join is count-preserving
-            // (QC keys are its groupBy output, unique), so batchN above
-            // is still the ledger number. Small batches broadcast the
-            // (one-row-per-variant) QC side so the cached batch is never
-            // shuffled; cohort-scale batches fall back to the shuffle
-            // join rather than a driver-sized broadcast. The threshold
-            // is a system property so the shuffle arm is testable at
-            // spec scale (and tunable for executor-memory budgets).
-            val bcMax = sys.props.get("graft.qc.broadcast.max.rows")
-              .map(_.toLong).getOrElse(2000000L)
-            val qcSide =
-              if (batchN < bcMax) broadcast(qc) else qc
-            vc = vCache.join(qcSide, Seq("chrom", "pos", "ref", "alt"), "left")
-          }
-          // One schema for every store, reference-style: the variants
-          // table carries the QC columns even when the file had no
-          // FORMAT/sample section, null until filled
-          // (`schema.py:110-187`). Without this, a cohort mixing
-          // sample-less and genotyped files trips the schema-evolution
-          // full rewrite on the second load (an O(store) cost for an
-          // O(batch) file); with it, both load shapes produce identical
-          // columns and stay on the append path.
-          graft.qc.VariantQc.joinedColumns.foreach { case (c, t) =>
-            if (!vc.columns.contains(c))
-              vc = vc.withColumn(c, lit(null).cast(t))
-          }
-          if (qcCache.isDefined) {
-            // one execution of the QC join serves all three table writes:
-            // left unpersisted, each write — plus repartitionByRange's
-            // range-sampling pass — re-runs the batch-sized shuffle join,
-            // ~6 executions per load. (The sample-less shape skips this:
-            // vc is then a trivial null-pad projection over vCache.)
-            vc = vc.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            vcJoined = Some(vc)
-            progress.stage("join_qc")(vc.count())
-          }
-          val storeExists = DbFs.exists(tbl(db, "variants"))
-          lazy val storeSchema = spark.read.parquet(tbl(db, "variants")).schema
-          def alignTo(df: DataFrame,
-                      target: org.apache.spark.sql.types.StructType) =
-            df.select(target.fields.toSeq.map(f =>
-              (if (df.columns.contains(f.name)) col(f.name)
-               else lit(null)).cast(f.dataType).as(f.name)): _*)
-          def projSchema(dir: String) =
-            // an unreadable projection (absent, or empty with no footer
-            // to infer from) routes to the full-rewrite path, never fails
-            try {
-              if (DbFs.exists(dir))
-                Some(spark.read.parquet(dir).schema)
-              else None
-            } catch { case scala.util.control.NonFatal(_) => None }
-          lazy val rsidSchema = projSchema(tbl(db, "rsid_idx"))
-          lazy val geneSchema = projSchema(tbl(db, "gene_idx"))
-          // lazy: forced inside the schema_check stage below, so the
-          // guard's footer/schema reads are attributed to it
-          lazy val appendReady = storeExists && {
-            val extra = vc.columns.toSet -- storeSchema.fieldNames.toSet
-            // covering = the projection carries every store column (a
-            // slim legacy rsid_idx or a drifted projection must not be
-            // appended to — its rows would miss columns silently)
-            val storeTypes =
-              storeSchema.fields.toSeq.map(f => f.name -> f.dataType).toMap
-            // projections must match the store's types too, not just its
-            // column names — alignTo casts to the PROJECTION's schema, so
-            // a legacy projection carrying a drifted type (e.g. an
-            // integer chrom from partition inference of an old rewrite)
-            // would silently null-cast appended rows
-            val rsidCovering = rsidSchema.exists(s =>
-              s.fields.toSeq.map(f => f.name -> f.dataType).toSet ==
-                storeTypes.toSet)
-            // load_batch_id is REQUIRED in the gene projection: the
-            // O(batch) force-reload drops a batch's index rows by footer
-            // stats on that column; a legacy 8-column gene_idx routes to
-            // the full rewrite, which migrates it
-            val geneReady = geneSchema.exists { s =>
-              s.fieldNames.toSet == Set("gene", "chrom", "pos", "ref",
-                "alt", "impact", "consequence", "variant_id",
-                "load_batch_id") &&
-              s.fields.forall(f => storeTypes.get(f.name).contains(f.dataType))
-            }
-            // NAME overlap is not enough: alignTo CASTS the batch to the
-            // store's types, and a lossy cast silently nulls data. The
-            // concrete trap is hive partition-type inference — a store
-            // whose chrom dirs are all numeric ("chrom=1".."chrom=22")
-            // reads back chrom as an integer, and a later chrX batch
-            // would cast 'X' to null, landing every row in the null
-            // partition unreachable by any chrom-scoped probe. Any
-            // common-column type mismatch routes to the full rewrite,
-            // where unionByName's type reconciliation handles it.
-            val batchTypes = vc.schema.map(f => f.name -> f.dataType).toMap
-            val typeDrift = storeSchema.fields.toSeq.flatMap(f =>
-              batchTypes.get(f.name).filter(_ != f.dataType)
-                .map(t => s"${f.name}: $t vs store ${f.dataType}"))
-            if (extra.nonEmpty)
-              println(s"schema evolution (${extra.mkString(",")}): " +
-                "full-rewrite load instead of batch append")
-            else if (typeDrift.nonEmpty)
-              println(s"schema type drift (${typeDrift.mkString("; ")}): " +
-                "full-rewrite load instead of batch append")
-            extra.isEmpty && typeDrift.isEmpty && rsidCovering && geneReady
-          }
-          // force-reload on an append-ready store is DELETE + INSERT at
-          // O(batch): surgically drop the previous batch's files from
-          // the store and both projections (footer-stat identified, see
-          // dropBatchFiles), then take the same append path a new file
-          // takes. Only a store the append guards reject (schema drift,
-          // legacy projections) pays the staged full rewrite.
-          val canAppend = progress.stage("schema_check")(appendReady)
-          if (canAppend) {
-            // the cached batch serves all three appends and the ledger
-            // count (already taken above, so the cache is full and the
-            // three appends read materialized rows); being independent
-            // writes to three directories they run concurrently
-            // (local[32] has the idle cores; on a cluster the scheduler
-            // interleaves their stages). The QC join runs per write, but
-            // over the two caches — a thin projection, not a re-parse.
-            //
-            // the old batch is dropped only AFTER the new file parsed
-            // and cached cleanly — a corrupt reload file must never
-            // destroy the batch it was meant to replace. A failure
-            // from here on leaves the old batch gone and the new one
-            // rolled back ('failed' ledger row): the file reads as not
-            // loaded, and re-running the load recovers.
-            prevBatch.foreach { b =>
-              progress.stage("drop_prev_batch") {
-                Seq("variants", "rsid_idx", "gene_idx").foreach(t =>
-                  graft.sinks.Writers.dropBatchFiles(spark, s"$db/$t", b))
-              }
-              Seq("variants", "rsid_idx", "gene_idx").foreach(t =>
-                graft.query.PointLookup.invalidateListings(s"$db/$t"))
-            }
-            // flag only once writes may have landed files — a failure
-            // before this point needs no store rollback
-            appendedV = true
-            val aligned = alignTo(vc, storeSchema)
-            progress.stage("write_tables") {
-              graft.sinks.Writers.runConcurrently(Seq(
-                () => graft.sinks.Writers.writeVariants(
-                  aligned, tbl(db, "variants"), mode = "append"),
-                () => graft.sinks.Writers.writeRsidIndex(
-                  alignTo(vc, rsidSchema.get), tbl(db, "rsid_idx"),
-                  mode = "append"),
-                () => graft.sinks.Writers.writeGeneIndex(
-                  aligned, tbl(db, "gene_idx"), mode = "append")))
-            }
-            // appends can land within the directory-mtime tick of a
-            // cached probe listing (same-JVM); swaps don't need this
-            Seq("variants", "rsid_idx", "gene_idx").foreach(t =>
-              graft.query.PointLookup.invalidateListings(s"$db/$t"))
-          } else {
-              if (!storeExists && batchN == 0 && swaps.isEmpty) {
-                // a zero-variant batch on a FRESH db (headers but no
-                // records) must not create the store at all: writing an
-                // empty table leaves a marker-only directory no later
-                // read can infer a schema from, poisoning every
-                // subsequent load. The ledger still records completed/0
-                // below (the reference loads 0 rows into pre-existing
-                // tables; here no table = no rows).
-              } else if (!storeExists) {
-                // fresh db: all three tables derive from the CACHED
-                // batch, so they are independent of each other — one
-                // concurrent group (plus any pending genotype swap),
-                // same all-or-nothing swap
-                progress.stage("write_tables") {
-                  graft.sinks.Writers.replaceInPlaceAllStagedGrouped(Seq(
-                    swaps.toSeq ++ Seq[(String, Map[String, String] => Unit)](
-                      (s"$db/variants",
-                        tmps => graft.sinks.Writers.writeVariants(
-                          vc, tmps(s"$db/variants"))),
-                      (s"$db/rsid_idx",
-                        tmps => graft.sinks.Writers.writeRsidIndex(
-                          vc, tmps(s"$db/rsid_idx"))),
-                      (s"$db/gene_idx",
-                        tmps => graft.sinks.Writers.writeGeneIndex(
-                          vc, tmps(s"$db/gene_idx"))))))
-                }
-              } else {
-                val survivors = prevBatch match {
-                  case Some(b) => graft.audit.Audit.dropBatch(variants, b)
-                  case None    => variants
-                }
-                val base = survivors.unionByName(vc,
-                  allowMissingColumns = true)
-                swaps += ((s"$db/variants",
-                  tmps => graft.sinks.Writers.writeVariants(
-                    graft.ingest.VariantMatching.withVariantId(base),
-                    tmps(s"$db/variants"))))
-                // K1b/K1d: the rsID and gene secondary projections are
-                // cheap column scans of the freshly STAGED variants data
-                // (store-sized here, so NOT re-derived from the batch
-                // cache), and commit in the same all-or-nothing swap as
-                // the variants table — no window where a new store is
-                // live with a stale index (the reference recreates
-                // indexes inside the load transaction,
-                // `schema.py:347-359`). They stage as one concurrent
-                // GROUP: both scan the staged variants temp and are
-                // independent of each other
-                val projections = Seq[(String, Map[String, String] => Unit)](
-                  (s"$db/rsid_idx",
-                    tmps => graft.sinks.Writers.writeRsidIndex(
-                      spark.read.parquet(tmps(s"$db/variants")),
-                      tmps(s"$db/rsid_idx"))),
-                  (s"$db/gene_idx",
-                    tmps => graft.sinks.Writers.writeGeneIndex(
-                      spark.read.parquet(tmps(s"$db/variants")),
-                      tmps(s"$db/gene_idx"))))
-                progress.stage("write_tables") {
-                  graft.sinks.Writers.replaceInPlaceAllStagedGrouped(
-                    swaps.toSeq.map(Seq(_)) :+ projections)
-                }
-              }
-          }
-          } finally {
-            // a failed load must not leak caches, and any in-flight
-            // genotype append must land (or fail) BEFORE the catch
-            // handler below rolls the batch back
-            drainGeno()
-            vcJoined.foreach(_.unpersist())
-            qcCache.foreach(_.unpersist())
-            vCache.unpersist()
-          }
-          // the APPEND paths accumulate files across loads; --compact
-          // folds the fold-back into this load (pre-commit, so a failure
-          // here ledgers as failed and rolls the appends back)
-          if (has(args, "--compact") && appendedG)
-            progress.stage("compact_genotypes") {
-              graft.sinks.Writers.compactPlain(spark, s"$db/genotypes",
-                arg(args, "--target-file-mb").getOrElse("128").toLong,
-                sortCols = Seq("chrom", "pos"),
-                partitionCol = Some("chrom"))
-            }
-          if (has(args, "--compact") && appendedV)
-            progress.stage("compact_variants") {
-              val targetMb =
-                arg(args, "--target-file-mb").getOrElse("128").toLong
-              // per-chrom incremental on the store (content unchanged, so
-              // the projections stay FRESH — they only need their own
-              // file-count fold-back, a plain clustered rewrite each)
-              val vDir = tbl(db, "variants")
-              DbFs.subdirNames(vDir)
-                .filter(_.startsWith("chrom="))
-                .foreach { d =>
-                  if (DbFs.parquetFileCount(s"$vDir/$d") > 1)
-                    graft.sinks.Writers.compactPartitionDir(spark,
-                      vDir, d, targetMb,
-                      sortCols = Seq("pos"))
-                }
-              graft.sinks.Writers.compactPlain(spark, s"$db/rsid_idx",
-                targetMb, sortCols = Seq("rs_id"))
-              graft.sinks.Writers.compactPlain(spark, s"$db/gene_idx",
-                targetMb, sortCols = Seq("gene", "chrom", "pos"))
-            }
-          // per-BATCH count, not the whole store's: the ledger row records
-          // what THIS file contributed (reference `variants_loaded`,
-          // `loader.py:547-560`). Every path counted its cached batch
-          // above — O(batch), never a store scan. The footer fallback is
-          // defensive only (batchN is always set on the paths above).
-          val n =
-            if (batchN >= 0) batchN
-            else graft.sinks.Writers.parquetRowCount(tbl(db, "variants"))
-          if (n == 0) {
-            // a zero-variant batch (e.g. a VCF with headers but no
-            // records) must not leave schema-less marker directories: a
-            // directory holding only _SUCCESS poisons every later read
-            // of that table (no footer to infer a schema from), so a
-            // REAL load into this db would then fail. Remove any table
-            // directory this load created that holds no parquet at all.
-            // The reference has no such failure mode — its tables exist
-            // in the schema regardless of row count (`schema.py`).
-            def rmIfNoParquet(t: String): Unit = {
-              val d = tbl(db, t)
-              if (DbFs.exists(d) && !DbFs.hasParquetRecursive(d)) {
-                DbFs.deleteRecursive(d)
-                DbFs.deleteRecursive(DbFs.pointerPath(s"$db/$t"))
-              }
-            }
-            // unconditional: also covers a force-reload to an empty file
-            // whose surgical drop removed the store's only batch (a no-op
-            // when any other batch's parquet remains)
-            Seq("variants", "rsid_idx", "gene_idx").foreach(rmIfNoParquet)
-            if (appendedG) rmIfNoParquet("genotypes")
-          }
-          progress.stage("ledger_commit") {
-            ledger.append(graft.audit.Audit.LedgerEntry(batchId, vcf, hash,
-              "completed", n, now(), ledgerNote))
-          }
-          committed = true
-          // vault write only after the load committed (no orphan vault rows
-          // from failed loads), deduped against prior loads of the same
-          // samples (the reference upserts ON CONFLICT,
-          // `phi/anonymizer.py get_or_create_anonymous_id`); advisory, so
-          // a vault IO failure must not roll back the committed batch
-          anonIds.foreach { ids =>
-            try {
-              val vaultDir = s"$db/phi_vault/sample_id_mapping"
-              val fresh =
-                if (DbFs.exists(vaultDir))
-                  ids.join(spark.read.parquet(vaultDir).select("anon_id"),
-                    Seq("anon_id"), "left_anti")
-                else ids
-              fresh.withColumn("load_batch_id", lit(batchId))
-                .write.mode("append").parquet(vaultDir)
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                println(s"WARNING: phi_vault write failed: ${e.getMessage}")
-            }
-          }
-          progress.print()
-          println(s"loaded $n variants (batch $batchId)")
-          // success-report shape (`cli.py:476-482`). variants_skipped is
-          // the reference's info-score drop count (`loader.py:292-296`);
-          // counting it needs the unfiltered parse cardinality, an extra
-          // O(batch) pass paid only when BOTH --report and
-          // --min-info-score were given (the count is 0 without a filter)
-          // best-effort: the load is COMMITTED at this point, so a
-          // recount failure (file moved since, transient FS error) must
-          // not turn a successful load into a nonzero exit with no
-          // report — fall back to the reference's own absent-key default
-          // of 0 (`cli.py:479` result.get("variants_skipped", 0))
-          val skippedN =
-            if (reportPath.isDefined && opts.minInfoScore.isDefined)
-              scala.util.Try(math.max(0L, graft.vcf.VcfReader.variants(
-                spark, vcf, opts.copy(minInfoScore = None)).count() - n))
-                .recover { case e =>
-                  println("WARNING: variants_skipped recount failed " +
-                    s"(${e.getMessage}); reporting 0")
-                  0L
-                }.get
-            else 0L
-          writeReport(Seq(
-            "status" -> jsonStr("success"),
-            "variants_loaded" -> n.toString,
-            "variants_skipped" -> skippedN.toString,
-            "load_batch_id" -> jsonStr(batchId),
-            "file_hash" -> jsonStr(hash)))
-        } catch {
-          case e: Throwable if !committed =>
-            // any in-flight genotype append must finish landing (or
-            // failing) before the rollback below touches its files —
-            // a no-op when the happy path's finally already drained it
-            drainGeno()
-            // roll back this batch's genotype appends (best-effort; the
-            // swapped tables never committed), then ledger the failure —
-            // orphan data with no audit trace is the reference's explicit
-            // no-no (`loader.py:547-623`)
-            try {
-              if (appendedG && DbFs.exists(tbl(db, "genotypes")))
-                graft.sinks.Writers.replaceInPlace(
-                  graft.audit.Audit.dropBatch(
-                    spark.read.parquet(tbl(db, "genotypes")), batchId),
-                  s"$db/genotypes")((d, p) =>
-                  d.write.partitionBy("chrom").parquet(p))
-            } catch { case _: Throwable => () }
-            try {
-              // a partially-appended batch (variants or either projection)
-              // rolls back by rewriting the survivors — the failure path
-              // pays the O(store) rewrite the happy path no longer does
-              if (appendedV)
-                replaceVariantsStaged(spark, db, graft.audit.Audit.dropBatch(
-                  spark.read.parquet(tbl(db, "variants")), batchId))
-            } catch { case _: Throwable => () }
-            ledger.append(graft.audit.Audit.LedgerEntry(batchId, vcf, hash,
-              "failed", 0L, now(), s"error: ${e.getMessage}"))
-            throw e
-        }
-        } finally progress.close()
+      case "load" => Load.run(spark, args, db)
 
       case "compact" =>
         // K1 discipline: repeated loads append genotype files and every
@@ -1210,20 +300,10 @@ object Graft {
             // form below is one job over everything). Content is
             // unchanged, so the covering projections stay fresh without
             // a rebuild (validate's fingerprint check proves it).
-            val maxFiles = arg(args, "--max-files").getOrElse("8").toInt
-            val vDir = tbl(db, "variants")
-            val dirs = DbFs.subdirNames(vDir)
-              .filter(_.startsWith("chrom="))
-            var doneN = 0
-            dirs.foreach { d =>
-              val nf = DbFs.parquetFileCount(s"$vDir/$d")
-              if (nf > maxFiles) {
-                graft.sinks.Writers.compactPartitionDir(spark,
-                  vDir, d, targetMb, sortCols = Seq("pos"))
-                doneN += 1
-              }
-            }
-            println(s"compacted $doneN/${dirs.length} chrom partition(s) " +
+            val (doneN, dirsN) = graft.sinks.Writers.compactChromDirs(spark,
+              tbl(db, "variants"), targetMb,
+              arg(args, "--max-files").getOrElse("8").toInt)
+            println(s"compacted $doneN/$dirsN chrom partition(s) " +
               "(content unchanged; projections stay fresh)")
           case "variants" if DbFs.exists(tbl(db, "variants")) =>
             replaceVariantsStaged(spark, db, variants)
@@ -1414,19 +494,16 @@ object Graft {
           // hard kill; the reference can't orphan because its load is one
           // Postgres transaction). Detected in BOTH tables — the genotype
           // append commits before the variants write, so a crash can
-          // orphan genotypes alone. `--drop-orphans` repairs by rewriting
-          // the affected table(s) without those batches (atomic staged
-          // swap, projections rebuilt). Don't run it while a load is in
+          // orphan genotypes alone. `--drop-orphans` repairs with the
+          // surgical drop below. Don't run it while a load is in
           // flight — an active batch is completed-less by definition.
           val completedIds = spark.read.parquet(s"$db/ledger")
             .filter($"status" === "completed")
             .select($"load_batch_id").distinct()
           // NULL batch ids are NOT orphans: they are legacy rows from a
           // pre-ledger store (null-filled by a widening rewrite's
-          // unionByName) and must never reach dropBatch — a null batch id
-          // there makes `=!= null` evaluate NULL for every tagged row,
-          // i.e. the "repair" would delete every committed batch and keep
-          // only the legacy rows
+          // unionByName) and must never reach the drop: they are no
+          // batch, and the "repair" must keep them
           def orphansOf(df: DataFrame): Seq[String] =
             df.select($"load_batch_id").filter($"load_batch_id".isNotNull)
               .distinct()
@@ -1452,14 +529,10 @@ object Graft {
               // only post-compact mixed files pay a filtered rewrite) —
               // no store-sized rebuild to drop batch-sized residue
               val allOrphans = (orphanV ++ orphanG).distinct
-              val tables = Seq("variants", "rsid_idx", "gene_idx",
-                "genotypes").filter(t => DbFs.exists(tbl(db, t)))
-              allOrphans.foreach { b =>
-                tables.foreach(t =>
-                  graft.sinks.Writers.dropBatchFiles(spark, s"$db/$t", b))
-              }
-              tables.foreach(t =>
-                graft.query.PointLookup.invalidateListings(s"$db/$t"))
+              val dirs = (graft.sinks.WritePlan.variants(db).dirs :+
+                s"$db/genotypes").filter(d => DbFs.exists(DbFs.resolvePath(d)))
+              allOrphans.foreach(b => graft.sinks.WritePlan.dropKeys(
+                spark, dirs, Seq("load_batch_id" -> b)))
               println(s"dropped orphan batch(es): " +
                 allOrphans.mkString(","))
             }
@@ -1664,9 +737,10 @@ object Graft {
         // one join execution: write (replacing this study's prior rows),
         // then count from the written parquet (matched) and the raw stats
         // scan (total) — no re-run of the matching join for bookkeeping
-        replaceByKey(spark, s"$db/gwas_stats",
+        graft.sinks.WritePlan.land(spark,
+          graft.sinks.WritePlan.plain(s"$db/gwas_stats"),
           harmonized.withColumn("study_accession", lit(accession)),
-          "study_accession", accession)
+          Seq("study_accession" -> accession))
         val n = stats.count()
         val m = spark.read.parquet(tbl(db, "gwas_stats"))
           .filter($"study_accession" === accession).count()
@@ -1686,8 +760,9 @@ object Graft {
           weights, variants, chromCol = "chr_name", posCol = "chr_position")
         // per-score replace (weights are pgs_id-stamped by the reader) so
         // several scores coexist, as in the reference's scores table
-        replaceByKey(spark, s"$db/prs_weights",
-          matched.filter($"variant_id".isNotNull), "pgs_id", meta.pgsId)
+        graft.sinks.WritePlan.land(spark,
+          graft.sinks.WritePlan.plain(s"$db/prs_weights"),
+          matched.filter($"variant_id".isNotNull), Seq("pgs_id" -> meta.pgsId))
         // counts from the raw body scan and the written parquet — don't
         // re-run the matching join
         val wc = weights.count()
@@ -1715,10 +790,10 @@ object Graft {
         // (variant_id, source, population, subset), so several sources/
         // subsets coexist and a re-import replaces only its own rows.
         // O(import) via the composite-key surgical drop + append (see
-        // replaceByKeys): other sources' files survive untouched.
+        // WritePlan): other sources' files survive untouched.
         val freqDir = s"$db/population_frequencies"
-        replaceByKeys(spark, freqDir, long,
-          Seq("source" -> source, "subset" -> subset))
+        graft.sinks.WritePlan.land(spark, graft.sinks.WritePlan.plain(freqDir),
+          long, Seq("source" -> source, "subset" -> subset))
         val nFreq = spark.read.parquet(DbFs.resolvePath(freqDir))
           .filter($"source" === source && $"subset" === subset).count()
         if (!has(args, "--no-update-popmax") &&
@@ -2091,12 +1166,12 @@ object Graft {
         val auditDf = new graft.audit.Audit.AuditLog(spark, s"$db/audit_log").read()
         if (auditDf.isEmpty) {
           if (vJson)
-            println(s"""{"start_date":${vStart.map(jsonStr).getOrElse("null")},""" +
-              s""""end_date":${vEnd.map(jsonStr).getOrElse("null")},""" +
+            println(s"""{"start_date":${vStart.map(Json.str(_)).getOrElse("null")},""" +
+              s""""end_date":${vEnd.map(Json.str(_)).getOrElse("null")},""" +
               """"total_entries":0,"verified_entries":0,"is_valid":true,""" +
               """"coverage_percent":100.0,"violation_count":0,""" +
               """"violations":[],"first_entry_hash":null,""" +
-              s""""last_entry_hash":null,"verification_time":${jsonStr(
+              s""""last_entry_hash":null,"verification_time":${Json.str(
                 java.time.Instant.now().toString)}}""")
           else println("no audit log")
         }
@@ -2130,13 +1205,13 @@ object Graft {
                 else ("chain_broken",
                   "no predecessor entry carries the claimed previous_hash " +
                     "(deleted or spliced-out entry)")
-              s"""{"audit_id":${r.getLong(0)},"event_time":${jsonStr(r.getString(2))},""" +
-                s""""status":${jsonStr(status)},"message":${jsonStr(msg)}}"""
+              s"""{"audit_id":${r.getLong(0)},"event_time":${Json.str(r.getString(2))},""" +
+                s""""status":${Json.str(status)},"message":${Json.str(msg)}}"""
             }.mkString("[", ",", "]")
             println(s"""{"start_date":${vStart.orElse(checked.headOption.map(
-                _.getString(2).take(10))).map(jsonStr).getOrElse("null")},""" +
+                _.getString(2).take(10))).map(Json.str(_)).getOrElse("null")},""" +
               s""""end_date":${vEnd.orElse(checked.lastOption.map(
-                _.getString(2).take(10))).map(jsonStr).getOrElse("null")},""" +
+                _.getString(2).take(10))).map(Json.str(_)).getOrElse("null")},""" +
               s""""total_entries":${checked.length},""" +
               s""""verified_entries":${checked.length - bad.length},""" +
               s""""is_valid":${bad.isEmpty},""" +
@@ -2145,10 +1220,10 @@ object Graft {
                   checked.length) / 100.0},""" +
               s""""violation_count":${bad.length},"violations":$viol,""" +
               s""""first_entry_hash":${checked.headOption.map(r =>
-                jsonStr(r.getString(5))).getOrElse("null")},""" +
+                Json.str(r.getString(5))).getOrElse("null")},""" +
               s""""last_entry_hash":${checked.lastOption.map(r =>
-                jsonStr(r.getString(5))).getOrElse("null")},""" +
-              s""""verification_time":${jsonStr(java.time.Instant.now().toString)}}""")
+                Json.str(r.getString(5))).getOrElse("null")},""" +
+              s""""verification_time":${Json.str(java.time.Instant.now().toString)}}""")
             if (bad.nonEmpty)
               sys.error(s"audit chain verification FAILED: " +
                 s"${bad.length} bad entries")
@@ -2316,20 +1391,20 @@ object Graft {
           // registry carries no false-positive hints, so the key is an
           // empty list for shape compatibility
           val detJson = (headerFindings ++ dataFirst).take(1000).map { d =>
-            s"""{"pattern":${jsonStr(d.category)},""" +
-              s""""severity":${jsonStr(graft.transform.PhiSanitizer
+            s"""{"pattern":${Json.str(d.category)},""" +
+              s""""severity":${Json.str(graft.transform.PhiSanitizer
                 .severityOf(d.category, registry))},""" +
-              s""""location":${jsonStr(d.location)},"line":${d.line},""" +
-              s""""masked_value":${jsonStr(graft.transform.PhiSanitizer
+              s""""location":${Json.str(d.location)},"line":${d.line},""" +
+              s""""masked_value":${Json.str(graft.transform.PhiSanitizer
                 .maskValue(d.value))},""" +
-              s""""context":${jsonStr(d.context.take(100))},""" +
+              s""""context":${Json.str(d.context.take(100))},""" +
               s""""false_positive_hints":[]}"""
           }.mkString("[", ",", "]")
           val sumJson = summary.toSeq.sortBy(_._1)
-            .map { case (c, n) => s"${jsonStr(c)}:$n" }.mkString("{", ",", "}")
+            .map { case (c, n) => s"${Json.str(c)}:$n" }.mkString("{", ",", "}")
           val sevJson = sevCounts.toSeq.sortBy(_._1)
-            .map { case (s, n) => s"${jsonStr(s)}:$n" }.mkString("{", ",", "}")
-          println(s"""{"has_phi":${nFindings > 0},"risk_level":${jsonStr(risk)},""" +
+            .map { case (s, n) => s"${Json.str(s)}:$n" }.mkString("{", ",", "}")
+          println(s"""{"has_phi":${nFindings > 0},"risk_level":${Json.str(risk)},""" +
             s""""records_scanned":$recordsScanned,""" +
             s""""records_total":$recordsTotal,"sample_rate":$sampleRate,""" +
             s""""summary":$sumJson,"severity_summary":$sevJson,""" +
@@ -2785,7 +1860,7 @@ object Graft {
         val nKept = obsKept.get("n").asInstanceOf[Long]
         val nClustered = obsCl.get("n").asInstanceOf[Long]
         if (has(args, "--json"))
-          println(s"""{"method":${jsonStr(method)},"docs":$nDocs,""" +
+          println(s"""{"method":${Json.str(method)},"docs":$nDocs,""" +
             s""""kept":$nKept,"dropped":${nDocs - nKept},""" +
             s""""clustered_docs":$nClustered}""")
         else println(s"dedup($method): $nDocs docs -> $nKept kept " +
@@ -2842,7 +1917,7 @@ object Graft {
         val nRows = m("rows").asInstanceOf[Long]
         val nQ = Option(m("queries")).map(_.asInstanceOf[Long]).getOrElse(0L)
         if (has(args, "--json"))
-          println(s"""{"mode":${jsonStr(mode)},"k":$k,"queries":$nQ,""" +
+          println(s"""{"mode":${Json.str(mode)},"k":$k,"queries":$nQ,""" +
             s""""rows":$nRows}""")
         else println(s"ann-topk($mode): $nQ queries, k=$k, $nRows rows")
 
@@ -2915,7 +1990,8 @@ object Graft {
         val langHist = labelHistRender(langs, "lang", m, byCountDesc = true)
         if (has(args, "--json"))
           println(s"""{"docs":$n,"pass":$nPass,""" +
-            meanQ.map(q => f""""mean_quality":$q%.4f,""")
+            meanQ.map(q => "\"mean_quality\":%.4f,".formatLocal(
+              java.util.Locale.ROOT, q))
               .getOrElse(""""mean_quality":null,""") +
             s""""min_quality":$minQ,""" +
             minLangMargin.map(m => s""""min_lang_margin":$m,""")
@@ -3022,7 +2098,7 @@ object Graft {
             val loading = loadSec.map(ls =>
               s""","loading":{"time_seconds":${math.round(ls * 1000) / 1000.0},""" +
                 s""""rate_per_second":${math.round(n / ls)}.0}""").getOrElse("")
-            println(s"""{"vcf_path":${jsonStr(path)},"variant_count":$n,""" +
+            println(s"""{"vcf_path":${Json.str(path)},"variant_count":$n,""" +
               s""""parsing":{"time_seconds":${math.round(parseSec * 1000) / 1000.0},""" +
               s""""rate_per_second":${math.round(n / parseSec)}.0},""" +
               s""""settings":{"batch_size":$batchSize,""" +

@@ -482,14 +482,7 @@ object Audit {
   def entryHash(eventTime: String, eventType: String, userName: String,
                 action: String, success: Boolean, previousHash: String,
                 details: Seq[(String, String)]): String = {
-    def js(s: String): String =
-      if (s == null) "null"
-      else "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' || c > '\u007f' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    def js(s: String): String = graft.Json.str(s, asciiOnly = true)
     val detailsJson =
       details.map { case (k, v) => s"${js(k)}: ${js(v)}" }.mkString("{", ", ", "}")
     val canonical =
@@ -507,14 +500,7 @@ object Audit {
 
   // ---- §2.10: audit backup export with integrity metadata ----
 
-  private def jsStr(s: String): String =
-    if (s == null) "null"
-    else "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' || c > '\u007f' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private def jsStr(s: String): String = graft.Json.str(s, asciiOnly = true)
 
   /** One exported audit row, already ordered by audit_id. */
   final case class BackupEntry(auditId: Long, eventTime: String,

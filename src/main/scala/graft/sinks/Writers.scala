@@ -74,16 +74,18 @@ object Writers {
     * the columns a gene query serves (the reference's INCLUDE list plus
     * consequence and the join-back keys) so `PointLookup.byGene` answers
     * from the index alone — no second probe into the main store. */
+  val GeneIndexColumns = Seq("gene", "chrom", "pos", "ref", "alt",
+    "impact", "consequence", "variant_id")
+
   def writeGeneIndex(variants: DataFrame, path: String,
                      mode: String = "overwrite"): Unit =
     variants
       .filter(col("gene").isNotNull)
-      .select(Seq("gene", "chrom", "pos", "ref", "alt",
-        "impact", "consequence", "variant_id").map(col) ++
+      .select(GeneIndexColumns.map(col) ++
         // batch provenance when the source carries it (every load does):
         // the O(batch) force-reload drops a batch's index rows by footer
         // stats on this column, file-surgically, instead of rewriting
-        // the projection (see dropBatchFiles)
+        // the projection (see dropKeyFiles)
         (if (variants.columns.contains("load_batch_id"))
            Seq(col("load_batch_id")) else Nil): _*)
       .repartitionByRange(col("gene"))
@@ -540,40 +542,42 @@ object Writers {
     n
   }
 
-  /** O(batch) physical delete of one load batch from a parquet table —
-    * the analogue of the reference's `DELETE WHERE load_batch_id = $1`
-    * (`loader.py:244-252`), which is O(batch) in Postgres. Every load
-    * path stamps `load_batch_id` and appends the batch as NEW files, so
-    * a batch's rows live in files whose footer row-group stats pin the
-    * column to exactly that id: those files are REMOVED by rename (an
-    * O(1) metadata op each), files whose stats exclude the id are never
-    * opened, and only post-`compact` files that mix batches pay a
-    * filtered single-file rewrite. Cost is O(files holding the batch),
-    * not O(store) — on a 100 TB cohort a force-reload touches one VCF's
-    * worth of files.
-    *
-    * Two-phase for crash safety, mirroring the staged-swap discipline:
-    * mixed-file rewrites stage to temp siblings first (destinations
-    * untouched); then the metadata phase renames doomed files into a
-    * trash sibling of the table root and swaps the staged rewrites in.
-    * A failure mid-metadata restores from trash; success deletes the
-    * trash. Returns (filesRemoved, filesRewritten). */
-  def dropBatchFiles(spark: SparkSession, dir: String,
-                     batchId: String): (Int, Int) =
-    dropKeyFiles(spark, dir, "load_batch_id", batchId)
+  /** Compact every `chrom=` directory of the variants table holding more
+    * than `maxFiles` files (pos-sorted, content unchanged — the covering
+    * projections stay fresh). Returns (directories compacted, total). */
+  def compactChromDirs(spark: SparkSession, variantsDir: String,
+                       targetMb: Long, maxFiles: Int): (Int, Int) = {
+    val dirs = DbFs.subdirNames(variantsDir).filter(_.startsWith("chrom="))
+    val due = dirs.filter(d => DbFs.parquetFileCount(s"$variantsDir/$d") > maxFiles)
+    due.foreach(d => compactPartitionDir(spark, variantsDir, d, targetMb,
+      sortCols = Seq("pos")))
+    (due.length, dirs.length)
+  }
 
   /** Single-key form of `dropKeyFiles`. */
   def dropKeyFiles(spark: SparkSession, dir: String, keyCol: String,
                    value: String): (Int, Int) =
     dropKeyFiles(spark, dir, Seq(keyCol -> value))
 
-  /** The general form of `dropBatchFiles`: physical delete of every row
-    * where ALL `keys` columns equal their values (conjunction),
-    * file-surgically via footer stats. Used with study_accession /
-    * pgs_id by the import verbs' per-key replace and with
-    * (source, subset) by import-frequencies (the reference's
-    * `DELETE WHERE study_id` / composite-key upserts are O(batch) the
-    * same way), and with load_batch_id by force-reload. Requires the
+  /** O(batch) physical delete of every row where ALL `keys` columns
+    * equal their values (conjunction) — the analogue of the reference's
+    * `DELETE WHERE load_batch_id = $1` (`loader.py:244-252`), which is
+    * O(batch) in Postgres. The only drop path of the store: with
+    * load_batch_id for force-reload, load rollback and
+    * `validate --drop-orphans`; with study_accession / pgs_id and
+    * (source, subset) for the import verbs' per-key replace. Rows live in
+    * files whose footer row-group stats pin the keys: those files are
+    * REMOVED by rename (an O(1) metadata op each), files whose stats
+    * exclude the value are never opened, and only post-`compact` files
+    * that mix keys pay a filtered single-file rewrite. Cost is O(files
+    * holding the key), not O(store).
+    *
+    * Two-phase for crash safety, mirroring the staged-swap discipline:
+    * mixed-file rewrites stage to temp siblings first (destinations
+    * untouched); then the metadata phase renames doomed files into a
+    * trash sibling of the table root and swaps the staged rewrites in.
+    * A failure mid-metadata restores from trash; success deletes the
+    * trash. Returns (filesRemoved, filesRewritten). Requires the
     * table's writes to stamp every key column constant per import and
     * land each import as NEW files — exactly what the import verbs'
     * append path does. A file is PURE (droppable whole) when every row
@@ -668,7 +672,7 @@ object Writers {
       (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)]()
     def toTrash(p: org.apache.hadoop.fs.Path): Unit = {
       val t = new org.apache.hadoop.fs.Path(trash, s"${trashed.length}-${p.getName}")
-      if (!fs.rename(p, t)) sys.error(s"dropBatchFiles: cannot stage $p aside")
+      if (!fs.rename(p, t)) sys.error(s"dropKeyFiles: cannot stage $p aside")
       trashed += ((p, t))
     }
     try {
@@ -681,7 +685,7 @@ object Writers {
           .find(_.getName.endsWith(".parquet"))
         dataFile.foreach { d =>
           if (!fs.rename(d, p))
-            sys.error(s"dropBatchFiles: cannot land rewrite for $p")
+            sys.error(s"dropKeyFiles: cannot land rewrite for $p")
         }
         fs.delete(tmp, true)
       }

@@ -13,6 +13,11 @@ object SyntheticVcf {
 
   private val Bases = Array("A", "C", "G", "T")
 
+  // Locale.ROOT: under a comma-decimal default locale `AF=0,1234` would
+  // parse as two Number=A allele frequencies
+  private def num(pattern: String, v: Double): String =
+    pattern.formatLocal(java.util.Locale.ROOT, v)
+
   def header(samples: Seq[String], withAnn: Boolean = false): String = {
     val meta = Seq(
       "##fileformat=VCFv4.2",
@@ -70,10 +75,10 @@ object SyntheticVcf {
             b
           }
         }.distinct
-        val afs = alts.map(_ => f"${0.001 + rng.nextDouble() * 0.5}%.4f").mkString(",")
+        val afs = alts.map(_ => num("%.4f", 0.001 + rng.nextDouble() * 0.5)).mkString(",")
         val acs = alts.map(_ => (1 + rng.nextInt(100)).toString).mkString(",")
         val dp = 20 + rng.nextInt(400)
-        val qual = f"${30.0 + rng.nextDouble() * 3000}%.2f"
+        val qual = num("%.2f", 30.0 + rng.nextDouble() * 3000)
         val rsId = if (rng.nextDouble() < 0.3) s"rs${1000000 + rng.nextInt(9000000)}" else "."
         val ann =
           if (annFrac > 0 && rng.nextDouble() < annFrac) {
@@ -93,7 +98,7 @@ object SyntheticVcf {
             }
             s";ANN=${entries.mkString(",")}"
           } else ""
-        val info = s"DP=$dp;AF=$afs;AC=$acs;MQ=${f"${40 + rng.nextDouble() * 20}%.2f"}$ann"
+        val info = s"DP=$dp;AF=$afs;AC=$acs;MQ=${num("%.2f", 40 + rng.nextDouble() * 20)}$ann"
         val sampleCols =
           if (samples.isEmpty) ""
           else "\tGT:AD:DP:GQ" + samples.map { _ =>

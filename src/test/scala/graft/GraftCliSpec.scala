@@ -2137,7 +2137,7 @@ class GraftCliSpec extends SparkSpec {
     val bad = spark.range(1)
       .select(lit("GCST_A").as("k"), boom($"id").as("v"))
     val e = intercept[Exception] {
-      Graft.replaceByKeys(spark, dir, bad, Seq("k" -> "GCST_A"))
+      graft.sinks.WritePlan.land(spark, graft.sinks.WritePlan.plain(dir), bad, Seq("k" -> "GCST_A"))
     }
     assert(e.getMessage != null)
     val back = spark.read.parquet(dir)
@@ -2146,7 +2146,7 @@ class GraftCliSpec extends SparkSpec {
     assert(back.filter($"k" === "GCST_B").count() == 1)
     // and a clean replace still lands
     val good = Seq(("GCST_A", 7L)).toDF("k", "v")
-    Graft.replaceByKeys(spark, dir, good, Seq("k" -> "GCST_A"))
+    graft.sinks.WritePlan.land(spark, graft.sinks.WritePlan.plain(dir), good, Seq("k" -> "GCST_A"))
     val after = spark.read.parquet(dir)
     assert(after.filter($"k" === "GCST_A").collect()
       .map(_.getAs[Long]("v")).toSeq == Seq(7L))

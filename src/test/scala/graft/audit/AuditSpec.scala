@@ -213,7 +213,7 @@ class WritersSpec extends SparkSpec {
         .filter($"id" === id).collect().headOption.map(_.getAs[String]("f"))
     }
     val pureBFile = fileFor(3L).get
-    val (removed, rewritten) = Writers.dropBatchFiles(spark, dir, "A")
+    val (removed, rewritten) = Writers.dropKeyFiles(spark, dir, "load_batch_id", "A")
     assert(removed == 1, s"expected 1 pure batch-A file removed, got $removed")
     assert(rewritten == 1, s"expected 1 mixed file rewritten, got $rewritten")
     val back = readAll()
@@ -229,9 +229,9 @@ class WritersSpec extends SparkSpec {
     assert(!parent.listFiles().exists(f =>
       f.getName.contains(".trash-") || f.getName.contains(".tmp-")))
     // dropping a batch that is not present is a no-op
-    assert(Writers.dropBatchFiles(spark, dir, "ZZZ") == ((0, 0)))
+    assert(Writers.dropKeyFiles(spark, dir, "load_batch_id", "ZZZ") == ((0, 0)))
     // and a missing directory answers (0,0) rather than failing
-    assert(Writers.dropBatchFiles(spark, s"$dir-nope", "A") == ((0, 0)))
+    assert(Writers.dropKeyFiles(spark, s"$dir-nope", "load_batch_id", "A") == ((0, 0)))
   }
 
   test("dropKeyFiles: composite key drops the conjunction only") {

@@ -32,8 +32,18 @@ summary=$(grep -E "^\[info\] (Tests:|Total number of tests run|Suites:|All tests
   echo
   echo "$summary"
   echo
-  echo "canceled tests (expected: GIAB corpus absent, ffmpeg absent):"
-  grep -E "CANCELED|!!! CANCELED" "$log" | sed 's/^\[info\] *//' | sort -u
+  # each cancel's reason is the line after its "!!! CANCELED !!!" line;
+  # fixture-bound cancels (reference fixtures absent) count apart from the
+  # GIAB / ffmpeg ones, so hermetic replacements show as a falling count
+  reasons=$(grep -A1 "!!! CANCELED !!!" "$log" | grep -v -e "!!! CANCELED !!!" -e "^--$")
+  count() { printf '%s\n' "$reasons" | grep -c -E "$1"; }
+  echo "canceled: reference fixture not available: $(count 'reference fixture .* not available')"
+  echo "canceled: GIAB corpus absent: $(count 'GIAB')"
+  echo "canceled: ffmpeg absent: $(count 'ffmpeg')"
+  echo "canceled: other: $(printf '%s\n' "$reasons" | grep -v -c -E 'reference fixture .* not available|GIAB|ffmpeg|^$')"
+  echo
+  echo "canceled tests:"
+  grep -E "!!! CANCELED !!!" "$log" | sed 's/^\[info\] *//' | sort -u
   echo
   echo "casing_parity_probe (rc ${parity_rc}):"
   echo "$parity"
