@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Graft.{arg, customPhiPatterns, has, tbl}
@@ -11,6 +11,9 @@ import graft.sinks.{DbFs, WritePlan}
   * `--store-genotypes`, the genotypes table — audited by an
   * in_progress → completed/failed ledger row. */
 object Load {
+
+  /** The variants table and its covering projections. */
+  private val VariantTables = Seq("variants", "rsid_idx", "gene_idx")
 
   def run(spark: SparkSession, args: Array[String], db: String): Unit = {
     import spark.implicits._
@@ -65,7 +68,7 @@ object Load {
     // processing task events for the session's lifetime
     try {
     val hash = progress.stage("file_hash")(graft.audit.Audit.fileSha256(vcf))
-    val existing = ledger.checkExisting(hash)
+    val existing = progress.stage("ledger_check")(ledger.checkExisting(hash))
     if (existing.isDefined && !has(args, "--force-reload")) {
       println(s"skip: file already loaded (batch ${existing.get})")
       // skipped-report shape (`cli.py:458-463`): load_batch_id carries
@@ -137,11 +140,27 @@ object Load {
     // commit point = the 'completed' ledger row; post-commit failures
     // (vault, progress printing) must never roll the batch back
     var committed = false
-    // only appends need row-level rollback (of this batch's own rows);
-    // swapped tables are all-or-nothing
+    // a failed load drops this batch's own rows from every table it
+    // wrote, whatever the write shape: each written table, flagged
+    // BEFORE its write (a failure mid-write may have committed some
+    // files), with whether this load created it
     val own = Seq("load_batch_id" -> batchId)
-    var appendedG = false
+    var written = Map.empty[String, Boolean]
     var appendedV = false
+    def rmTable(t: String): Unit = {
+      DbFs.deleteRecursive(tbl(db, t))
+      DbFs.deleteRecursive(DbFs.pointerPath(s"$db/$t"))
+    }
+    // a table dir holding no parquet at all (only _SUCCESS, or the
+    // empty chrom dirs a rollback leaves) poisons every later read of
+    // that table — no footer to infer a schema from — so a REAL load
+    // into this db would then fail. The reference has no such failure
+    // mode: its tables exist in the schema regardless of row count
+    // (`schema.py`).
+    def rmIfNoParquet(t: String): Unit = {
+      val d = tbl(db, t)
+      if (DbFs.isDirectory(d) && !DbFs.hasParquetRecursive(d)) rmTable(t)
+    }
     // the genotype append runs on its own driver thread (see below);
     // any failure path must drain it before touching the store
     var genoPending: Option[scala.concurrent.Future[Unit]] = None
@@ -167,8 +186,6 @@ object Load {
         imputationSource =
           arg(args, "--imputation-source").getOrElse("auto"),
         minInfoScore = arg(args, "--min-info-score").map(_.toDouble))
-      val v = graft.vcf.VcfReader.variants(spark, vcf, opts)
-        .withColumn("load_batch_id", lit(batchId))
       val header = progress.stage("read_header")(
         graft.vcf.VcfHeader.read(spark, vcf))
       // HIPAA master toggle (`cli.py:303-310,352-359`): compliance
@@ -210,21 +227,28 @@ object Load {
       // phi_vault, documented): no recoverable original id is stored
       // anywhere. --anonymize-salt keys the hash so low-entropy sample
       // ids can't be brute-forced from the anon id.
-      var anonIds: Option[DataFrame] = None
       val anonSalt = arg(args, "--anonymize-salt").getOrElse("")
       def anonId(c: org.apache.spark.sql.Column) =
         concat(lit("ANON_"), substring(sha2(concat(lit(anonSalt), c), 256), 1, 12))
-      // per-batch QC aggregate, produced by the genotype future below
-      // (cached + counted there); read on the main thread only after
-      // the join-point Await — future completion publishes the write
-      var qcCache: Option[DataFrame] = None
       // the anonymization MAPPING derives from the header's sample
       // list and lands in the vault whether or not genotypes are
       // stored — the reference anonymizes parser.samples up front
-      // (`loader.py:328-345`), independent of store_genotypes
-      if (anonymize && header.samples.nonEmpty)
-        anonIds = Some(header.samples.toDF("sample_id")
-          .select(anonId($"sample_id").as("anon_id")))
+      // (`loader.py:328-345`), independent of store_genotypes. The
+      // vault rows this load would add are read while the batch loads
+      // (the vault changes only under the writer lock this load holds),
+      // so the post-commit vault write runs only when a sample is new.
+      // Header-sized: the sample list is already driver-side.
+      val vaultDir = s"$db/phi_vault/sample_id_mapping"
+      val vaultNew =
+        if (!anonymize || header.samples.isEmpty) None
+        else Some(scala.concurrent.Future {
+          val ids = header.samples.toDF("sample_id")
+            .select(anonId($"sample_id").as("anon_id"))
+          (if (DbFs.exists(vaultDir))
+            ids.join(spark.read.parquet(vaultDir).select("anon_id"),
+              Seq("anon_id"), "left_anti")
+          else ids).as[String].collect().toSeq
+        }(scala.concurrent.ExecutionContext.global))
       // per-sample genotype storage is OPT-IN like the reference
       // (`cli.py:324-326` --store-genotypes default False,
       // `loader.py:398-402`): a plain load of a cohort VCF must not
@@ -235,77 +259,80 @@ object Load {
       val storeGenotypes =
         has(args, "--store-genotypes") && header.samples.nonEmpty
       val dosageOnly = has(args, "--dosage-only")
+      val adjFilter = has(args, "--adj-filter")
       // an explicitly-passed genotype-storage flag that cannot take
       // effect must not vanish silently (the reference's CLI is
       // silent here; a printed warning keeps its exit contract while
       // telling the user storage is opt-in now)
-      if (!storeGenotypes && (dosageOnly || has(args, "--adj-filter")))
+      if (!storeGenotypes && (dosageOnly || adjFilter))
         println("WARNING: --adj-filter/--dosage-only apply to genotype " +
           "storage, which needs --store-genotypes" +
           (if (header.samples.isEmpty) " and a sample-bearing VCF"
            else "") + " — no genotype rows will be stored")
       if (storeGenotypes) {
-        var g = graft.vcf.VcfReader.genotypes(spark, vcf,
-            opts.humanGenome, opts.skipMalformed)
-          .withColumn("load_batch_id", lit(batchId))
-        if (anonymize)
-          g = g.withColumn("sample_id", anonId($"sample_id"))
-        // `--adj-filter` (`cli.py:327-331`): store only genotype rows
-        // passing gnomAD ADJ — the load-time row DROP the reference
-        // applies per call (`genotype_loader.py:279-282`), reusing the
-        // passes_adj column (F3; same missing-passes semantics, with
-        // the documented multi-allelic-het deviation). Runs BEFORE
-        // --dosage-only, like the reference (the filter reads the
-        // real GQ/DP/AB the nulling would erase).
-        if (has(args, "--adj-filter"))
-          g = g.filter($"passes_adj")
-        // `--dosage-only` (`cli.py:332-334`): space-saving storage —
-        // hard-call fields null out (gt '.', phased false, allele
-        // ints, GQ/DP/AD, allele balance), dosage + its GP/DS sources
-        // survive (`genotype_loader.py:288-293`). passes_adj keeps the
-        // ORIGINAL call's ADJ verdict (our column, no reference
-        // analogue — nulling it would claim the verdict was never
-        // computed).
-        if (dosageOnly)
-          g = g
-            .withColumn("gt", lit("."))
-            .withColumn("phased", lit(false))
-            .withColumn("a1", lit(null).cast("int"))
-            .withColumn("a2", lit(null).cast("int"))
-            .withColumn("gq", lit(null).cast("int"))
-            .withColumn("dp", lit(null).cast("int"))
-            .withColumn("ad", lit(null).cast("array<int>"))
-            .withColumn("allele_balance", lit(null).cast("double"))
-        // flag BEFORE the write: a failure mid-append may have
-        // committed some files, and the rollback must cover them
-        appendedG = true
-        // The genotype side (text parse -> hive append -> QC
-        // aggregate) runs on ITS OWN DRIVER THREAD, overlapped with the
-        // variants parse_count below: the two are independent scans
-        // of the same file, and together they keep the executor pool
-        // full where running them back-to-back left cores idle in
-        // each phase (the r7/r8 load regression: ~1.4s genotype
-        // write + ~1.7s variants parse sequential; overlapped they
-        // cost ~max of the two). Variant QC DOES depend on the
-        // written files, so it materializes only after the join
-        // point below awaits this future.
-        val gw = g
+        written += "genotypes" -> !DbFs.exists(tbl(db, "genotypes"))
+        // The genotype side (plan -> text parse -> hive append) runs on
+        // ITS OWN DRIVER THREAD, overlapped with the variants parse_count
+        // and, where the write shape allows, the variants-family write
+        // below: the scans are independent, and together they keep the
+        // executor pool full where running them back-to-back left cores
+        // idle in each phase. Building the genotype plan is itself
+        // driver work worth overlapping (~0.5 s: a header read and a
+        // long chain of analyzed projections). Nothing on the variants
+        // side reads the genotype rows: variant QC folds from the same
+        // sample columns inside the variants parse.
         genoPending = Some(scala.concurrent.Future {
+            var g = graft.vcf.VcfReader.genotypes(spark, vcf,
+                opts.humanGenome, opts.skipMalformed)
+              .withColumn("load_batch_id", lit(batchId))
+            if (anonymize)
+              g = g.withColumn("sample_id", anonId($"sample_id"))
+            // `--adj-filter` (`cli.py:327-331`): store only genotype rows
+            // passing gnomAD ADJ — the load-time row DROP the reference
+            // applies per call (`genotype_loader.py:279-282`), reusing the
+            // passes_adj column (F3; same missing-passes semantics, with
+            // the documented multi-allelic-het deviation). Runs BEFORE
+            // --dosage-only, like the reference (the filter reads the
+            // real GQ/DP/AB the nulling would erase).
+            if (adjFilter)
+              g = g.filter($"passes_adj")
+            // `--dosage-only` (`cli.py:332-334`): space-saving storage —
+            // hard-call fields null out (gt '.', phased false, allele
+            // ints, GQ/DP/AD, allele balance), dosage + its GP/DS sources
+            // survive (`genotype_loader.py:288-293`). passes_adj keeps the
+            // ORIGINAL call's ADJ verdict (our column, no reference
+            // analogue — nulling it would claim the verdict was never
+            // computed).
+            if (dosageOnly)
+              g = g
+                .withColumn("gt", lit("."))
+                .withColumn("phased", lit(false))
+                .withColumn("a1", lit(null).cast("int"))
+                .withColumn("a2", lit(null).cast("int"))
+                .withColumn("gq", lit(null).cast("int"))
+                .withColumn("dp", lit(null).cast("int"))
+                .withColumn("ad", lit(null).cast("array<int>"))
+                .withColumn("allele_balance", lit(null).cast("double"))
             // hive-partitioned by chrom from the FIRST append (the
             // variants layout): the genotype point probe then lists
             // one chrom directory instead of footer-testing every
-            // file in the table. Still a narrow write — no shuffle;
-            // a coordinate-sorted VCF's input splits each span ~1
-            // chromosome, so the per-load file count stays ~tasks.
-            // Rows land unsorted; `compact` pays the ordering debt.
-            // A pre-hive db has FLAT files at the table root: a hive
-            // append there would mix layouts into an unreadable
-            // table, so such stores keep appending flat until a
-            // `compact` migrates them.
+            // file in the table. Still a narrow write — no shuffle:
+            // the partitioned writer sorts each task's rows on chrom
+            // anyway, and sorting on (chrom, pos) satisfies it, so
+            // every appended file is pos-sorted in pages of 512 rows
+            // and a genotype probe prunes pages on the fragmented
+            // store as it does after `compact`. A coordinate-sorted
+            // VCF's input splits each span ~1 chromosome, so the
+            // per-load file count stays ~tasks. A pre-hive db has
+            // FLAT files at the table root: a hive append there would
+            // mix layouts into an unreadable table, so such stores
+            // keep appending flat until a `compact` migrates them.
             val gDir = tbl(db, "genotypes")
             val legacyFlat = DbFs.hasFlatParquet(gDir)
             progress.stage("write_genotypes") {
-              val w = gw.write.mode("append")
+              val w = g.sortWithinPartitions($"chrom", $"pos")
+                .write.mode("append")
+                .option("parquet.page.row.count.limit", "512")
               (if (legacyFlat) w else w.partitionBy("chrom"))
                 .parquet(gDir)
             }
@@ -313,48 +340,36 @@ object Load {
             // a cached probe listing; drop same-JVM cached listings
             // so a lookup right after this load sees the new files
             graft.query.PointLookup.invalidateListings(s"$db/genotypes")
-            // QC from the WRITTEN batch rows, still on this thread
-            // (it depends only on the files this future just wrote,
-            // so it overlaps the variants parse like the write did):
-            // a column-pruned scan of compressed parquet (row groups
-            // of other batches prune on load_batch_id stats) beats
-            // re-parsing the VCF text a third time. chrom is a hive
-            // partition column on read-back — cast pins it to string
-            // so the join key types match v's. A zero-row batch on a
-            // fresh db leaves no parquet to infer a schema from — QC
-            // falls back to the parse plan (empty aggregate, same
-            // null-filled join). Cached + counted so the table
-            // writes reuse the aggregated rows instead of re-running
-            // the aggregation per write.
-            // a dosage-only store holds NO hard calls by design —
-            // aggregating variant QC from the nulled rows would
-            // PERSIST a claim (call_rate 0, every call missing) the
-            // source data contradicts. Skip the QC join: the
-            // variants' QC columns stay typed-null, exactly the
-            // reference's unfilled defaults (`models.py:54-61`).
-            if (!dosageOnly) {
-            val gHasFiles = DbFs.hasData(gDir)
-            val qc = progress.stage("genotype_qc") {
-              val q = (if (gHasFiles)
-                  graft.qc.VariantQc.fromGenotypes(
-                    spark.read.parquet(gDir)
-                      .withColumn("chrom", $"chrom".cast("string"))
-                      .filter($"load_batch_id" === batchId))
-                else graft.qc.VariantQc.fromGenotypes(gw))
-                .drop("n_samples")
-                .persist(
-                  org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              // a failed materialization must not leak the cache —
-              // qcCache is only assigned after a successful count,
-              // so the finally's unpersist would never see it
-              try q.count()
-              catch { case e: Throwable => q.unpersist(); throw e }
-              q
-            }
-            qcCache = Some(qc)
-            }
         }(scala.concurrent.ExecutionContext.global))
       }
+      // variant QC (A1) folds into the parse, from each line's own
+      // sample columns: over the calls the genotypes table stores — all
+      // of them, or the ADJ-passing ones under --adj-filter. A
+      // dosage-only store holds NO hard calls by design, so QC from it
+      // would PERSIST a claim (call_rate 0, every call missing) the
+      // source data contradicts; it and a load without genotype storage
+      // keep the QC columns typed-null, exactly the reference's
+      // unfilled defaults (`models.py:54-61`).
+      val qcCalls =
+        if (!storeGenotypes || dosageOnly) None
+        else Some(if (adjFilter) graft.vcf.VcfReader.QcCalls.Adj
+                  else graft.vcf.VcfReader.QcCalls.All)
+      val vWithId = graft.ingest.VariantMatching.withVariantId(
+        graft.vcf.VcfReader.variantsWithHeader(spark, vcf, header, opts, qcCalls)
+          .withColumn("load_batch_id", lit(batchId)))
+      // One schema for every store, reference-style: the variants
+      // table carries the QC columns (last) even when the file had no
+      // FORMAT/sample section, null until filled (`schema.py:110-187`).
+      // Without this, a cohort mixing sample-less and genotyped files
+      // trips the schema-evolution full rewrite on the second load (an
+      // O(store) cost for an O(batch) file); with it, both load shapes
+      // produce identical columns and stay on the append path.
+      val qcNames = graft.qc.VariantQc.joinedColumns.map(_._1).toSet
+      val vc = vWithId.select(
+        vWithId.columns.toSeq.filterNot(qcNames).map(col) ++
+          graft.qc.VariantQc.joinedColumns.map { case (c, t) =>
+            (if (vWithId.columns.contains(c)) col(c) else lit(null).cast(t)).as(c)
+          }: _*)
       // §2.13 append-only cohort: a db accumulates ONE batch per VCF.
       // The reference deletes only the SAME file's previous batch and
       // otherwise appends (`loader.py:244-252`; the acceptance
@@ -364,7 +379,7 @@ object Load {
       // batches' pos ranges within a chrom directory, the serving faces
       // read every overlapping file and sort driver-side (`PointLookup`),
       // and `compact` folds the fragmentation back into disjoint files.
-      val vWithId = graft.ingest.VariantMatching.withVariantId(v)
+      //
       // EVERY load path caches the parsed batch and counts it first:
       // the count fills the cache (so later writes read materialized
       // rows instead of re-running the parse — repartitionByRange
@@ -374,105 +389,72 @@ object Load {
       // pool), and the count IS the per-batch ledger number. A batch
       // is one VCF — MEMORY_AND_DISK spills rather than OOMs at
       // cohort scale.
-      val vCache = vWithId.persist(
+      val vCache = vc.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      var vcJoined: Option[DataFrame] = None
       var batchN = -1L
       try {
-      batchN = progress.stage("parse_count")(vCache.count())
-      // join point: the genotype append and the QC aggregate must both
-      // be complete before the batch plan below is finalized
-      genoPending.foreach(f => scala.concurrent.Await.result(
-        f, scala.concurrent.duration.Duration.Inf))
-      genoPending = None
-      // force-reload drops the previous batch's genotype rows (an append
-      // alone would double them on every reload), genotyped or not — a
-      // reload without genotype storage must still drop the rows its
-      // previous batch stored. The drop is SURGICAL (DELETE WHERE
-      // load_batch_id, `loader.py:244-252`): the old batch's files are
-      // identified by footer stats and renamed away at O(batch) cost.
-      // It runs only now that the replacement file has parsed — a
-      // corrupt reload file never destroys the batch it replaces — and
-      // after the QC aggregate above was cached and counted, so no lazy
-      // plan still lists the doomed files.
-      prevBatch.foreach { b =>
-        if (DbFs.exists(tbl(db, "genotypes")))
-          progress.stage("drop_prev_genotypes") {
-            WritePlan.dropKeys(spark, Seq(s"$db/genotypes"),
-              Seq("load_batch_id" -> b))
-          }
-      }
-      var vc: DataFrame = vCache
-      qcCache.foreach { qc =>
-        // variant QC joins on the full decomposed key —
-        // (chrom,pos,ref) alone would row-multiply sites that share
-        // a position across ALTs. The left join is count-preserving
-        // (QC keys are its groupBy output, unique), so batchN above
-        // is still the ledger number. Small batches broadcast the
-        // (one-row-per-variant) QC side so the cached batch is never
-        // shuffled; cohort-scale batches fall back to the shuffle
-        // join rather than a driver-sized broadcast. The threshold
-        // is a system property so the shuffle arm is testable at
-        // spec scale (and tunable for executor-memory budgets).
-        val bcMax = sys.props.get("graft.qc.broadcast.max.rows")
-          .map(_.toLong).getOrElse(2000000L)
-        val qcSide =
-          if (batchN < bcMax) broadcast(qc) else qc
-        vc = vCache.join(qcSide, Seq("chrom", "pos", "ref", "alt"), "left")
-      }
-      // One schema for every store, reference-style: the variants
-      // table carries the QC columns even when the file had no
-      // FORMAT/sample section, null until filled
-      // (`schema.py:110-187`). Without this, a cohort mixing
-      // sample-less and genotyped files trips the schema-evolution
-      // full rewrite on the second load (an O(store) cost for an
-      // O(batch) file); with it, both load shapes produce identical
-      // columns and stay on the append path.
-      graft.qc.VariantQc.joinedColumns.foreach { case (c, t) =>
-        if (!vc.columns.contains(c))
-          vc = vc.withColumn(c, lit(null).cast(t))
-      }
-      if (qcCache.isDefined) {
-        // one execution of the QC join serves all three table writes:
-        // left unpersisted, each write — plus repartitionByRange's
-        // range-sampling pass — re-runs the batch-sized shuffle join,
-        // ~6 executions per load. (The sample-less shape skips this:
-        // vc is then a trivial null-pad projection over vCache.)
-        vc = vc.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        vcJoined = Some(vc)
-        progress.stage("join_qc")(vc.count())
-      }
       // the variants table and both covering projections land in the
       // shape WritePlan picks from the store, the batch schema and the
-      // batch this load replaces. The old batch is dropped only now,
-      // after the new file parsed and cached cleanly: a failure from
-      // here on leaves the old batch gone and the new one rolled back
-      // ('failed' ledger row) — the file reads as not loaded, and
-      // re-running the load recovers.
+      // batch this load replaces. The store's state (driver-side schema
+      // reads) is taken while the batch parses.
       val fam = WritePlan.variants(db)
-      val (state, shape) = progress.stage("schema_check") {
-        val st = WritePlan.state(spark, fam)
-        (st, WritePlan.plan(st, vc.schema,
-          prevBatch.toSeq.map("load_batch_id" -> _), emptyBatch = batchN == 0))
+      val stateF = scala.concurrent.Future(progress.stage("schema_check")(
+        WritePlan.state(spark, fam)))(scala.concurrent.ExecutionContext.global)
+      batchN = progress.stage("parse_count")(vCache.count())
+      val state = scala.concurrent.Await.result(
+        stateF, scala.concurrent.duration.Duration.Inf)
+      val shape = WritePlan.plan(state, vCache.schema,
+        prevBatch.toSeq.map("load_batch_id" -> _), emptyBatch = batchN == 0)
+      // the genotype append lands; then force-reload drops the previous
+      // batch's genotype rows (an append alone would double them on
+      // every reload), genotyped or not — a reload without genotype
+      // storage must still drop the rows its previous batch stored. The
+      // drop is SURGICAL (DELETE WHERE load_batch_id,
+      // `loader.py:244-252`): the old batch's files are identified by
+      // footer stats and renamed away at O(batch) cost. It runs only
+      // now that the replacement file has parsed — a corrupt reload
+      // file never destroys the batch it replaces.
+      def landGenotypes(): Unit = {
+        genoPending.foreach(f => scala.concurrent.Await.result(
+          f, scala.concurrent.duration.Duration.Inf))
+        genoPending = None
+        prevBatch.foreach { b =>
+          if (DbFs.exists(tbl(db, "genotypes")))
+            progress.stage("drop_prev_genotypes") {
+              WritePlan.dropKeys(spark, Seq(s"$db/genotypes"),
+                Seq("load_batch_id" -> b))
+            }
+        }
       }
-      WritePlan.execute(spark, fam, state, shape, vc, own, counted = true,
+      // A shape that removes no existing row writes while the genotype
+      // append is still running: if either side fails, dropping this
+      // batch's own rows restores the store exactly. A shape that drops
+      // or rewrites rows waits for the genotype append, so a corrupt
+      // reload never destroys the batch it replaces. The old batch's
+      // variant rows go only now, after the new file parsed and cached
+      // cleanly: a failure from here on leaves the old batch gone and
+      // the new one rolled back ('failed' ledger row) — the file reads
+      // as not loaded, and re-running the load recovers.
+      val overlap = !WritePlan.removesRows(state, shape)
+      if (!overlap) landGenotypes()
+      if (shape != WritePlan.NoOp)
+        written ++= VariantTables.map(_ -> state.table.isEmpty)
+      WritePlan.execute(spark, fam, state, shape, vCache, own, counted = true,
         stage = (n, body) => progress.stage(n)(body()),
         rewriteRows = graft.ingest.VariantMatching.withVariantId)
       appendedV = shape.appends
+      if (overlap) landGenotypes()
       } finally {
-        // a failed load must not leak caches, and any in-flight
+        // a failed load must not leak the cache, and any in-flight
         // genotype append must land (or fail) BEFORE the catch
         // handler below rolls the batch back
         drainGeno()
-        vcJoined.foreach(_.unpersist())
-        qcCache.foreach(_.unpersist())
         vCache.unpersist()
       }
       // the APPEND paths accumulate files across loads; --compact
       // folds the fold-back into this load (pre-commit, so a failure
       // here ledgers as failed and rolls the appends back)
-      if (has(args, "--compact") && appendedG)
+      if (has(args, "--compact") && written.contains("genotypes"))
         progress.stage("compact_genotypes") {
           graft.sinks.Writers.compactPlain(spark, s"$db/genotypes",
             arg(args, "--target-file-mb").getOrElse("128").toLong,
@@ -503,25 +485,12 @@ object Load {
         else graft.sinks.Writers.parquetRowCount(tbl(db, "variants"))
       if (n == 0) {
         // a zero-variant batch (e.g. a VCF with headers but no
-        // records) must not leave schema-less marker directories: a
-        // directory holding only _SUCCESS poisons every later read
-        // of that table (no footer to infer a schema from), so a
-        // REAL load into this db would then fail. Remove any table
-        // directory this load created that holds no parquet at all.
-        // The reference has no such failure mode — its tables exist
-        // in the schema regardless of row count (`schema.py`).
-        def rmIfNoParquet(t: String): Unit = {
-          val d = tbl(db, t)
-          if (DbFs.exists(d) && !DbFs.hasParquetRecursive(d)) {
-            DbFs.deleteRecursive(d)
-            DbFs.deleteRecursive(DbFs.pointerPath(s"$db/$t"))
-          }
-        }
-        // unconditional: also covers a force-reload to an empty file
+        // records) must not leave schema-less marker directories.
+        // Unconditional: also covers a force-reload to an empty file
         // whose surgical drop removed the store's only batch (a no-op
         // when any other batch's parquet remains)
-        Seq("variants", "rsid_idx", "gene_idx").foreach(rmIfNoParquet)
-        if (appendedG) rmIfNoParquet("genotypes")
+        VariantTables.foreach(rmIfNoParquet)
+        if (written.contains("genotypes")) rmIfNoParquet("genotypes")
       }
       progress.stage("ledger_commit") {
         ledger.append(graft.audit.Audit.LedgerEntry(batchId, vcf, hash,
@@ -533,16 +502,13 @@ object Load {
       // samples (the reference upserts ON CONFLICT,
       // `phi/anonymizer.py get_or_create_anonymous_id`); advisory, so
       // a vault IO failure must not roll back the committed batch
-      anonIds.foreach { ids =>
-        try {
-          val vaultDir = s"$db/phi_vault/sample_id_mapping"
-          val fresh =
-            if (DbFs.exists(vaultDir))
-              ids.join(spark.read.parquet(vaultDir).select("anon_id"),
-                Seq("anon_id"), "left_anti")
-            else ids
-          fresh.withColumn("load_batch_id", lit(batchId))
-            .write.mode("append").parquet(vaultDir)
+      vaultNew.foreach { f =>
+        try progress.stage("phi_vault") {
+          val fresh = scala.concurrent.Await.result(
+            f, scala.concurrent.duration.Duration.Inf)
+          if (fresh.nonEmpty)
+            fresh.toDF("anon_id").withColumn("load_batch_id", lit(batchId))
+              .write.mode("append").parquet(vaultDir)
         } catch {
           case scala.util.control.NonFatal(e) =>
             println(s"WARNING: phi_vault write failed: ${e.getMessage}")
@@ -582,14 +548,21 @@ object Load {
         // failing) before the rollback below touches its files —
         // a no-op when the happy path's finally already drained it
         drainGeno()
-        // roll back this batch's appended rows (best-effort; swapped
-        // tables never committed), then ledger the failure — orphan data
-        // with no audit trace is the reference's explicit no-no
-        // (`loader.py:547-623`). Files an append wrote hold only this
-        // batch, so the drop is a rename per file.
-        WritePlan.rollback(spark,
-          (if (appendedG) Seq(s"$db/genotypes") else Nil) ++
-            (if (appendedV) WritePlan.variants(db).dirs else Nil), own)
+        // drop this batch's rows from every table it wrote (best-effort),
+        // then ledger the failure — orphan data with no audit trace is
+        // the reference's explicit no-no (`loader.py:547-623`). Files a
+        // load wrote hold only its batch, so the drop is a rename per
+        // file; a rewritten table's mixed files are rewritten. Then, as
+        // the zero-variant path does, no table is left that a re-run
+        // cannot read or would append to: one left without parquet, or
+        // one this load created that now holds no row.
+        WritePlan.rollback(spark, written.keys.toSeq.map(t => s"$db/$t"), own)
+        written.foreach { case (t, created) =>
+          scala.util.Try(
+            if (created && DbFs.isDirectory(tbl(db, t)) &&
+                graft.sinks.Writers.parquetRowCount(tbl(db, t)) == 0) rmTable(t)
+            else rmIfNoParquet(t))
+        }
         ledger.append(graft.audit.Audit.LedgerEntry(batchId, vcf, hash,
           "failed", 0L, now(), s"error: ${e.getMessage}"))
         throw e

@@ -43,10 +43,11 @@ final class LoadProgress(spark: SparkSession) extends SparkListener {
     * or attributed to the next stage.
     *
     * Stages may run CONCURRENTLY (the load verb overlaps the genotype
-    * append with the variants parse on two driver threads): wall times
-    * stay exact per stage, but the record-count deltas of overlapping
-    * stages include each other's tasks — progress totals remain correct,
-    * per-stage attribution is approximate only while stages overlap. */
+    * append with the variants parse and write on two driver threads):
+    * wall times stay exact per stage, but the record-count deltas of
+    * overlapping stages include each other's tasks — progress totals
+    * remain correct, per-stage attribution is approximate only while
+    * stages overlap. */
   def stage[T](name: String)(body: => T): T = {
     org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
     val (r0, w0) = (recordsRead.get(), recordsWritten.get())
@@ -63,7 +64,7 @@ final class LoadProgress(spark: SparkSession) extends SparkListener {
 
   /** One line per stage, the `load` verb's progress output. */
   def print(): Unit = report().foreach { r =>
-    println(f"  stage ${r.name}%-18s ${r.seconds}%8.2fs  " +
+    println(f"  stage ${r.name}%-20s ${r.seconds}%8.2fs  " +
       f"read=${r.recordsRead}%,d written=${r.recordsWritten}%,d")
   }
 

@@ -37,8 +37,8 @@ object VariantQc {
     * HWE UDF runs on the aggregated row (one call per variant, not per
     * genotype).
     */
-  /** The columns `fromGenotypes` contributes to a variants row once the
-    * load drops `n_samples` before its QC join. The reference's variants
+  /** The QC columns of a variants row: `fromGenotypes` without
+    * `n_samples`, as `withCallCounts` folds them. The reference's variants
     * table carries every QC column regardless of whether the file had a
     * FORMAT/sample section, null until filled (`schema.py:110-187`) — a
     * sample-less load adds these as typed nulls so every store shares
@@ -62,6 +62,28 @@ object VariantQc {
         count(lit(1)).cast(IntegerType).as("n_samples"))
       .withColumn("n_called", $"n_het" + $"n_hom_ref" + $"n_hom_alt")
     withFrequencies(agg)
+  }
+
+  /** A1 in the record's own row — SURVEY A1's per-record form over the
+    * record's per-sample calls: `joinedColumns` for each row of `rows`
+    * from `classes`, the array of the row's call classes (`genotypeClass`;
+    * null for a call not counted), counted with native array functions.
+    * Equals `fromGenotypes` over the row's genotype rows; a row with no
+    * counted call gets NULL QC, as a variant without a genotype row has
+    * no `fromGenotypes` row to join. */
+  def withCallCounts(rows: DataFrame, classes: Column): DataFrame = {
+    import rows.sparkSession.implicits._
+    def n(cls: String) = size($"_cls") - size(array_remove($"_cls", cls))
+    val counted = withFrequencies(rows
+      .withColumn("_cls", classes)
+      .withColumns(Map("n_het" -> n("het"), "n_hom_ref" -> n("hom_ref"),
+        "n_hom_alt" -> n("hom_alt"),
+        "n_samples" -> size(array_compact($"_cls"))))
+      .withColumn("n_called", $"n_het" + $"n_hom_ref" + $"n_hom_alt"))
+    counted
+      .withColumns(joinedColumns.map { case (c, _) =>
+        c -> when($"n_samples" > 0, col(c)) }.toMap)
+      .drop("_cls", "n_samples")
   }
 
   /** A2 allele frequencies + A3 HWE from the count columns

@@ -38,6 +38,12 @@ object DbFs {
     fsFor(p).exists(p)
   }
 
+  def isDirectory(path: String): Boolean = {
+    val p = new Path(path)
+    try fsFor(p).getFileStatus(p).isDirectory
+    catch { case _: java.io.FileNotFoundException => false }
+  }
+
   def mkdirs(path: String): Unit = {
     val p = new Path(path)
     fsFor(p).mkdirs(p); ()

@@ -126,6 +126,16 @@ object WritePlan {
       else DropThenAppend(drop)
   }
 
+  /** Can running `shape` over `state` remove a row that exists? A drop,
+    * a rewrite and a swap over an existing table can; a plain append and
+    * a first swap cannot, so dropping the batch's own rows undoes them
+    * exactly — they may run before the batch's other tables land. */
+  def removesRows(state: State, shape: Shape): Boolean = shape match {
+    case NoOp | Append => false
+    case FreshSwap => state.table.isDefined
+    case DropThenAppend(_) | Rewrite(_) => true
+  }
+
   /** `(name, phase) => Unit`: how the executor times its phases. */
   type Stage = (String, () => Unit) => Unit
   val untimed: Stage = (_, body) => body()

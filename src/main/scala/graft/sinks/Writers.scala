@@ -430,11 +430,12 @@ object Writers {
     * analogue of Postgres CLUSTER): rows range-partition and sort on the
     * given keys, so files cover disjoint key ranges and parquet min/max
     * stats prune row groups for key-scoped scans. The load path
-    * deliberately appends genotypes UNSORTED (a narrow write, no extra
-    * shuffle of the biggest table per load); compaction is where the
-    * ordering debt is paid, off the ingest critical path. The
-    * reference's analogue is VACUUM / recreate-indexes
-    * (`schema.py:347-359`). Returns the target file count. */
+    * appends genotypes sorted only within each write task (a narrow
+    * write, no extra shuffle of the biggest table per load), so files
+    * of one chrom overlap; compaction folds them into disjoint ones,
+    * off the ingest critical path. The reference's analogue is VACUUM /
+    * recreate-indexes (`schema.py:347-359`). Returns the target file
+    * count. */
   def compactPlain(spark: SparkSession, dir: String, targetMb: Long,
                    sortCols: Seq[String] = Nil,
                    partitionCol: Option[String] = None): Int = {
@@ -465,10 +466,11 @@ object Writers {
     * footer stats alone, the same 1-directory listing the variants probe
     * pays (`PointLookup.genotypesAt`). Range partitioning keeps write
     * tasks balanced under chromosome skew exactly as `writeVariants`
-    * does. The LOAD path does not use this (it appends unsorted into the
-    * chrom directories — a narrow write, no shuffle of the biggest table
-    * per load); this shape is for compaction and force-reload rewrites,
-    * where the ordering debt is paid off the ingest critical path. */
+    * does. The LOAD path does not use this (it appends each task's rows
+    * pos-sorted into the chrom directories — a narrow write, no shuffle
+    * of the biggest table per load); this shape is for compaction and
+    * force-reload rewrites, which make the files disjoint off the
+    * ingest critical path. */
   def writeGenotypes(genotypes: DataFrame, path: String): Unit =
     genotypes
       .repartitionByRange(col("chrom"), col("pos"))

@@ -3,6 +3,8 @@ package graft.vcf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.CompiledTransform
+import graft.qc.VariantQc
 import graft.transform.{Annotations, Normalizer}
 
 /** Distributed VCF scan (reference operator S1/S8 — `vcf_parser.py:520-657`).
@@ -69,8 +71,25 @@ object VcfReader {
     variantsWithHeader(spark, path, header, opts)
   }
 
+  /** Which of a record's calls the variant-QC fold counts: every call,
+    * or only the calls passing ADJ (those an `--adj-filter` load stores). */
+  sealed trait QcCalls
+  object QcCalls {
+    case object All extends QcCalls
+    case object Adj extends QcCalls
+  }
+
+  /** `variants` over an already-read header. With `qc`, each decomposed
+    * record also carries `VariantQc.joinedColumns`, folded from that
+    * line's own sample columns — SURVEY A1's per-record form over the
+    * record's per-sample GT array, no shuffle: the calls parse with the
+    * genotypes scan's per-call expression ([[Call]]) and classify after
+    * the same per-ALT remap, so the columns equal
+    * `VariantQc.fromGenotypes` over the genotype rows the load stores for
+    * the record. Computed before normalization, so a normalized record
+    * keeps its QC. */
   def variantsWithHeader(spark: SparkSession, path: String, header: VcfHeaderInfo,
-                         opts: Options): DataFrame = {
+                         opts: Options, qc: Option[QcCalls] = None): DataFrame = {
     import spark.implicits._
 
     val body = spark.read.text(path)
@@ -83,7 +102,22 @@ object VcfReader {
           $"alt_raw".isNotNull && $"alt_raw" =!= "")
       else parsedRaw
 
-    val parsed = parsedValid
+    // the line's calls, parsed once per line (before the ALT explode),
+    // one per header sample (an absent trailing column is a null call)
+    val n = header.samples.length
+    val withCalls = qc.fold(parsedValid) { which =>
+      val keys = split($"fields".getItem(8), ":")
+      val present = slice($"fields", 10, n)
+      val svals = concat(present,
+        array_repeat(lit(null).cast(StringType), lit(n) - size(present)))
+      parsedValid.withColumn("_calls", CompiledTransform(svals, s => {
+        val c = Call(keys, split(s, ":"))
+        struct(Seq(c.gt.as("gt"), c.a1.as("a1"), c.a2.as("a2")) ++
+          (if (which == QcCalls.Adj) Seq(c.passesAdj.as("adj")) else Nil): _*)
+      }))
+    }
+
+    val parsed = withCalls
       .withColumn("alts", split($"alt_raw", ","))
       .withColumn("n_alts", size($"alts"))
       // T1 multi-allelic decomposition (`vcf_parser.py:290-388`)
@@ -169,13 +203,24 @@ object VcfReader {
       case None      => withImp
     }
 
-    filtered.select(
+    val k = $"alt_idx" + 1
+    // per ALT: each call's class after the per-ALT remap; a call an
+    // --adj-filter load does not store is not counted (null)
+    val withQc = qc.fold(filtered)(which => VariantQc.withCallCounts(filtered,
+      CompiledTransform($"_calls", c => {
+        val cls = VariantQc.genotypeClass(c.getField("gt"),
+          alleleFor(c.getField("a1"), k), alleleFor(c.getField("a2"), k))
+        if (which == QcCalls.Adj) when(c.getField("adj"), cls) else cls
+      })))
+
+    withQc.select((Seq(
       $"chrom", $"pos", $"end_pos", $"ref", $"alt", $"alt_idx", $"n_alts",
       $"qual", $"filter", $"rs_id", $"info",
       $"gene", $"transcript", $"consequence", $"impact", $"hgvs_c", $"hgvs_p",
       $"af_gnomad", $"cadd_phred", $"clinvar_sig",
       $"variant_type", $"normalized", $"original_pos", $"original_ref", $"original_alt",
-      $"info_score", $"imputation_r2", $"is_imputed", $"is_typed", $"imputation_source")
+      $"info_score", $"imputation_r2", $"is_imputed", $"is_typed", $"imputation_source") ++
+      qc.toSeq.flatMap(_ => VariantQc.joinedColumns.map(c => col(c._1)))): _*)
   }
 
   /** Build the per-ALT-sliced INFO map (T2–T4, `vcf_parser.py:390-458`):
@@ -246,9 +291,12 @@ object VcfReader {
     *     [0, k, k(k+1)/2+k], same slicing as INFO Number=G
     * gt keeps the original canonical call string; ad/gp keep the full
     * per-line arrays (allele balance and the ADJ filter are defined over
-    * the whole record, `loader:99-172`). Sample names are driver-side
-    * header metadata turned into an exploded literal array — still a
-    * single narrow projection over the text scan, no shuffle.
+    * the whole record, `loader:99-172`). Each call parses through
+    * [[Call]], the expression the variants scan's QC fold shares; a line
+    * with fewer sample columns than the header stores its absent calls
+    * as missing ('./.'). Sample names are driver-side header metadata
+    * turned into an exploded literal array — still a single narrow
+    * projection over the text scan, no shuffle.
     */
   def genotypes(spark: SparkSession, path: String,
                 humanGenome: Boolean = true,
@@ -282,70 +330,23 @@ object VcfReader {
       .select($"chrom", $"pos", $"ref", $"alt_raw", $"alts", $"n_alts",
         $"format_keys", explode(array(sampleStructs: _*)).as("s"))
       .select($"chrom", $"pos", $"ref", $"alt_raw", $"alts", $"n_alts",
-        $"format_keys",
-        $"s.sample_id".as("sample_id"), split($"s.sval", ":").as("vals"))
-      // FORMAT fields can be dropped from the tail per-sample (VCF spec)
-      .withColumn("gmap", map_from_arrays(
-        slice($"format_keys", lit(1), least(size($"format_keys"), size($"vals"))),
-        slice($"vals", lit(1), least(size($"format_keys"), size($"vals")))))
+        $"s.sample_id".as("sample_id"),
+        $"format_keys", split($"s.sval", ":").as("vals"))
 
-    def fmt(key: String): Column = element_at($"gmap", key)
-
-    val gt = fmt("GT")
-    val alleles = split(gt, "[/|]")
-    val a1 = nullIfDot(element_at(alleles, 1)).cast(IntegerType)
-    val a2 = nullIfDot(element_at(alleles, 2)).cast(IntegerType)
-
-    val withFields = long
-      .withColumn("gt_raw", gt)
-      .withColumn("phased", gt.contains("|"))
-      .withColumn("a1_line", a1)
-      .withColumn("a2_line", a2)
-      // canonical GT string from parsed alleles (`_format_gt`,
-      // loader:377-395) — EXCEPT haploid calls, which keep their
-      // single-allele form: the reference's _format_gt pads "1" to
-      // "1/." (cyvcf2 yields a2 = -1), which then makes its own
-      // haploid counting branch (`variant_qc.py:36-44`) unreachable and
-      // misclassifies every male chrX/Y and MT call as half-missing.
-      // Preserving "1" keeps the documented haploid semantics live:
-      // VariantQc.genotypeClass counts it hom_ref/hom_alt.
-      .withColumn("gt",
-        when($"a1_line".isNotNull &&
-            !$"gt_raw".contains("/") && !$"gt_raw".contains("|"),
-          $"a1_line".cast(StringType))
-        .otherwise(concat_ws("",
-          coalesce($"a1_line".cast(StringType), lit(".")),
-          when($"phased", "|").otherwise("/"),
-          coalesce($"a2_line".cast(StringType), lit(".")))))
-      .withColumn("gq", nullIfDot(fmt("GQ")).cast(IntegerType))
-      .withColumn("dp", nullIfDot(fmt("DP")).cast(IntegerType))
-      .withColumn("ad", transform(split(fmt("AD"), ","),
-        v => nullIfDot(v).cast(IntegerType)))
-      .withColumn("ds_raw", fmt("DS"))
-      .withColumn("gp", transform(split(fmt("GP"), ","),
+    val c = Call($"format_keys", $"vals")
+    val perRecord = long
+      .withColumn("gt", c.gt)
+      .withColumn("phased", c.phased)
+      .withColumn("a1_line", c.a1)
+      .withColumn("a2_line", c.a2)
+      .withColumn("gq", c.gq)
+      .withColumn("dp", c.dp)
+      .withColumn("ad", c.ad)
+      .withColumn("ds_raw", c.field("DS"))
+      .withColumn("gp", transform(split(c.field("GP"), ","),
         v => nullIfDot(v).cast(DoubleType)))
-
-    val adTotal = aggregate($"ad", lit(0), (acc, x) => acc + coalesce(x, lit(0)))
-    val adAlt = aggregate(slice($"ad", lit(2), greatest(size($"ad") - 1, lit(0))),
-      lit(0), (acc, x) => acc + coalesce(x, lit(0)))
-
-    val perRecord = withFields
-      // T14 allele balance = Σ ad[1:] / Σ ad, null on 0 (loader:99-118)
-      .withColumn("allele_balance",
-        when($"ad".isNull || size($"ad") < 2 || adTotal === 0, lit(null))
-          .otherwise(adAlt.cast(DoubleType) / adTotal))
-      // F3 ADJ: GQ≥20 ∧ DP≥10 ∧ (het ⇒ AB≥0.2), missing passes
-      // (loader:140-172). Het-ness is allele INEQUALITY, not membership
-      // in the reference's biallelic whitelist (HET_GENOTYPES =
-      // {0/1,1/0,0|1,1|0}, `genotype_loader.py:22`) — a 0/2 or 1/2 call
-      // is heterozygous and must face the AB criterion too; the
-      // whitelist silently waves multi-allelic hets through.
-      .withColumn("passes_adj",
-        !(($"gq".isNotNull && $"gq" < 20) ||
-          ($"dp".isNotNull && $"dp" < 10) ||
-          ($"a1_line".isNotNull && $"a2_line".isNotNull &&
-            $"a1_line" =!= $"a2_line" &&
-            $"allele_balance".isNotNull && $"allele_balance" < 0.2)))
+      .withColumn("allele_balance", c.alleleBalance)
+      .withColumn("passes_adj", c.passesAdj)
 
     // Per-ALT decomposition (T1 on the genotype side). k = alt_idx + 1 is
     // this ALT's allele index in the original line.
@@ -353,10 +354,6 @@ object VcfReader {
       .select($"*", posexplode($"alts").as(Seq("alt_idx", "alt")))
       .filter($"alt" =!= "" && $"alt" =!= ".")
     val k = $"alt_idx" + 1
-
-    def remap(aLine: Column): Column =
-      when(aLine.isNull, lit(null).cast(IntegerType))
-        .when(aLine === k, 1).otherwise(0)
 
     // Number=G slice of GP for this ALT (1-based element_at): the VCF
     // spec puts genotype (j,k) at index k(k+1)/2 + j, so the biallelic
@@ -371,8 +368,8 @@ object VcfReader {
         element_at($"gp", gpHomAltIdx)))
 
     decomposed
-      .withColumn("a1", remap($"a1_line"))
-      .withColumn("a2", remap($"a2_line"))
+      .withColumn("a1", alleleFor($"a1_line", k))
+      .withColumn("a2", alleleFor($"a2_line", k))
       // Number=A slice of DS for this ALT
       .withColumn("ds", nullIfDot(element_at(split($"ds_raw", ","), k)).cast(DoubleType))
       // T13 dosage: DS passthrough else GP[1] + 2·GP[2] on this ALT's
@@ -387,6 +384,70 @@ object VcfReader {
         $"a1", $"a2", $"gq", $"dp", $"ad", $"ds", $"gp", $"dosage",
         $"allele_balance", $"passes_adj")
   }
+
+  /** One sample's call, parsed from the line's FORMAT keys and the
+    * sample column's `:`-split values: the single per-call parse behind
+    * both the genotypes table and the variant-QC fold, so the two cannot
+    * disagree on GT, haploidy or ADJ. A field dropped from the tail (VCF
+    * spec), or the whole column of a line shorter than the header, reads
+    * as absent. Allele indices are the line's, before the per-ALT remap
+    * ([[alleleFor]]). */
+  private final case class Call(keys: Column, vals: Column) {
+    def field(key: String): Column = {
+      val i = array_position(keys, key).cast(IntegerType)
+      when(i > 0 && i <= size(vals), element_at(vals, i))
+    }
+    private val gtRaw = field("GT")
+    val phased: Column = gtRaw.contains("|")
+    private val alleles = split(gtRaw, "[/|]")
+    val a1: Column = nullIfDot(element_at(alleles, 1)).cast(IntegerType)
+    val a2: Column = nullIfDot(element_at(alleles, 2)).cast(IntegerType)
+    // canonical GT string from parsed alleles (`_format_gt`,
+    // loader:377-395) — EXCEPT haploid calls, which keep their
+    // single-allele form: the reference's _format_gt pads "1" to
+    // "1/." (cyvcf2 yields a2 = -1), which then makes its own
+    // haploid counting branch (`variant_qc.py:36-44`) unreachable and
+    // misclassifies every male chrX/Y and MT call as half-missing.
+    // Preserving "1" keeps the documented haploid semantics live:
+    // VariantQc.genotypeClass counts it hom_ref/hom_alt.
+    val gt: Column =
+      when(a1.isNotNull && !gtRaw.contains("/") && !gtRaw.contains("|"),
+        a1.cast(StringType))
+      .otherwise(concat_ws("",
+        coalesce(a1.cast(StringType), lit(".")),
+        when(phased, "|").otherwise("/"),
+        coalesce(a2.cast(StringType), lit("."))))
+    val gq: Column = nullIfDot(field("GQ")).cast(IntegerType)
+    val dp: Column = nullIfDot(field("DP")).cast(IntegerType)
+    val ad: Column = transform(split(field("AD"), ","),
+      v => nullIfDot(v).cast(IntegerType))
+    private val adTotal =
+      aggregate(ad, lit(0), (acc, x) => acc + coalesce(x, lit(0)))
+    private val adAlt = aggregate(slice(ad, lit(2), greatest(size(ad) - 1, lit(0))),
+      lit(0), (acc, x) => acc + coalesce(x, lit(0)))
+    // T14 allele balance = Σ ad[1:] / Σ ad, null on 0 (loader:99-118)
+    val alleleBalance: Column =
+      when(ad.isNull || size(ad) < 2 || adTotal === 0, lit(null))
+        .otherwise(adAlt.cast(DoubleType) / adTotal)
+    // F3 ADJ: GQ≥20 ∧ DP≥10 ∧ (het ⇒ AB≥0.2), missing passes
+    // (loader:140-172). Het-ness is allele INEQUALITY, not membership
+    // in the reference's biallelic whitelist (HET_GENOTYPES =
+    // {0/1,1/0,0|1,1|0}, `genotype_loader.py:22`) — a 0/2 or 1/2 call
+    // is heterozygous and must face the AB criterion too; the
+    // whitelist silently waves multi-allelic hets through.
+    val passesAdj: Column =
+      !((gq.isNotNull && gq < 20) ||
+        (dp.isNotNull && dp < 10) ||
+        (a1.isNotNull && a2.isNotNull && a1 =!= a2 &&
+          alleleBalance.isNotNull && alleleBalance < 0.2))
+  }
+
+  /** Per-ALT remap of a line allele index for the record of ALT `k`
+    * (bcftools-norm biallelic convention): k → 1, any other non-missing
+    * allele → 0. */
+  private def alleleFor(aLine: Column, k: Column): Column =
+    when(aLine.isNull, lit(null).cast(IntegerType))
+      .when(aLine === k, 1).otherwise(0)
 
   private def nullIfDot(c: Column): Column =
     when(c === "." || c === "", lit(null)).otherwise(c)

@@ -1297,13 +1297,12 @@ class GraftCliSpec extends SparkSpec {
     val vcf = Files.createTempDirectory("genofail")
       .resolve("cohort.vcf").toString
     graft.vcf.SyntheticVcf.write(vcf, 200, seed = 91L) // genotyped (S1,S2)
-    // a corrupt legacy flat file in the genotypes table: the append
-    // itself lands (flat, matching the legacy layout), then the QC
-    // read-back of the directory hits the unreadable footer and fails
-    // the genotype thread — while the variants parse proceeds normally
-    Files.createDirectories(java.nio.file.Paths.get(s"$db/genotypes"))
-    Files.write(java.nio.file.Paths.get(s"$db/genotypes/legacy.parquet"),
-      "not parquet at all".getBytes)
+    // a plain file where the genotypes table directory belongs: the
+    // genotype append cannot land there and fails the genotype thread,
+    // while the variants parse — and, on this fresh db, the variants
+    // family's write — proceed normally
+    Files.write(java.nio.file.Paths.get(s"$db/genotypes"),
+      "not a table".getBytes)
     intercept[Throwable] {
       Graft.run(spark, Array("load", vcf, "--db", db, "--store-genotypes"))
     }
@@ -1317,8 +1316,7 @@ class GraftCliSpec extends SparkSpec {
     // retry after removing the corruption: full load goes through (the
     // failed attempt's orphan genotype rows are exactly what
     // `validate --drop-orphans` reconciles; the new batch is complete)
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(s"$db/genotypes/legacy.parquet"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$db/genotypes"))
     Graft.run(spark, Array("load", vcf, "--db", db, "--store-genotypes"))
     assert(spark.read.parquet(s"$db/variants").count() >= 200)
     assert(spark.read.parquet(s"$db/genotypes").count() > 0)
@@ -1719,26 +1717,34 @@ class GraftCliSpec extends SparkSpec {
       .csv(out).count() == 0, "OR-only rows must not export a derived beta")
   }
 
-  test("cohort-scale QC join arm (shuffle, no broadcast) loads identically") {
-    // batchN >= graft.qc.broadcast.max.rows takes the shuffle join —
-    // the arm every cohort-scale load runs in production but specs never
-    // reach at fixture size. Force it to 0 and assert the loaded store
-    // matches a broadcast-arm load of the same file bit-for-bit.
-    val vcf = Files.createTempDirectory("qcarm").resolve("a.vcf").toString
-    graft.vcf.SyntheticVcf.write(vcf, 300, seed = 7700L)
-    val dbB = Files.createTempDirectory("graftdb").toString
-    Graft.run(spark, Array("load", vcf, "--db", dbB, "--store-genotypes"))
-    val dbS = Files.createTempDirectory("graftdb").toString
-    System.setProperty("graft.qc.broadcast.max.rows", "0")
-    try Graft.run(spark, Array("load", vcf, "--db", dbS, "--store-genotypes"))
-    finally System.clearProperty("graft.qc.broadcast.max.rows")
-    val cols = spark.read.parquet(s"$dbB/variants").columns
-      .filterNot(_ == "load_batch_id").sorted.toSeq
-    def fp(db: String) = spark.read.parquet(s"$db/variants")
-      .select(cols.map(org.apache.spark.sql.functions.col): _*)
-      .orderBy($"chrom", $"pos", $"ref", $"alt")
-      .collect().map(_.toString).toSeq
-    assert(fp(dbS) == fp(dbB), "shuffle-arm load diverged from broadcast arm")
+  test("genotyped load QC equals VariantQc.fromGenotypes over the stored genotype rows") {
+    // the QC columns fold from each line's sample columns inside the
+    // variants parse; the independent answer is the A1 aggregate over
+    // the genotype rows the same load stored. --no-normalize keeps the
+    // variants' alleles raw, as the genotypes table keeps them, so the
+    // two key on the same (chrom, pos, ref, alt).
+    val vcf = Files.createTempDirectory("qcfold").resolve("a.vcf").toString
+    graft.vcf.SyntheticVcf.write(vcf, 1500, samples = Seq("S1", "S2", "S3", "S4"),
+      seed = 7700L)
+    val db = Files.createTempDirectory("graftdb").toString
+    Graft.run(spark, Array("load", vcf, "--db", db, "--store-genotypes",
+      "--no-normalize"))
+    val keys = Seq("chrom", "pos", "ref", "alt")
+    val qcCols = graft.qc.VariantQc.joinedColumns.map(_._1)
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("chrom", $"chrom".cast("string"))
+        .select((keys ++ qcCols).map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(r => r.toSeq.take(4) -> r).toMap
+    val stored = byKey(spark.read.parquet(s"$db/variants"))
+    val expected = byKey(graft.qc.VariantQc.fromGenotypes(
+      spark.read.parquet(s"$db/genotypes")
+        .withColumn("chrom", $"chrom".cast("string"))))
+    assert(stored.size == expected.size && stored.size >= 1500)
+    assert(stored.values.exists(r => r.getAs[Int]("n_het") > 0))
+    // Row equality takes NaN as equal to NaN (the n_called = 0 rows)
+    stored.foreach { case (k, r) =>
+      assert(expected.get(k).contains(r), s"$k: stored $r, expected ${expected.get(k)}")
+    }
   }
 
   test("phi-scan reports findings standalone; phi-sanitize writes a clean copy") {

@@ -166,7 +166,8 @@ class PointLookupSpec extends SparkSpec {
         s"$db/variants", id)
       assert(direct.length == v.filter($"rs_id" === id).count(), s"rsid $id")
     }
-    // genotype probes on the hive-partitioned unsorted append layout
+    // genotype probes on the hive-partitioned append layout: each load's
+    // files pos-sorted per task, overlapping the other loads' files
     val g = spark.read.parquet(s"$db/genotypes")
       .withColumn("chrom", $"chrom".cast("string")).cache()
     hits.take(25).foreach { case (chrom, pos) =>
