@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sinks.DbFs
+import graft.sinks.{DbFs, WritePlan}
 
 /** Thin CLI mapping the reference's verbs (`cli.py:245-2490`) onto the
   * library. The "database" is a parquet directory layout:
@@ -147,40 +147,13 @@ object Graft {
       vcf_path: String, fields: String, variant_count: Long,
       loaded_at: java.sql.Timestamp)
 
-  /** Upsert one registry row — the analogue of the reference's ON
-    * CONFLICT registry upserts (K3 semantics, via Writers.upsert).
-    * Registries are small metadata tables. */
   /** Current physical dir of a logical db table: versioned dbs resolve
     * the `<table>.current` pointer, the plain layout is identity (see
-    * `DbFs.resolvePath`). READS and APPENDS go through here; swap
-    * DESTINATIONS stay logical so `Writers` can commit by pointer flip. */
+    * `DbFs.resolvePath`). READS and APPENDS go through here; a whole-table
+    * replace goes through `WritePlan.rewrite` with the LOGICAL
+    * `s"$db/$name"`, so `Writers` can commit by pointer flip. */
   private[graft] def tbl(db: String, name: String): String =
     DbFs.resolveTable(db, name)
-
-  private def upsertRegistry(spark: SparkSession, dir: String,
-                             row: DataFrame, key: String): Unit = {
-    // read the current physical dir (versioned dbs resolve the pointer);
-    // the swap destination stays LOGICAL so the commit is a pointer flip
-    val phys = DbFs.resolvePath(dir)
-    if (DbFs.exists(phys))
-      graft.sinks.Writers.replaceInPlace(
-        graft.sinks.Writers.upsert(spark.read.parquet(phys), row, Seq(key),
-          allowMissingColumns = true),
-        dir)((d, p) => d.write.parquet(p))
-    else row.write.parquet(phys)
-  }
-
-  /** Rewrite `$db/variants` together with BOTH covering projections in
-    * one all-or-nothing swap. Every verb that rewrites variants after
-    * load (popmax update, hapmap3 flagging, LD-block assignment) must go
-    * through here: the rsID projection is a COVERING full-row copy, so a
-    * variants rewrite that skips the index rebuild leaves `lookup rsX`
-    * serving stale flag/popmax/LD columns — and silently, because the
-    * swap preserves row counts (`references/hapmap3.py:53-107`,
-    * `schema.py:271-275`). */
-  private def replaceVariantsStaged(spark: SparkSession, db: String,
-                                    updated: DataFrame): Unit =
-    graft.sinks.WritePlan.rewrite(spark, graft.sinks.WritePlan.variants(db), updated)
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(1) }
@@ -281,67 +254,19 @@ object Graft {
       case "load" => Load.run(spark, args, db)
 
       case "compact" =>
-        // K1 discipline: repeated loads append genotype files and every
-        // swap rewrites tables into shuffle-partition-many files; serving
-        // latency (PointLookup) is O(files-per-directory). Compaction
-        // rewrites a table to target file sizes, preserving the sorted
-        // chrom layout and page caps for variants, and rebuilds both
-        // secondary projections in the same all-or-nothing swap. The
-        // reference's analogue: VACUUM + recreate-indexes.
+        // K1 discipline, one table at a time (see WritePlan.compact)
         val targetMb = arg(args, "--target-file-mb").getOrElse("128").toLong
         val tables = arg(args, "--tables").map(_.split(",").toSeq)
           .getOrElse(Seq("variants", "genotypes"))
-        tables.foreach {
-          case "variants" if has(args, "--per-chrom") &&
-              DbFs.exists(tbl(db, "variants")) =>
-            // incremental form: rewrite ONLY partition directories whose
-            // file count exceeds --max-files — cost O(fragmented data),
-            // the compaction shape a 100 TB store needs (the full-table
-            // form below is one job over everything). Content is
-            // unchanged, so the covering projections stay fresh without
-            // a rebuild (validate's fingerprint check proves it).
-            val (doneN, dirsN) = graft.sinks.Writers.compactChromDirs(spark,
-              tbl(db, "variants"), targetMb,
-              arg(args, "--max-files").getOrElse("8").toInt)
-            println(s"compacted $doneN/$dirsN chrom partition(s) " +
-              "(content unchanged; projections stay fresh)")
-          case "variants" if DbFs.exists(tbl(db, "variants")) =>
-            replaceVariantsStaged(spark, db, variants)
-            println("compacted variants (rsid_idx and gene_idx rebuilt)")
-          case t if DbFs.exists(tbl(db, t)) =>
-            // genotypes compact CLUSTERED on the variant site key AND
-            // hive-partitioned by chrom (migrating any pre-hive flat
-            // store), so the genotype probe lists one directory and
-            // region-scoped scans prune row groups afterwards; the
-            // covering projections (which fragment under batch-append
-            // loads) re-cluster on their own probe keys
-            // the import fact tables cluster on their REPLACE key first:
-            // range-partitioning by key yields (mostly) key-pure files,
-            // so the O(import) surgical drop keeps working after a
-            // compact instead of degrading every file to the
-            // filtered-rewrite path
-            val sortCols = t match {
-              case "genotypes"   => Seq("chrom", "pos")
-              case "rsid_idx"    => Seq("rs_id")
-              case "gene_idx"    => Seq("gene", "chrom", "pos")
-              case "gwas_stats"  =>
-                Seq("study_accession", "chromosome", "base_pair_location")
-              case "prs_weights" => Seq("pgs_id")
-              case "population_frequencies" =>
-                Seq("source", "subset", "variant_id")
-              case _             => Seq.empty[String]
-            }
-            // a legacy table predating one of the cluster columns still
-            // compacts — on whatever key prefix it carries
-            val present = spark.read.parquet(tbl(db, t)).columns.toSet
-            val usable = sortCols.filter(present.contains)
-            val n = graft.sinks.Writers.compactPlain(
-              spark, s"$db/$t", targetMb, usable,
-              partitionCol = if (t == "genotypes") Some("chrom") else None)
-            println(s"compacted $t to $n file(s)" +
-              (if (usable.nonEmpty) s" clustered on ${usable.mkString(",")}"
-               else ""))
-          case t => println(s"skip $t: not present in $db")
+        // --per-chrom: variants' incremental form, cost O(fragmented data)
+        val perChrom =
+          if (has(args, "--per-chrom"))
+            Some(arg(args, "--max-files").getOrElse("8").toInt)
+          else None
+        tables.foreach { t =>
+          if (DbFs.exists(tbl(db, t)))
+            println(WritePlan.compact(spark, db, t, targetMb, perChrom))
+          else println(s"skip $t: not present in $db")
         }
 
       case "validate" =>
@@ -529,9 +454,9 @@ object Graft {
               // only post-compact mixed files pay a filtered rewrite) —
               // no store-sized rebuild to drop batch-sized residue
               val allOrphans = (orphanV ++ orphanG).distinct
-              val dirs = (graft.sinks.WritePlan.variants(db).dirs :+
+              val dirs = (WritePlan.variants(db).dirs :+
                 s"$db/genotypes").filter(d => DbFs.exists(DbFs.resolvePath(d)))
-              allOrphans.foreach(b => graft.sinks.WritePlan.dropKeys(
+              allOrphans.foreach(b => WritePlan.dropKeys(
                 spark, dirs, Seq("load_batch_id" -> b)))
               println(s"dropped orphan batch(es): " +
                 allOrphans.mkString(","))
@@ -556,22 +481,10 @@ object Graft {
               // column subset (gene_idx) or predate a since-added column
               val cols = idxDf.columns.toSeq.filter(expectDf.columns.contains).sorted
               def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
-                // xxhash64 SKIPS null inputs (the hash is unchanged), so
-                // rows differing only in WHICH column is null would
-                // collide; interleaving a never-null isnull flag per
-                // column makes null placement part of the fingerprint
-                val hashCols = cols.flatMap { c =>
-                  val v = df.schema(c).dataType match {
-                    // xxhash64 rejects MapType (undefined key order); the
-                    // JSON form is stable for a parquet round trip
-                    case _: org.apache.spark.sql.types.MapType => to_json(col(c))
-                    case _ => col(c)
-                  }
-                  Seq(v, isnull(col(c)))
-                }
                 // decimal(38,0) sum: overflow-proof to ~1e19 rows, exact
                 val r = df
-                  .select(xxhash64(hashCols: _*).cast("decimal(38,0)").as("h"))
+                  .select(graft.sinks.Writers.rowHash(df.schema, cols)
+                    .cast("decimal(38,0)").as("h"))
                   .agg(count(lit(1)).as("n"), sum($"h").as("s")).head()
                 (r.getLong(0),
                   Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
@@ -597,14 +510,12 @@ object Graft {
         // projections from the live store, in one all-or-nothing swap
         // (the cheap targeted form of compact's full rebuild)
         if (staleIdx.nonEmpty && has(args, "--rebuild")) {
-          graft.sinks.Writers.replaceInPlaceAllStaged(staleIdx.toSeq.map {
-            case "rsid_idx" => (s"$db/rsid_idx",
-              (tmps: Map[String, String]) => graft.sinks.Writers
-                .writeRsidIndex(variants, tmps(s"$db/rsid_idx")))
-            case idx => (s"$db/$idx",
-              (tmps: Map[String, String]) => graft.sinks.Writers
-                .writeGeneIndex(variants, tmps(s"$db/$idx")))
-          })
+          // each through its own sink in the variants family: the one
+          // place a projection is paired with its writer
+          WritePlan.rewrite(spark,
+            WritePlan.variants(db).projections
+              .filter(p => staleIdx.contains(DbFs.baseName(p.dir)))
+              .map(p => WritePlan.Family(p) -> variants))
           println(s"rebuilt ${staleIdx.mkString(", ")} from the live store")
         }
 
@@ -737,14 +648,13 @@ object Graft {
         // one join execution: write (replacing this study's prior rows),
         // then count from the written parquet (matched) and the raw stats
         // scan (total) — no re-run of the matching join for bookkeeping
-        graft.sinks.WritePlan.land(spark,
-          graft.sinks.WritePlan.plain(s"$db/gwas_stats"),
+        WritePlan.land(spark, WritePlan.plain(s"$db/gwas_stats"),
           harmonized.withColumn("study_accession", lit(accession)),
           Seq("study_accession" -> accession))
         val n = stats.count()
         val m = spark.read.parquet(tbl(db, "gwas_stats"))
           .filter($"study_accession" === accession).count()
-        upsertRegistry(spark, s"$db/studies", Seq(StudyEntry(
+        WritePlan.upsert(spark, s"$db/studies", Seq(StudyEntry(
           accession, arg(args, "--trait"), arg(args, "--efo"),
           arg(args, "--pmid"), arg(args, "--sample-size").map(_.toLong),
           arg(args, "--n-cases").map(_.toLong),
@@ -760,15 +670,14 @@ object Graft {
           weights, variants, chromCol = "chr_name", posCol = "chr_position")
         // per-score replace (weights are pgs_id-stamped by the reader) so
         // several scores coexist, as in the reference's scores table
-        graft.sinks.WritePlan.land(spark,
-          graft.sinks.WritePlan.plain(s"$db/prs_weights"),
+        WritePlan.land(spark, WritePlan.plain(s"$db/prs_weights"),
           matched.filter($"variant_id".isNotNull), Seq("pgs_id" -> meta.pgsId))
         // counts from the raw body scan and the written parquet — don't
         // re-run the matching join
         val wc = weights.count()
         val mc = spark.read.parquet(tbl(db, "prs_weights"))
           .filter($"pgs_id" === meta.pgsId).count()
-        upsertRegistry(spark, s"$db/pgs_scores", Seq(PgsEntry(
+        WritePlan.upsert(spark, s"$db/pgs_scores", Seq(PgsEntry(
           meta.pgsId, meta.traitName, meta.traitOntologyId,
           meta.publicationPmid, meta.weightType, meta.genomeBuild,
           meta.nVariants, wc, mc,
@@ -792,7 +701,7 @@ object Graft {
         // O(import) via the composite-key surgical drop + append (see
         // WritePlan): other sources' files survive untouched.
         val freqDir = s"$db/population_frequencies"
-        graft.sinks.WritePlan.land(spark, graft.sinks.WritePlan.plain(freqDir),
+        WritePlan.land(spark, WritePlan.plain(freqDir),
           long, Seq("source" -> source, "subset" -> subset))
         val nFreq = spark.read.parquet(DbFs.resolvePath(freqDir))
           .filter($"source" === source && $"subset" === subset).count()
@@ -819,14 +728,14 @@ object Graft {
             .withColumn("popmax_population",
               coalesce($"_new_pop", $"popmax_population"))
             .drop("_new_af", "_new_pop")
-          replaceVariantsStaged(spark, db, updated)
+          WritePlan.rewrite(spark, WritePlan.variants(db), updated)
         }
         println(s"imported $nFreq population-frequency rows (source=$source)")
 
       case "load-reference" =>
         val panel = graft.ingest.RefPanels.hapmap3(spark, args(1))
         val flagged = graft.ingest.VariantMatching.flagHapmap3(variants, panel)
-        replaceVariantsStaged(spark, db, flagged)
+        WritePlan.rewrite(spark, WritePlan.variants(db), flagged)
         // count from the WRITTEN parquet (the flag join ran once, in the
         // write; this scans one boolean column of the new store). NOT an
         // observe() on the write plan: the range-partitioned write runs a
@@ -845,7 +754,7 @@ object Graft {
           arg(args, "--population").getOrElse("EUR"),
           arg(args, "--build").map(b => graft.ingest.PgsReader.normalizeBuild(b))
             .getOrElse("GRCh37"))
-        replaceVariantsStaged(spark, db, assigned)
+        WritePlan.rewrite(spark, WritePlan.variants(db), assigned)
         println("ld blocks assigned")
 
       case "compute-sample-qc" =>
@@ -879,20 +788,18 @@ object Graft {
         sqc.count()
         // scoped runs UPSERT their samples' rows into sample_qc (other
         // samples' rows survive — the reference persists per-sample rows
-        // independently); unscoped keeps the whole-table rewrite.
-        // replaceInPlace, not a bare overwrite: the merge reads the
-        // destination it replaces.
-        val sqcDest = tbl(db, "sample_qc")
+        // independently); unscoped keeps the whole-table rewrite. Either
+        // is a staged replace: the merge reads the table it replaces.
+        val sqcDir = tbl(db, "sample_qc")
         val sqcOut =
           if ((batchScope.isDefined || sampleScope.isDefined) &&
-              DbFs.exists(sqcDest)) {
-            spark.read.parquet(sqcDest)
+              DbFs.exists(sqcDir)) {
+            spark.read.parquet(sqcDir)
               .join(sqc.select($"sample_id"), Seq("sample_id"), "left_anti")
               .unionByName(sqc)
           } else sqc
-        graft.sinks.Writers.replaceInPlace(sqcOut, sqcDest)(
-          (d, p) => d.write.parquet(p))
-        val written = spark.read.parquet(sqcDest)
+        WritePlan.rewrite(spark, WritePlan.plain(s"$db/sample_qc"), sqcOut)
+        val written = spark.read.parquet(tbl(db, "sample_qc"))
         if (has(args, "--json")) {
           // per-sample metric rows for the SCOPE as a JSON array
           // (sample-count bounded), the reference's --json face
@@ -972,6 +879,10 @@ object Graft {
             spark.read.parquet(tbl(db, "sample_qc"))))
         else
           println("skip sample_qc_summary: run compute-sample-qc first")
+        // the one plain overwrite of a db table, not a WritePlan swap:
+        // views are derived (a re-run rebuilds what a failed refresh
+        // lost), and annotation-query registers every child of views/ as
+        // a view, so a swap's staged siblings there would surface as views
         val timings = graft.views.PrsViews.refresh(s"$db/views", views.toMap)
         timings.foreach { case (n, t) => println(f"$n refreshed in $t%.2fs") }
 
@@ -985,11 +896,13 @@ object Graft {
           case None    => sys.error("load-annotation needs --config <json>")
         }
         val src = graft.ingest.AnnotationLoader.load(spark, args(1), config)
-        src.write.mode("overwrite").parquet(tbl(db, s"anno_$name"))
+        // a staged replace: a failed load keeps the previous source,
+        // which the registry still lists
+        WritePlan.rewrite(spark, WritePlan.plain(s"$db/anno_$name"), src)
         val nSites = spark.read.parquet(tbl(db, s"anno_$name")).count()
         // registry row for list-annotations (`annotation_schema.py:
         // 130-253` register_source/update_variant_count/list_sources)
-        upsertRegistry(spark, s"$db/annotation_sources", Seq(AnnotationEntry(
+        WritePlan.upsert(spark, s"$db/annotation_sources", Seq(AnnotationEntry(
           name, arg(args, "--source-type").getOrElse("vcf"),
           arg(args, "--version"), args(1),
           config.map(_.alias).mkString(","), nSites,
@@ -1072,9 +985,8 @@ object Graft {
         // source must not fail on an unknown table.
         val annoSources = DbFs.subdirNames(db)
           .filter(_.startsWith("anno_"))
-          // a versioned db's root also holds <table>.v-<token> dirs —
-          // those are physical versions, not logical tables
-          .filterNot(DbFs.isVersionArtifact)
+          // version dirs and a swap's staged siblings are not tables
+          .filterNot(DbFs.isSwapArtifact)
           .map(n => graft.query.Annotator.Source(
             n.stripPrefix("anno_"),
             spark.read.parquet(tbl(db, n)), Nil))
@@ -1724,6 +1636,12 @@ object Graft {
               s"— run `dedup ... $stageHint --staged` once to stage it")
           src
         }
+        // --staged: replace the store with the relation a later
+        // --use-staged sweep derives from
+        def stage(table: String, rows: DataFrame): Unit =
+          WritePlan.rewrite(spark, WritePlan.Family(
+            WritePlan.Sink(s"$db/$table",
+              (d, p, _) => graft.pipeline.Dedup.writeSignatures(d, p))), rows)
         val corpus = spark.read.parquet(corpusPath)
         // Single-pass report (r14 verdict #3): the input size is
         // observed on the corpus scan that feeds the kept write
@@ -1790,14 +1708,11 @@ object Graft {
               Dedup.minhashCandidatePairsFromSignatures(
                 sigs, idCol, "_sig", storedLen, bands, maxBucket)
             } else if (has(args, "--staged")) {
-              val sigDest = tbl(db, "dedup_signatures")
-              graft.sinks.Writers.replaceInPlace(
-                Dedup.minhashSignatures(corpus, textCol, idCol,
-                  shingleK, sigLen), sigDest)((d, p) =>
-                Dedup.writeSignatures(d, p))
+              stage("dedup_signatures", Dedup.minhashSignatures(corpus,
+                textCol, idCol, shingleK, sigLen))
               Dedup.minhashCandidatePairsFromSignatures(
-                spark.read.parquet(sigDest), idCol, "_sig", sigLen, bands,
-                maxBucket)
+                spark.read.parquet(tbl(db, "dedup_signatures")), idCol,
+                "_sig", sigLen, bands, maxBucket)
             } else Dedup.minhashCandidatePairs(corpus, textCol, idCol,
               shingleK, sigLen, bands, maxBucket)
             val cl = Dedup.clusterPairs(
@@ -1836,11 +1751,10 @@ object Graft {
               // this pruned columnar relation (fewer --bands
               // column-prune the unused buckets) instead of
               // re-scanning the corpus
-              val dest = tbl(db, "dedup_vec_buckets")
-              graft.sinks.Writers.replaceInPlace(
-                Dedup.embeddingBuckets(corpus, idCol, vecCol, planes,
-                  dim, bands), dest)((d, p) => Dedup.writeSignatures(d, p))
-              Dedup.embeddingNearDupFromBuckets(spark.read.parquet(dest),
+              stage("dedup_vec_buckets", Dedup.embeddingBuckets(corpus,
+                idCol, vecCol, planes, dim, bands))
+              Dedup.embeddingNearDupFromBuckets(
+                spark.read.parquet(tbl(db, "dedup_vec_buckets")),
                 threshold, idCol, vecCol, maxBucket)
             } else Dedup.embeddingNearDup(corpus, threshold, idCol,
               vecCol, planes, dim, maxBucket, bands)
@@ -1849,13 +1763,11 @@ object Graft {
           case other => sys.error(s"dedup: unknown --method $other " +
             "(expected exact|minhash|simhash|embedding)")
         }
-        graft.sinks.Writers.replaceInPlaceAll(Seq(
-          (kept.observe(obsKept, count(lit(1)).as("n")),
-            tbl(db, "dedup_corpus"),
-            (d: org.apache.spark.sql.DataFrame, p: String) => d.write.parquet(p)),
-          (clusters.observe(obsCl, count(lit(1)).as("n")),
-            tbl(db, "dedup_clusters"),
-            (d: org.apache.spark.sql.DataFrame, p: String) => d.write.parquet(p))))
+        WritePlan.rewrite(spark, Seq(
+          WritePlan.plain(s"$db/dedup_corpus") ->
+            kept.observe(obsKept, count(lit(1)).as("n")),
+          WritePlan.plain(s"$db/dedup_clusters") ->
+            clusters.observe(obsCl, count(lit(1)).as("n"))))
         val nDocs = obsIn.get("n").asInstanceOf[Long]
         val nKept = obsKept.get("n").asInstanceOf[Long]
         val nClustered = obsCl.get("n").asInstanceOf[Long]
@@ -1909,10 +1821,9 @@ object Graft {
         // re-read. sum(when) is null on an empty output, hence the
         // Option guard.
         val obs = org.apache.spark.sql.Observation("ann_topk")
-        graft.sinks.Writers.replaceInPlace(
+        WritePlan.rewrite(spark, WritePlan.plain(s"$db/ann_topk"),
           topk.observe(obs, count(lit(1)).as("rows"),
-            sum(when($"rank" === 1, 1L).otherwise(0L)).as("queries")),
-          tbl(db, "ann_topk"))((d, p) => d.write.parquet(p))
+            sum(when($"rank" === 1, 1L).otherwise(0L)).as("queries")))
         val m = obs.get
         val nRows = m("rows").asInstanceOf[Long]
         val nQ = Option(m("queries")).map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -1980,9 +1891,8 @@ object Graft {
           sum(when($"pass", 1L).otherwise(0L)).as("n_pass"),
           avg($"quality_score").as("mean_q")) ++
           labelHistAggs(langs, histLang, "lang")
-        graft.sinks.Writers.replaceInPlace(
-          tq.observe(obs, aggs.head, aggs.tail: _*), tbl(db, "text_quality"))(
-          (d, p) => d.write.parquet(p))
+        WritePlan.rewrite(spark, WritePlan.plain(s"$db/text_quality"),
+          tq.observe(obs, aggs.head, aggs.tail: _*))
         val m = obs.get
         val n = m("n").asInstanceOf[Long]
         val nPass = Option(m("n_pass")).map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -2029,9 +1939,8 @@ object Graft {
         val obs = org.apache.spark.sql.Observation("media_features")
         val aggs = count(lit(1)).as("n") +:
           labelHistAggs(decoders, $"decoder", "dec")
-        graft.sinks.Writers.replaceInPlace(
-          feats.observe(obs, aggs.head, aggs.tail: _*),
-          tbl(db, "media_features"))((d, p) => d.write.parquet(p))
+        WritePlan.rewrite(spark, WritePlan.plain(s"$db/media_features"),
+          feats.observe(obs, aggs.head, aggs.tail: _*))
         val m = obs.get
         val nMedia = m("n").asInstanceOf[Long]
         val byDecoder = // decoder asc, as before

@@ -454,27 +454,21 @@ object Load {
       // the APPEND paths accumulate files across loads; --compact
       // folds the fold-back into this load (pre-commit, so a failure
       // here ledgers as failed and rolls the appends back)
-      if (has(args, "--compact") && written.contains("genotypes"))
-        progress.stage("compact_genotypes") {
-          graft.sinks.Writers.compactPlain(spark, s"$db/genotypes",
-            arg(args, "--target-file-mb").getOrElse("128").toLong,
-            sortCols = Seq("chrom", "pos"),
-            partitionCol = Some("chrom"))
-        }
-      if (has(args, "--compact") && appendedV)
-        progress.stage("compact_variants") {
-          val targetMb =
-            arg(args, "--target-file-mb").getOrElse("128").toLong
-          // per-chrom incremental on the store (content unchanged, so
-          // the projections stay FRESH — they only need their own
-          // file-count fold-back, a plain clustered rewrite each)
-          graft.sinks.Writers.compactChromDirs(spark, tbl(db, "variants"),
-            targetMb, maxFiles = 1)
-          graft.sinks.Writers.compactPlain(spark, s"$db/rsid_idx",
-            targetMb, sortCols = Seq("rs_id"))
-          graft.sinks.Writers.compactPlain(spark, s"$db/gene_idx",
-            targetMb, sortCols = Seq("gene", "chrom", "pos"))
-        }
+      if (has(args, "--compact")) {
+        val targetMb = arg(args, "--target-file-mb").getOrElse("128").toLong
+        def compact(t: String, maxFilesPerChrom: Option[Int] = None) =
+          graft.sinks.WritePlan.compact(spark, db, t, targetMb, maxFilesPerChrom)
+        if (written.contains("genotypes"))
+          progress.stage("compact_genotypes")(compact("genotypes"))
+        // variants per chrom dir: content unchanged, so the projections
+        // stay FRESH and only need their own file-count fold-back
+        if (appendedV)
+          progress.stage("compact_variants") {
+            compact("variants", maxFilesPerChrom = Some(1))
+            compact("rsid_idx")
+            compact("gene_idx")
+          }
+      }
       // per-BATCH count, not the whole store's: the ledger row records
       // what THIS file contributed (reference `variants_loaded`,
       // `loader.py:547-560`). Every path counted its cached batch

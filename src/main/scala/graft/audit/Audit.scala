@@ -119,23 +119,57 @@ object Audit {
 
   /** Parquet-backed batch ledger (replaces `variant_load_audit`). */
   final class Ledger(spark: SparkSession, dir: String) {
-    import spark.implicits._
-
-    def read(): DataFrame =
-      if (graft.sinks.DbFs.exists(dir)) spark.read.parquet(dir)
-      else Seq.empty[LedgerEntry].toDF()
 
     /** K4 semantics (`loader.py:182-252`): an existing completed batch
       * with the same file hash means "skip" unless force-reload; on
-      * force, the caller filters the previous batch's rows out of the
-      * variants table (delete-then-insert ≡ filter + union). Returns the
-      * batch id to delete, if any. */
+      * force, the caller drops the previous batch's rows. Returns the
+      * LATEST completed batch for the hash, if any.
+      *
+      * Read on the driver, row by row, with no Spark job: the ledger is
+      * a few small files (one per driver-side append until a compact),
+      * and every load asks this before any other work. `completed_at`
+      * has two encodings: INT64 micros from [[appendRowDriverSide]],
+      * INT96 from Spark-written files (init-db's empty ledger,
+      * `compact --tables ledger`). */
     def checkExisting(fileHash: String): Option[String] = {
-      val df = read()
-      if (!df.columns.contains("file_hash")) None
-      else df.filter($"file_hash" === fileHash && $"status" === "completed")
-        .orderBy($"completed_at".desc)
-        .limit(1).collect().headOption.map(_.getAs[String]("load_batch_id"))
+      import org.apache.parquet.example.data.Group
+      val conf = spark.sparkContext.hadoopConfiguration
+      def rows(path: org.apache.hadoop.fs.Path): Seq[Group] = {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+        try {
+          val schema = r.getFooter.getFileMetaData.getSchema
+          val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+          Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null)
+            .flatMap { pages =>
+              val rr = io.getRecordReader(pages, new org.apache.parquet
+                .example.data.simple.convert.GroupRecordConverter(schema))
+              Iterator.fill(pages.getRowCount.toInt)(rr.read())
+            }.toList
+        } finally r.close()
+      }
+      def has(g: Group, f: String) =
+        g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0
+      def str(g: Group, f: String) =
+        if (has(g, f)) Some(g.getString(f, 0)) else None
+      // an absent completed_at sorts first, as in a descending SQL sort
+      def micros(g: Group): Long =
+        if (!has(g, "completed_at")) Long.MinValue
+        else if (g.getType.getType("completed_at").asPrimitiveType
+            .getPrimitiveTypeName.name == "INT96") {
+          // 8 bytes nanos-of-day, then 4 bytes Julian day, little-endian
+          val b = java.nio.ByteBuffer.wrap(g.getInt96("completed_at", 0)
+            .getBytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          val nanos = b.getLong
+          (b.getInt - 2440588L) * 86400000000L + nanos / 1000L
+        } else g.getLong("completed_at", 0)
+      graft.sinks.DbFs.children(dir).map(_.getPath)
+        .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+        .flatMap(rows)
+        .filter(g => str(g, "file_hash").contains(fileHash) &&
+          str(g, "status").contains("completed"))
+        .flatMap(g => str(g, "load_batch_id").map(micros(g) -> _))
+        .maxByOption(_._1).map(_._2)
     }
 
     def append(entry: LedgerEntry): Unit =

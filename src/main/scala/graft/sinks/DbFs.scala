@@ -175,7 +175,7 @@ object DbFs {
 
   /** Append-only audit tables, read/appended via plain paths by design —
     * never pointer-committed, even on a versioned db (see
-    * Writers.replaceInPlaceAllStagedGrouped). */
+    * Writers.stagedSwap). */
   val AppendOnlyTables: Set[String] = Set("ledger", "audit_log")
 
   def pointerPath(table: String): String = s"$table.current"
@@ -310,12 +310,14 @@ object DbFs {
     throw last
   }
 
-  /** True for a db-child name that is versioning plumbing (a version
-    * directory or pointer sidecar), not a logical table — listings that
-    * enumerate tables by name must skip these. */
-  def isVersionArtifact(name: String): Boolean =
-    name.contains(".v-") || name.endsWith(".current") ||
-      name.endsWith(".prev")
+  /** True for a db-child name that is swap plumbing, not a logical table:
+    * a version directory or pointer sidecar, or a staged (`.tmp-`),
+    * staged-aside (`.old-`) or file-surgery trash (`.trash-`) sibling of
+    * a table mid-swap — listings that enumerate tables by name must skip
+    * these. */
+  def isSwapArtifact(name: String): Boolean =
+    Seq(".v-", ".tmp-", ".old-", ".trash-").exists(name.contains) ||
+      name.endsWith(".current") || name.endsWith(".prev")
 
   /** True for paths the local-filesystem driver-side faces can serve
     * directly (no scheme, or file:). */

@@ -61,7 +61,13 @@ object WritePlan {
   final case class State(table: Option[StructType],
                          projections: Seq[Projection] = Nil)
 
-  /** The variants table and its covering rsID and gene projections. */
+  /** The variants table and its covering rsID and gene projections.
+    * Every verb that rewrites variants after load (popmax update, hapmap3
+    * flagging, LD-block assignment) rewrites this whole family: the rsID
+    * projection is a COVERING full-row copy, so a variants rewrite that
+    * skipped it would leave `lookup rsX` serving stale columns — silently,
+    * since the swap preserves row counts (`references/hapmap3.py:53-107`,
+    * `schema.py:271-275`). */
   def variants(db: String): Family = Family(
     Sink(s"$db/variants", (d, p, m) => Writers.writeVariants(d, p, m)),
     Seq(Sink(s"$db/rsid_idx", (d, p, m) => Writers.writeRsidIndex(d, p, m)),
@@ -157,7 +163,7 @@ object WritePlan {
         println(s"WARNING: existing ${fam.primary.dir} predates the batch's " +
           "key column(s); replacing the WHOLE table (prior rows are dropped)")
       // every table derives from the batch alone: one concurrent group
-      stage("write_tables", () => Writers.replaceInPlaceAllStagedGrouped(Seq(
+      stage("write_tables", () => Writers.stagedSwap(Seq(
         fam.sinks.map(s => (s.dir,
           (tmps: Map[String, String]) => s.write(batch, tmps(s.dir), "overwrite"))))))
     case Rewrite(keys) =>
@@ -206,15 +212,97 @@ object WritePlan {
     * the incoming plan), all committed in one all-or-nothing swap: no
     * window where a new table is live with a stale projection (the
     * reference maintains its indexes inside the transaction,
-    * `schema.py:347-359`). */
-  def rewrite(spark: SparkSession, fam: Family, rows: DataFrame): Unit = {
-    val p = fam.primary.dir
-    Writers.replaceInPlaceAllStagedGrouped(
-      Seq(Seq((p, (tmps: Map[String, String]) =>
-        fam.primary.write(rows, tmps(p), "overwrite")))) ++
-      Seq(fam.projections.map(s => (s.dir, (tmps: Map[String, String]) =>
-        s.write(spark.read.parquet(tmps(p)), tmps(s.dir), "overwrite"))))
-        .filter(_.nonEmpty))
+    * `schema.py:347-359`). This is the store's one whole-table replace:
+    * every verb that replaces a table comes through here, with the
+    * family's LOGICAL dirs as destinations, so a versioned db commits by
+    * pointer flip. A read after it must resolve the table again — the
+    * physical dir resolved before the swap is now the previous version. */
+  def rewrite(spark: SparkSession, fam: Family, rows: DataFrame): Unit =
+    rewrite(spark, Seq(fam -> rows))
+
+  /** Several families in ONE all-or-nothing swap (dedup's corpus and
+    * clusters: a kept corpus must never commit beside stale clusters).
+    * Primaries stage one after another, in order; then every projection,
+    * concurrently. */
+  def rewrite(spark: SparkSession, tables: Seq[(Family, DataFrame)]): Unit =
+    Writers.stagedSwap(
+      tables.map { case (fam, rows) =>
+        Seq((fam.primary.dir, (tmps: Map[String, String]) =>
+          fam.primary.write(rows, tmps(fam.primary.dir), "overwrite")))
+      } :+ tables.flatMap { case (fam, _) =>
+        fam.projections.map(s => (s.dir, (tmps: Map[String, String]) =>
+          s.write(spark.read.parquet(tmps(fam.primary.dir)), tmps(s.dir),
+            "overwrite")))
+      })
+
+  /** Upsert `rows` on `key` into a small keyed table (the registries):
+    * the reference's ON CONFLICT DO UPDATE (K3, `Writers.upsert`) as a
+    * whole-table replace; the first upsert creates the table. */
+  def upsert(spark: SparkSession, dir: String, rows: DataFrame,
+             key: String): Unit = {
+    val phys = DbFs.resolvePath(dir)
+    rewrite(spark, plain(dir),
+      if (!DbFs.exists(phys)) rows
+      else Writers.upsert(spark.read.parquet(phys), rows, Seq(key),
+        allowMissingColumns = true))
+  }
+
+  /** Compaction's cluster keys, per table. Rows range-partition and sort
+    * on them (the parquet analogue of Postgres CLUSTER), so files cover
+    * disjoint key ranges and footer min/max stats prune row groups:
+    *   - genotypes on the site key — the load appends each task's rows
+    *     pos-sorted, so files of one chrom overlap until compaction;
+    *   - the covering projections on their own probe keys;
+    *   - the import fact tables on their REPLACE key first: key-pure
+    *     files keep the O(import) surgical drop working after a compact
+    *     instead of degrading every file to the filtered-rewrite path.
+    * A table not named here compacts unclustered. */
+  private val ClusterKeys: Map[String, Seq[String]] = Map(
+    "genotypes" -> Seq("chrom", "pos"),
+    "rsid_idx" -> Seq("rs_id"),
+    "gene_idx" -> Seq("gene", "chrom", "pos"),
+    "gwas_stats" -> Seq("study_accession", "chromosome", "base_pair_location"),
+    "prs_weights" -> Seq("pgs_id"),
+    "population_frequencies" -> Seq("source", "subset", "variant_id"))
+
+  /** Compact `table` of `db` into ~targetMb parquet files (K1
+    * discipline: appends and swaps accumulate small files, and serving
+    * latency is O(files-per-directory)); the reference's analogue is
+    * VACUUM + recreate-indexes (`schema.py:347-359`). Variants rebuild
+    * with both projections in one swap, or, with `maxFilesPerChrom`,
+    * only the chrom= dirs holding more files than that — content
+    * unchanged, so the projections stay fresh. Every other table is
+    * rewritten clustered on [[ClusterKeys]] (the prefix it carries: a
+    * legacy table predating a key column still compacts), genotypes
+    * keeping its chrom partitioning. Returns a report line. */
+  def compact(spark: SparkSession, db: String, table: String, targetMb: Long,
+              maxFilesPerChrom: Option[Int] = None): String = {
+    val dir = s"$db/$table"
+    val phys = DbFs.resolvePath(dir)
+    (table, maxFilesPerChrom) match {
+      case ("variants", Some(maxFiles)) =>
+        val (done, dirs) = Writers.compactChromDirs(spark, phys, targetMb, maxFiles)
+        s"compacted $done/$dirs chrom partition(s) " +
+          "(content unchanged; projections stay fresh)"
+      case ("variants", None) =>
+        rewrite(spark, variants(db), spark.read.parquet(phys))
+        "compacted variants (rsid_idx and gene_idx rebuilt)"
+      case _ =>
+        val n = Writers.targetFiles(spark, phys, targetMb)
+        val df = spark.read.parquet(phys)
+        val keys = ClusterKeys.getOrElse(table, Nil).filter(df.columns.contains)
+        val shaped =
+          if (keys.isEmpty) df.repartition(n)
+          else df.repartitionByRange(n, keys.map(col): _*)
+            .sortWithinPartitions(keys.map(col): _*)
+        rewrite(spark, Family(Sink(dir, (d, p, _) => {
+          val w = d.write.option("parquet.page.row.count.limit", "512")
+          if (table == "genotypes") w.partitionBy("chrom").parquet(p)
+          else w.parquet(p)
+        })), shaped)
+        s"compacted $table to $n file(s)" +
+          (if (keys.nonEmpty) s" clustered on ${keys.mkString(",")}" else "")
+    }
   }
 
   /** Drop every row matching `keys` from each dir, file-surgically, and

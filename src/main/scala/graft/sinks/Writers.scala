@@ -94,36 +94,6 @@ object Writers {
       .option("parquet.page.row.count.limit", "512")
       .parquet(path)
 
-  /** Overwrite a dataset IN PLACE while its plan reads from the same
-    * directory: write to a temp sibling, then swap by rename. Replaces
-    * the localCheckpoint-then-overwrite pattern, which (a) materializes
-    * the whole table into executor block storage — memory/disk pressure
-    * proportional to table size at scale, and lost on executor failure —
-    * and (b) truncates the original data before the rewrite is known
-    * good. Here the source directory stays intact until the new data is
-    * fully written; a crash leaves either the old directory or a
-    * recoverable `.old-*` sibling, never a half-written table. Renames
-    * are O(1) metadata ops on local/HDFS filesystems.
-    */
-  def replaceInPlace(df: DataFrame, path: String)
-                    (write: (DataFrame, String) => Unit): Unit =
-    replaceInPlaceAll(Seq((df, path, write)))
-
-  /** Multi-table write-then-swap: stage EVERY table's new data into a
-    * temp sibling first, then swap all of them. A failure during any
-    * write (the common failure mode) leaves every destination untouched
-    * and cleans its temp directories; a rename failure during the swap
-    * phase rolls already-swapped tables back to their previous data — no
-    * surviving state where one table committed and a dependent one
-    * didn't (e.g. the load's variants+genotypes pair). Only a crash
-    * between renames can split them, and that window is O(1) metadata
-    * ops. */
-  def replaceInPlaceAll(
-      writes: Seq[(DataFrame, String, (DataFrame, String) => Unit)]): Unit =
-    replaceInPlaceAllStaged(writes.map { case (df, path, write) =>
-      (path, (tmps: Map[String, String]) => write(df, tmps(path)))
-    })
-
   /** Run independent write jobs concurrently from separate driver
     * threads (Spark's scheduler interleaves their stages across the
     * executor pool). Every task is awaited to COMPLETION even when one
@@ -165,26 +135,6 @@ object Writers {
     n
   }
 
-  /** Generalized multi-table write-then-swap where each entry is
-    * (destination, writer). Writers run in declaration order and receive
-    * the full destination→temp-path map, so a LATER entry may read an
-    * EARLIER entry's freshly staged temp data — e.g. the rsID/gene
-    * secondary projections are cheap column scans of the just-written
-    * variants temp directory, yet commit in the same all-or-nothing swap
-    * as the variants table itself (no window where the new store is live
-    * with a stale index). */
-  def replaceInPlaceAllStaged(
-      writes: Seq[(String, Map[String, String] => Unit)]): Unit =
-    replaceInPlaceAllStagedGrouped(writes.map(Seq(_)))
-
-  /** As replaceInPlaceAllStaged, but writers are GROUPED: groups run in
-    * declaration order (a later group may read earlier groups' staged
-    * temps), while writers WITHIN a group are independent of each other
-    * and run concurrently. The load path stages
-    * [[variants], [rsid_idx, gene_idx]] this way — both projections scan
-    * the staged variants temp, so they parallelize against each other
-    * without changing what any of them reads. The swap phase is
-    * unchanged: all-or-nothing across every entry of every group. */
   /** Per-destination commit strategy for the staged swap. RENAME is the
     * plain-parquet default: stage the old dir aside, rename the temp in
     * (O(1) metadata on local/HDFS/GCS). POINTER is the versioned-table
@@ -214,7 +164,28 @@ object Writers {
     def parkedNote: String
   }
 
-  def replaceInPlaceAllStagedGrouped(
+  /** The store's one whole-table replace: stage every destination's new
+    * data beside it, then commit all of them in one all-or-nothing swap.
+    * Each entry is (LOGICAL destination, writer); the writer receives
+    * the full destination→staged-path map.
+    *
+    * Staging, not overwrite: a destination may be read by its own
+    * writer's plan (an upsert merges the table it replaces), and it
+    * stays intact until the new data is fully written — no
+    * localCheckpoint of the whole table, no truncation before the
+    * rewrite is known good.
+    *
+    * Groups run in declaration order, so a later group may read an
+    * earlier group's staged data (the rsID/gene projections are column
+    * scans of the staged variants, yet commit in the same swap — no
+    * window where a new store is live with a stale index); writers
+    * WITHIN a group are independent and run concurrently.
+    *
+    * A failed write leaves every destination untouched and drops every
+    * staged dir. A failed commit rolls the already-committed entries
+    * back to their previous data; only a crash between commits can
+    * split them, and that window is O(1) metadata ops. */
+  def stagedSwap(
       groups: Seq[Seq[(String, Map[String, String] => Unit)]]): Unit = {
     val writes = groups.flatten
     if (writes.isEmpty) return
@@ -222,9 +193,9 @@ object Writers {
       .sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(writes.head._1).getFileSystem(conf)
     val suffix = java.util.UUID.randomUUID().toString.take(8)
-    // versioned destination = an existing pointer sidecar, or a db-root
-    // .versioned_tables marker beside the table (or one level up, for
-    // tables nested like views/<name>)
+    // versioned destination = an existing pointer sidecar, or a
+    // .versioned_tables marker in the destination's parent directory
+    // (the db root, for every table of a versioned db)
     def versioned(path: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(path)
       // a destination that IS a version dir (a resolved physical path
@@ -256,11 +227,11 @@ object Writers {
       def commit(): Unit = {
         hadPrevious = fs.exists(dstP)
         if (hadPrevious && !fs.rename(dstP, oldP))
-          sys.error(s"replaceInPlace: could not stage $dst aside")
+          sys.error(s"stagedSwap: could not stage $dst aside")
         if (!fs.rename(tmpP, dstP)) {
           // restore this table before failing — never leave the path empty
           if (fs.exists(oldP)) fs.rename(oldP, dstP)
-          sys.error(s"replaceInPlace: could not move new data into $dst")
+          sys.error(s"stagedSwap: could not move new data into $dst")
         }
         committed = true
       }
@@ -410,7 +381,7 @@ object Writers {
           val stuck = staged.zipWithIndex.collect {
             case (en, j) if !rolledBack(j) => en }
           if (stuck.nonEmpty)
-            System.err.println("replaceInPlace rollback incomplete for " +
+            System.err.println("stagedSwap rollback incomplete for " +
               stuck.map(_.dst).mkString(", ") + " — " +
               stuck.map(_.parkedNote).mkString("; ") + "; restore manually")
         } catch { case _: Throwable => () }
@@ -419,45 +390,16 @@ object Writers {
     staged.foreach(_.cleanupOld())
   }
 
-  /** Compact an unpartitioned table directory into ~targetMb parquet
-    * files (K1 discipline): repeated `load` appends and per-batch writes
-    * accumulate small files, degrading both serving latency
-    * (PointLookup is O(files-per-directory)) and scan task overhead.
-    * Sizing comes from the directory's CURRENT bytes, so the rewrite is
-    * proportional to the data, not a fixed fan-in.
-    *
-    * With `sortCols`, compaction also CLUSTERS the table (the parquet
-    * analogue of Postgres CLUSTER): rows range-partition and sort on the
-    * given keys, so files cover disjoint key ranges and parquet min/max
-    * stats prune row groups for key-scoped scans. The load path
-    * appends genotypes sorted only within each write task (a narrow
-    * write, no extra shuffle of the biggest table per load), so files
-    * of one chrom overlap; compaction folds them into disjoint ones,
-    * off the ingest critical path. The reference's analogue is VACUUM /
-    * recreate-indexes (`schema.py:347-359`). Returns the target file
-    * count. */
-  def compactPlain(spark: SparkSession, dir: String, targetMb: Long,
-                   sortCols: Seq[String] = Nil,
-                   partitionCol: Option[String] = None): Int = {
-    // read + size the CURRENT physical dir (versioned dbs resolve the
-    // pointer; identity on the plain layout); the swap destination stays
-    // the LOGICAL path so a versioned db commits by pointer flip
-    val phys = DbFs.resolvePath(dir)
-    val p = new org.apache.hadoop.fs.Path(phys)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
+  /** Files to write for a dir rewritten into ~targetMb parquet files:
+    * sized from the dir's CURRENT bytes, so a compaction is proportional
+    * to the data, not a fixed fan-in. */
+  private[sinks] def targetFiles(spark: SparkSession, dir: String,
+                                 targetMb: Long): Int = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
     val targetBytes = targetMb * 1024L * 1024L
-    val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(phys)
-    val shaped =
-      if (sortCols.isEmpty) df.repartition(n)
-      else df.repartitionByRange(n, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-    replaceInPlace(shaped, dir) { (d, path) =>
-      val w = d.write.option("parquet.page.row.count.limit", "512")
-      partitionCol.fold(w.parquet(path))(c => w.partitionBy(c).parquet(path))
-    }
-    n
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
   }
 
   /** Genotypes table rewrite — hive-partitioned by chrom (the variants
@@ -466,11 +408,12 @@ object Writers {
     * footer stats alone, the same 1-directory listing the variants probe
     * pays (`PointLookup.genotypesAt`). Range partitioning keeps write
     * tasks balanced under chromosome skew exactly as `writeVariants`
-    * does. The LOAD path does not use this (it appends each task's rows
+    * does. Neither the load path (it appends each task's rows
     * pos-sorted into the chrom directories — a narrow write, no shuffle
-    * of the biggest table per load); this shape is for compaction and
-    * force-reload rewrites, which make the files disjoint off the
-    * ingest critical path. */
+    * of the biggest table per load) nor compaction (`WritePlan.compact`,
+    * which sizes its file count from the table's bytes) uses this; it is
+    * the shape for writing a whole genotype relation at once (`Bench`'s
+    * store setup). */
   def writeGenotypes(genotypes: DataFrame, path: String): Unit =
     genotypes
       .repartitionByRange(col("chrom"), col("pos"))
@@ -501,9 +444,7 @@ object Writers {
     val tableRoot = DbFs.resolvePath(tableRoot0)
     val dst = new org.apache.hadoop.fs.Path(s"$tableRoot/$dirName")
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(dst).getLength
-    val targetBytes = targetMb * 1024L * 1024L
-    val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+    val n = targetFiles(spark, dst.toString, targetMb)
     val suffix = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(s"$tableRoot.$dirName.tmp-$suffix")
     val old = new org.apache.hadoop.fs.Path(s"$tableRoot.$dirName.old-$suffix")
@@ -529,7 +470,7 @@ object Writers {
       }
     } catch {
       case e: Throwable =>
-        // mirror replaceInPlaceAllStaged's recovery: if the partition was
+        // mirror stagedSwap's recovery: if the partition was
         // staged aside but the new data never landed, put the old data
         // back FIRST — deleting only tmp here would leave the partition
         // missing from the table (stranded at <root>.<dir>.old-*,
@@ -708,34 +649,41 @@ object Writers {
     (pure.length, mixed.length)
   }
 
+  /** A stable 64-bit hash of a row's content over `cols`: per column its
+    * value (a map via its JSON form — xxhash64 rejects MapType, whose key
+    * order is undefined; the JSON form is stable across a parquet round
+    * trip) and a never-null isnull flag. xxhash64 SKIPS null inputs, so
+    * without the flag rows differing only in WHICH column is null would
+    * collide. Shared by the upsert's deterministic survivor and
+    * validate's projection fingerprint. */
+  def rowHash(schema: org.apache.spark.sql.types.StructType,
+              cols: Seq[String]): org.apache.spark.sql.Column =
+    xxhash64(cols.flatMap { c =>
+      val v = schema(c).dataType match {
+        case _: org.apache.spark.sql.types.MapType => to_json(col(c))
+        case _ => col(c)
+      }
+      Seq(v, isnull(col(c)))
+    }: _*)
+
   /** One row per key with a DETERMINISTIC survivor: the row whose
-    * non-key content maximizes a stable content hash (map columns via
-    * their JSON form; a per-column isnull flag keeps null placement in
-    * the hash). `dropDuplicates` keeps a partition-order-dependent
-    * arbitrary row, so duplicate-keyed NON-identical rows would make
-    * store contents nondeterministic across runs — where the reference's
-    * ON CONFLICT DO UPDATE raises "row affected a second time". The
-    * content-hash pick is this path's documented relaxation of that
-    * error: stable across runs and cluster layouts, one aggregation, no
-    * window/sort. */
+    * non-key content maximizes [[rowHash]]. `dropDuplicates` keeps a
+    * partition-order-dependent arbitrary row, so duplicate-keyed
+    * NON-identical rows would make store contents nondeterministic
+    * across runs — where the reference's ON CONFLICT DO UPDATE raises
+    * "row affected a second time". The content-hash pick is this path's
+    * documented relaxation of that error: stable across runs and cluster
+    * layouts, one aggregation, no window/sort. */
   private def dedupDeterministic(df: DataFrame, keys: Seq[String]): DataFrame = {
     val nonKey = df.columns.filterNot(keys.contains).toSeq
     if (nonKey.isEmpty) df.dropDuplicates(keys)
-    else {
-      val hashCols = nonKey.flatMap { c =>
-        val v = df.schema(c).dataType match {
-          case _: org.apache.spark.sql.types.MapType => to_json(col(c))
-          case _ => col(c)
-        }
-        Seq(v, isnull(col(c)))
-      }
+    else
       df.groupBy(keys.map(col): _*)
         .agg(max_by(struct(nonKey.map(col): _*),
-          xxhash64(hashCols: _*)).as("_row"))
+          rowHash(df.schema, nonKey)).as("_row"))
         .select(df.columns.toSeq.map(c =>
           if (keys.contains(c)) col(c)
           else col(s"_row.`$c`").as(c)): _*)
-    }
   }
 
   /** K3 — upsert semantics (ON CONFLICT DO UPDATE): incoming rows win,

@@ -7,6 +7,13 @@ import java.nio.file.Files
 class GraftCliSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Replace the variants table ALONE, leaving its projections as they
+    * are — an out-of-band rewrite. */
+  private def variantsOnly(db: String, rows: org.apache.spark.sql.DataFrame): Unit =
+    graft.sinks.WritePlan.rewrite(spark, graft.sinks.WritePlan.Family(
+      graft.sinks.WritePlan.Sink(s"$db/variants",
+        graft.sinks.Writers.writeVariants(_, _, _))), rows)
+
   test("load / skip-reload / validate / import-pgs / export round trip") {
     val db = Files.createTempDirectory("graftdb").toString
     val vcf = fixture("hapmap3_overlap.vcf")
@@ -161,8 +168,7 @@ class GraftCliSpec extends SparkSpec {
     // exact drift a count-only freshness check cannot see
     val tweaked = spark.read.parquet(s"$db/variants")
       .withColumn("qual", $"qual" + org.apache.spark.sql.functions.lit(1000.0))
-    graft.sinks.Writers.replaceInPlace(tweaked, s"$db/variants")(
-      graft.sinks.Writers.writeVariants(_, _))
+    variantsOnly(db, tweaked)
     val vOut = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(vOut)) {
       Graft.run(spark, Array("validate", "--db", db))
@@ -930,8 +936,8 @@ class GraftCliSpec extends SparkSpec {
       .withColumn("action", org.apache.spark.sql.functions.when(
         $"audit_id" === 1L, org.apache.spark.sql.functions.lit("doctored"))
         .otherwise($"action"))
-    graft.sinks.Writers.replaceInPlace(tampered, s"$db/audit_log")(
-      (d, p) => d.write.parquet(p))
+    graft.sinks.WritePlan.rewrite(spark,
+      graft.sinks.WritePlan.plain(s"$db/audit_log"), tampered)
     val e = intercept[RuntimeException] {
       Graft.run(spark, Array("audit-verify", "--db", db))
     }
@@ -1027,9 +1033,7 @@ class GraftCliSpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
     val prev = sized.keys.map(k => k -> spark.conf.getOption(k)).toMap
     sized.foreach { case (k, v) => spark.conf.set(k, v) }
-    try graft.sinks.Writers.replaceInPlace(
-      spark.read.parquet(s"$db/variants"), s"$db/variants")(
-      (d, p) => graft.sinks.Writers.writeVariants(d, p))
+    try variantsOnly(db, spark.read.parquet(s"$db/variants"))
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
@@ -2389,8 +2393,8 @@ class GraftCliSpec extends SparkSpec {
       .withColumn("action", org.apache.spark.sql.functions.when(
         $"audit_id" === 1L, org.apache.spark.sql.functions.lit("doctored"))
         .otherwise($"action"))
-    graft.sinks.Writers.replaceInPlace(tampered, s"$db/audit_log")(
-      (d, p) => d.write.parquet(p))
+    graft.sinks.WritePlan.rewrite(spark,
+      graft.sinks.WritePlan.plain(s"$db/audit_log"), tampered)
     val out = new java.io.ByteArrayOutputStream()
     val e = intercept[RuntimeException] {
       Console.withOut(new java.io.PrintStream(out)) {
@@ -2412,8 +2416,8 @@ class GraftCliSpec extends SparkSpec {
     val spliced = spark.read.parquet(s"$db2/audit_log")
       .filter($"audit_id" =!= 2L)
     assert(spark.read.parquet(s"$db2/audit_log").count() >= 3)
-    graft.sinks.Writers.replaceInPlace(spliced, s"$db2/audit_log")(
-      (d, p) => d.write.parquet(p))
+    graft.sinks.WritePlan.rewrite(spark,
+      graft.sinks.WritePlan.plain(s"$db2/audit_log"), spliced)
     val out2 = new java.io.ByteArrayOutputStream()
     intercept[RuntimeException] {
       Console.withOut(new java.io.PrintStream(out2)) {

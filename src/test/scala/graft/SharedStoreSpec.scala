@@ -153,6 +153,20 @@ class SharedStoreSpec extends SparkSpec {
     assert(sOut.toString.contains("Records scanned"), sOut.toString)
   }
 
+  /** Recorded renames onto `<t>` or `<t>.v-*` directly under the db root:
+    * a table-dir rename, which on S3 proper is a non-atomic O(bytes)
+    * copy+delete. (Committer renames INSIDE a staged version dir are
+    * invisible to readers and fine.) */
+  private def tableRenames(tables: Seq[String]): Seq[(String, String, Boolean)] = {
+    import scala.jdk.CollectionConverters._
+    FaultFs.renames.asScala.toSeq.filter { case (_, dst, _) =>
+      val p = new org.apache.hadoop.fs.Path(dst)
+      val name = p.getName
+      val parentIsDb = Option(p.getParent).exists(_.toString.endsWith("/db"))
+      parentIsDb && tables.exists(t => name == t || name.startsWith(s"$t.v-"))
+    }
+  }
+
   test("versioned db: swaps commit by pointer flip, never by table-dir rename") {
     val db = schemeDb("verdb")
     Graft.run(spark, Array("init-db", "--db", db, "--versioned-tables"))
@@ -187,14 +201,7 @@ class SharedStoreSpec extends SparkSpec {
     try Graft.run(spark, Array("compact", "--db", db, "--tables", "variants"))
     finally FaultFs.recordRenames = false
     val tables = Seq("variants", "rsid_idx", "gene_idx")
-    import scala.jdk.CollectionConverters._
-    val offenders = FaultFs.renames.asScala.toSeq.filter { case (_, dst, _) =>
-      val p = new org.apache.hadoop.fs.Path(dst)
-      val name = p.getName
-      val parentIsDb = Option(p.getParent).exists(_.toString.endsWith("/db"))
-      parentIsDb && tables.exists(t =>
-        name == t || name.matches(java.util.regex.Pattern.quote(t) + "\\.v-.*"))
-    }
+    val offenders = tableRenames(tables)
     assert(offenders.isEmpty,
       s"commit must be pointer-only; table-path renames seen: $offenders")
     val vPhys2 = graft.sinks.DbFs.resolveTable(db, "variants")
@@ -334,6 +341,95 @@ class SharedStoreSpec extends SparkSpec {
     assert(spark.read.parquet(s"$db/ledger")
       .filter($"status" === "completed").count() == ledgerBefore,
       "a compacted ledger must still answer skip-by-hash")
+
+    // the pipeline verbs' tables swap the same way, run after run: each
+    // run moves the pointer, the previous run's version survives as the
+    // read-grace copy (nothing older does), and no table dir is renamed
+    val inputs = Files.createTempDirectory("verinputs")
+    val docs = inputs.resolve("docs").toString
+    Seq((1L, "The quick brown fox jumps over the lazy dog near the river."),
+      (2L, "A second document, written in plain English, with some words."))
+      .toDF("doc_id", "text").write.parquet(docs)
+    val vecs = inputs.resolve("vecs").toString
+    Seq((1L, Seq(1f, 0f, 0f)), (2L, Seq(0f, 1f, 0f)), (3L, Seq(0.6f, 0.8f, 0f)))
+      .toDF("vec_id", "embedding").write.parquet(vecs)
+    Seq("text_quality" -> Array("text-quality", docs, "--db", db),
+      "ann_topk" -> Array("ann-topk", "--corpus", vecs, "--queries", vecs,
+        "--db", db, "--k", "2")).foreach { case (t, verb) =>
+      var prev = Option.empty[String]
+      (1 to 2).foreach { run =>
+        FaultFs.reset()
+        FaultFs.recordRenames = true
+        try Graft.run(spark, verb) finally FaultFs.recordRenames = false
+        val tok = graft.sinks.DbFs.readString(s"$db/$t.current").map(_.trim)
+        assert(tok.isDefined && tok != prev,
+          s"$t run $run: the pointer must move ($prev -> $tok)")
+        val vdirs = graft.sinks.DbFs.children(db).map(_.getPath.getName)
+          .filter(_.startsWith(s"$t.v-")).toSet
+        assert(vdirs == (tok ++ prev).map(v => s"$t.v-$v").toSet,
+          s"$t run $run: expected current + the previous run's version, got $vdirs")
+        assert(tableRenames(Seq(t)).isEmpty,
+          s"$t run $run: table-dir renames seen: ${tableRenames(Seq(t))}")
+        prev = tok
+      }
+    }
+    FaultFs.reset()
+  }
+
+  test("load-annotation keeps its previous source when a re-load fails") {
+    val db = schemeDb("annodb")
+    Graft.run(spark, Array("init-db", "--db", db))
+    val dir = Files.createTempDirectory("annovcf")
+    def annoVcf(name: String, n: Int): String = {
+      val p = dir.resolve(name)
+      Files.write(p, (Seq("##fileformat=VCFv4.2",
+        "##INFO=<ID=AC,Number=A,Type=Integer,Description=\"ac\">",
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO") ++
+        (1 to n).map(i => s"chr1\t${100 * i}\t.\tA\tG\t50\tPASS\tAC=$i"))
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+      p.toString
+    }
+    val cfg = dir.resolve("cfg.json")
+    Files.writeString(cfg, """[{"field": "AC", "alias": "x_ac"}]""")
+    def load(vcf: String): Unit = Graft.run(spark, Array("load-annotation",
+      vcf, "--db", db, "--name", "x", "--config", cfg.toString))
+    def sites = spark.read.parquet(
+      graft.sinks.DbFs.resolveTable(db, "anno_x")).count()
+    def registered = spark.read.parquet(s"$db/annotation_sources")
+      .filter($"name" === "x").select($"variant_count").as[Long].collect().toSeq
+    load(annoVcf("two.vcf", 2))
+    assert(sites == 2 && registered == Seq(2L))
+
+    // the re-load's write fails: every rename landing under anno_x*
+    FaultFs.failWhen = (_, dst) => dst.toString.contains("/anno_x")
+    intercept[Throwable] {
+      try load(annoVcf("three.vcf", 3)) finally FaultFs.reset()
+    }
+    assert(sites == 2, "a failed re-load must keep the previous source")
+    assert(registered == Seq(2L))
+    val residue = graft.sinks.DbFs.children(db).map(_.getPath.getName)
+      .filter(n => n.startsWith("anno_x") && n != "anno_x")
+    assert(residue.isEmpty, s"residue: $residue")
+
+    // mid-swap (staged .tmp- and staged-aside .old- siblings both
+    // present), annotation-query registers no sibling as a source
+    var midSwap = Option.empty[scala.util.Try[Seq[String]]]
+    FaultFs.failWhen = { (src, _) =>
+      if (midSwap.isEmpty && src.getName.startsWith("anno_x.tmp-"))
+        midSwap = Some(scala.util.Try {
+          Console.withOut(new java.io.ByteArrayOutputStream()) {
+            Graft.run(spark, Array("annotation-query", "SELECT 1", "--db", db))
+          }
+          spark.catalog.listTables().collect().map(_.name).toSeq
+        })
+      false
+    }
+    try load(annoVcf("three.vcf", 3)) finally FaultFs.reset()
+    assert(sites == 3 && registered == Seq(3L))
+    assert(midSwap.isDefined, "the re-load must swap anno_x by rename")
+    val views = midSwap.get.get
+    assert(!views.exists(v => v.contains(".tmp-") || v.contains(".old-")),
+      s"staged siblings registered as sources: $views")
   }
 
   test("cross-host writer lease: foreign holder blocks, race loses cleanly, expiry steals") {

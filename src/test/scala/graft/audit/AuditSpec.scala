@@ -472,9 +472,10 @@ class WritersSpec extends SparkSpec {
     val newA = Seq((1L, "a1")).toDF("id", "v")
     val newB = Seq((1L, "b1")).toDF("id", "v")
     intercept[RuntimeException] {
-      Writers.replaceInPlaceAll(Seq(
-        (newA, dirA, (d, p) => d.write.parquet(p)),
-        (newB, dirB, (_, _) => sys.error("boom: second write fails"))))
+      Writers.stagedSwap(Seq(
+        Seq((dirA, (tmps: Map[String, String]) => newA.write.parquet(tmps(dirA)))),
+        Seq((dirB, (_: Map[String, String]) =>
+          sys.error("boom: second write fails")))))
     }
     // both destinations unchanged — including dirA, whose write succeeded
     assert(spark.read.parquet(dirA).head().getString(1) == "a0")
@@ -485,9 +486,9 @@ class WritersSpec extends SparkSpec {
     assert(residue.isEmpty, s"residue: ${residue.mkString(",")}")
 
     // happy path swaps both
-    Writers.replaceInPlaceAll(Seq(
-      (newA, dirA, (d, p) => d.write.parquet(p)),
-      (newB, dirB, (d, p) => d.write.parquet(p))))
+    Writers.stagedSwap(Seq(
+      Seq((dirA, (tmps: Map[String, String]) => newA.write.parquet(tmps(dirA)))),
+      Seq((dirB, (tmps: Map[String, String]) => newB.write.parquet(tmps(dirB))))))
     assert(spark.read.parquet(dirA).head().getString(1) == "a1")
     assert(spark.read.parquet(dirB).head().getString(1) == "b1")
   }
@@ -508,7 +509,7 @@ class WritersSpec extends SparkSpec {
       FaultFs.failWhen = (src, dst) =>
         src.getName == "b" && dst.getName.startsWith("b.old-")
       val e = intercept[RuntimeException] {
-        Writers.replaceInPlaceAllStagedGrouped(Seq(
+        Writers.stagedSwap(Seq(
           Seq((dirA, writer(dirA, "a1"))),
           Seq((dirB, writer(dirB, "b1")))))
       }
@@ -521,7 +522,7 @@ class WritersSpec extends SparkSpec {
       .map(_.getName).filter(n => n.contains(".tmp-") || n.contains(".old-"))
     assert(residue.isEmpty, s"residue: ${residue.mkString(",")}")
     // renames healthy again: the same swap lands
-    Writers.replaceInPlaceAllStagedGrouped(Seq(
+    Writers.stagedSwap(Seq(
       Seq((dirA, writer(dirA, "a1"))), Seq((dirB, writer(dirB, "b1")))))
     assert(spark.read.parquet(dirA).head().getString(1) == "a1")
     assert(spark.read.parquet(dirB).head().getString(1) == "b1")
@@ -547,7 +548,7 @@ class WritersSpec extends SparkSpec {
       FaultFs.failWhen = (src, dst) =>
         src.getName.startsWith("b.tmp-") && dst.getName == "b"
       val e = intercept[RuntimeException] {
-        Writers.replaceInPlaceAllStagedGrouped(Seq(
+        Writers.stagedSwap(Seq(
           Seq((dirA, writer(dirA, "a1"))),
           Seq((dirB, writer(dirB, "b1")))))
       }
@@ -561,7 +562,7 @@ class WritersSpec extends SparkSpec {
       FaultFs.failWhen = (src, dst) =>
         src.getName.startsWith("c.tmp-") && dst.getName == "c"
       intercept[RuntimeException] {
-        Writers.replaceInPlaceAllStagedGrouped(Seq(
+        Writers.stagedSwap(Seq(
           Seq((dirA, writer(dirA, "a1"))),
           Seq((dirC, writer(dirC, "c1")))))
       }
@@ -662,7 +663,7 @@ class WritersSpec extends SparkSpec {
       Seq((1L, value)).toDF("id", "v").write.parquet(tmps(dst))
     }
     intercept[RuntimeException] {
-      Writers.replaceInPlaceAllStagedGrouped(Seq(
+      Writers.stagedSwap(Seq(
         Seq((dirA, writer("a1"))),
         Seq(
           (dirB, writer("b1")),
@@ -677,7 +678,7 @@ class WritersSpec extends SparkSpec {
     assert(residue.isEmpty, s"residue: ${residue.mkString(",")}")
 
     // happy path: sequential head group, concurrent tail group, all land
-    Writers.replaceInPlaceAllStagedGrouped(Seq(
+    Writers.stagedSwap(Seq(
       Seq((dirA, writer("a1"))),
       Seq((dirB, writer("b1")), (dirC, writer("c1")))))
     Seq(dirA -> "a1", dirB -> "b1", dirC -> "c1").foreach { case (d, v) =>
