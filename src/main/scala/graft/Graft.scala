@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.audit.AuditVerbs
+import graft.pipeline.PipelineVerbs
 import graft.sinks.{DbFs, WritePlan}
+import graft.transform.PhiVerbs
 
 /** Thin CLI mapping the reference's verbs (`cli.py:245-2490`) onto the
   * library. The "database" is a parquet directory layout:
@@ -26,62 +29,22 @@ object Graft {
   }
   private[graft] def has(args: Array[String], flag: String): Boolean = args.contains(flag)
 
-  /** First positional operand (`args(1)`) for verbs whose input is a
-    * parquet path. A missing operand or a flag in its place is a USAGE
-    * error, not a literal path to read — `graft dedup --db X` must not
-    * silently read parquet at "--db", and a bare `graft dedup` must not
-    * throw ArrayIndexOutOfBounds (mirrors ann-topk's sys.error guards). */
-  private def positionalPath(args: Array[String], verb: String,
+  /** The verb's first positional operand (`args(1)`): a missing
+    * operand or a flag in its place is a USAGE error, never a literal
+    * path — `export-plink --db X` must not write its TSV to "./--db", and
+    * a bare `phi-report` must not throw ArrayIndexOutOfBounds. */
+  private[graft] def operand(args: Array[String], verb: String,
                              what: String): String = {
     if (args.length < 2 || args(1).startsWith("--"))
-      sys.error(s"$verb needs a $what parquet path as its first argument")
+      sys.error(s"$verb expects $what as its first argument")
     args(1)
-  }
-
-  /** Closed-label-set histogram observed during a verb's write pass
-    * (the single-pass report discipline): per-label conditional counts
-    * plus an "other" count that trips loudly when a classifier gains a
-    * label nobody registered here. */
-  private def labelHistAggs(labels: Seq[String],
-      c: org.apache.spark.sql.Column,
-      prefix: String): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{count, when, lit, not}
-    // NULL-safe: not(isin) is NULL (not true) for a NULL label, which
-    // would count the row in NEITHER bucket and desync the histogram
-    // sum from the row count — a NULL classifier output must land in
-    // "other" like any other unregistered label.
-    count(when(c.isNull || not(c.isin(labels: _*)), lit(1)))
-      .as(s"${prefix}_other") +:
-      labels.map(l => count(when(c === l, lit(1))).as(s"${prefix}_$l"))
-  }
-
-  /** Render the observed label counts as the report's JSON object —
-    * only labels that occurred, ordered by count desc then label (or
-    * label alone). */
-  private def labelHistRender(labels: Seq[String], prefix: String,
-      m: Map[String, _], byCountDesc: Boolean): String = {
-    val other = m(s"${prefix}_other").asInstanceOf[Long]
-    // Single-pass reporting can't name an unregistered label (the
-    // groupBy that would is exactly the rescan we removed) — but a
-    // nonzero "other" should be loud enough to chase, not just a
-    // quiet bucket in the JSON.
-    if (other > 0)
-      System.err.println(s"[graft] WARNING: $other rows with an " +
-        s"unregistered '$prefix' label landed in \"other\" — a " +
-        s"classifier emitted a label not in {${labels.mkString(",")}}")
-    (labels.map(l => (l, m(s"${prefix}_$l").asInstanceOf[Long])) ++
-      Seq(("other", other)))
-      .filter(_._2 > 0)
-      .sortBy { case (l, c) => (if (byCountDesc) -c else 0L, l) }
-      .map { case (l, c) => s"${Json.str(l)}:$c" }
-      .mkString("{", ",", "}")
   }
 
   /** Both accepted spellings of the pattern-config flag:
     * `--patterns-config` (the phi verbs) and `--phi-patterns-config`
     * (matching load's phi-prefixed flags) — read AND write sides accept
     * either, so neither spelling can silently no-op. */
-  private def patternsConfigArg(args: Array[String]): Option[String] =
+  private[graft] def patternsConfigArg(args: Array[String]): Option[String] =
     Seq("--patterns-config", "--phi-patterns-config")
       .flatMap(f => arg(args, f)).headOption
 
@@ -168,9 +131,10 @@ object Graft {
     try run(spark, args) finally spark.stop()
   }
 
-  private val MutatingVerbs = Set("load", "compact", "init-db", "import-gwas",
-    "import-pgs", "import-frequencies", "load-reference", "annotate-ld-blocks",
-    "compute-sample-qc", "refresh-views", "load-annotation",
+  private[graft] val MutatingVerbs = Set("load", "compact", "init-db",
+    "import-gwas", "import-pgs", "import-frequencies", "load-reference",
+    "annotate-ld-blocks", "compute-sample-qc", "refresh-views",
+    "load-annotation",
     // mutates the per-db PHI registry: the detection configuration is
     // db state — serialized under the writer lock and audit-logged like
     // every other state change
@@ -219,9 +183,7 @@ object Graft {
       !(verb == "phi-patterns-add" &&
         (arg(args, "--db").isEmpty || patternsConfigArg(args).exists(cfg =>
           !pathResolvesUnder(cfg, arg(args, "--db").get))))) ||
-      (verb == "validate" &&
-        (has(args, "--rebuild") || has(args, "--drop-orphans") ||
-          has(args, "--reclaim-versions")))
+      (verb == "validate" && Validate.RepairFlags.exists(has(args, _)))
     if (!mutates) runVerb(spark, args)
     else {
       val db = arg(args, "--db").getOrElse("/tmp/graft_db")
@@ -269,264 +231,14 @@ object Graft {
           else println(s"skip $t: not present in $db")
         }
 
-      case "validate" =>
-        // single-batch face (`cli.py:511-575`: `validate <load_batch_id>`
-        // — status + expected-vs-actual + in-batch duplicates, nonzero
-        // exit on failure). The argument is optional here: bare
-        // `validate` keeps the whole-db reconciliation below, which the
-        // reference has no single verb for.
-        args.lift(1).filterNot(_.startsWith("--")).foreach { batchId =>
-          // the repair flags act on the WHOLE store; silently ignoring
-          // them under a batch-scoped run would leave the user believing
-          // a repair happened
-          if (has(args, "--rebuild") || has(args, "--drop-orphans") ||
-              has(args, "--reclaim-versions"))
-            sys.error("validate <batch-id> does not take --rebuild, " +
-              "--drop-orphans or --reclaim-versions; run them on a bare " +
-              "`validate --db ...`")
-          // a fresh or pre-ledger store must answer "batch not found",
-          // not an opaque path-not-found AnalysisException
-          if (!DbFs.exists(s"$db/ledger"))
-            sys.error(s"Load batch not found: $batchId")
-          val ledgerRow = spark.read.parquet(s"$db/ledger")
-            .filter($"load_batch_id" === batchId)
-            .orderBy($"completed_at".desc).limit(1).collect().headOption
-            .getOrElse(sys.error(s"Load batch not found: $batchId"))
-          val batch = variants.filter($"load_batch_id" === batchId)
-          val actualN = batch.count()
-          val dupN = batch.groupBy($"chrom", $"pos", $"ref", $"alt")
-            .count().filter($"count" > 1).count()
-          // nullable read: an in-flight row's null count must not
-          // silently unbox to 0 (the status gate below is the real
-          // guard, but 0==0 passing on a null is a trap worth closing)
-          val expected = Option(
-            ledgerRow.getAs[java.lang.Long]("n_variants"))
-            .map(_.toLong).getOrElse(-1L)
-          val status = ledgerRow.getAs[String]("status")
-          println(s"Load Batch: $batchId")
-          println(s"Status: $status")
-          println(s"Expected variants: $expected")
-          println(s"Actual variants: $actualN")
-          println(s"Duplicates: $dupN")
-          // a failed or rolled-back batch must not validate clean even
-          // when its counts trivially agree (0 == 0)
-          if (status == "completed" && actualN == expected && dupN == 0)
-            println("Validation passed")
-          else sys.error("Validation failed")
-          return
-        }
-        // versioned-layout invariants (init-db --versioned-tables): each
-        // pointer must name a live dir. The non-current version the GC
-        // deliberately keeps (the read-grace copy, named by the
-        // `<table>.prev` sidecar — Writers.PointerEntry cleanupOld) is
-        // legitimate; anything else version-shaped is crash residue.
-        // `--reclaim-versions` (a SEPARATE flag from --drop-orphans,
-        // which repairs orphan BATCHES — piggybacking would make the
-        // printed orphan-repair guidance silently yank grace copies from
-        // under in-flight readers) deletes every non-current version of
-        // every pointered table — run it only when no readers are
-        // mid-scan. Tables are DISCOVERED from their pointer sidecars,
-        // not a hard-coded list, so dynamically-named tables (anno_<src>)
-        // and later additions are covered.
-        if (DbFs.exists(DbFs.versionMarker(db))) {
-          val childNames = DbFs.children(db).map(_.getPath.getName)
-          childNames.filter(_.endsWith(".current"))
-            .map(_.stripSuffix(".current")).sorted.foreach { t =>
-            DbFs.readString(s"$db/$t.current").map(_.trim)
-              .filter(_.nonEmpty).foreach { tok =>
-              val dangling = !DbFs.exists(s"$db/$t.v-$tok")
-              if (dangling)
-                println(s"$t: DANGLING pointer ($t.current -> $t.v-$tok " +
-                  "missing; reads fall back to the plain path)")
-              val graceName = DbFs.readString(s"$db/$t.prev").map(_.trim)
-                .filter(_.nonEmpty).map(p => s"$t.v-$p")
-              val orphans = childNames.filter(n =>
-                n.startsWith(s"$t.v-") && n != s"$t.v-$tok")
-              // a SINGLE non-current version with no (or a dangling)
-              // .prev record is PRESUMED the read-grace copy — a swap
-              // predating the sidecar, or a swallowed/crashed sidecar
-              // write — not crash residue: calling it residue would
-              // invite an operator to reclaim the grace window believing
-              // it junk. Two or more untracked versions stay residue
-              // (the GC never deliberately keeps more than one).
-              val graceKnown = graceName.filter(orphans.contains)
-              val residue = graceKnown match {
-                case Some(g) => orphans.filterNot(_ == g)
-                case None if orphans.length == 1 => Nil
-                case None => orphans
-              }
-              if (has(args, "--reclaim-versions")) {
-                if (dangling)
-                  // deleting survivors under a dangling pointer would
-                  // destroy the only intact copies of the table — refuse
-                  println(s"$t: NOT reclaiming ${orphans.length} version " +
-                    "dir(s) under a dangling pointer — repair the pointer " +
-                    "first (point it at a surviving version)")
-                else {
-                  if (orphans.nonEmpty) {
-                    orphans.foreach(n => DbFs.deleteRecursive(s"$db/$n"))
-                    println(s"$t: reclaimed ${orphans.length} non-current " +
-                      s"version dir(s) (${orphans.mkString(",")})")
-                  }
-                  // unconditionally: a .prev left naming the CURRENT
-                  // version (pointer repaired onto the grace copy) is
-                  // stale bookkeeping either way
-                  DbFs.deleteRecursive(s"$db/$t.prev")
-                }
-              } else if (residue.nonEmpty)
-                println(s"$t: ${residue.length} stale version dir(s) " +
-                  s"(${residue.mkString(",")}) — crash residue beyond the " +
-                  "read-grace copy; swept by the next swap, or " +
-                  "validate --reclaim-versions")
-            }
-          }
-        }
-
-        // duplicate detection is scoped WITHIN each load batch
-        // (`cli.py:552-560` groups under WHERE load_batch_id = $1): a
-        // multi-file cohort legitimately carries the same site in two
-        // files' batches — only same-batch repeats indicate a load defect
-        val hasBatch = variants.columns.contains("load_batch_id")
-        val dupKeys =
-          (if (hasBatch) Seq($"load_batch_id") else Nil) ++
-            Seq($"chrom", $"pos", $"ref", $"alt")
-        val dups = variants.groupBy(dupKeys: _*)
-          .count().filter($"count" > 1).count()
-        println(s"variants=${variants.count()} duplicate_sites=$dups")
-        // per-batch expected-vs-actual against the ledger
-        // (`cli.py:548-570`): every batch present in the store must hold
-        // exactly the row count its completed ledger row recorded
-        if (hasBatch && DbFs.exists(s"$db/ledger")) {
-          val actual = variants.groupBy($"load_batch_id")
-            .agg(count(lit(1)).as("actual"))
-          val rows = actual.join(
-            spark.read.parquet(s"$db/ledger")
-              .filter($"status" === "completed")
-              .select($"load_batch_id", $"file_path", $"n_variants"),
-            Seq("load_batch_id"), "left").orderBy($"load_batch_id").collect()
-          rows.foreach { r =>
-            val expected = Option(r.getAs[java.lang.Long]("n_variants"))
-            val actualN = r.getAs[Long]("actual")
-            val ok = expected.contains(actualN)
-            println(s"batch ${r.getAs[String]("load_batch_id")} " +
-              s"(${Option(r.getAs[String]("file_path")).getOrElse("?")}): " +
-              s"expected=${expected.map(_.toString).getOrElse("?")} " +
-              s"actual=$actualN " + (if (ok) "ok" else "MISMATCH"))
-          }
-          // Orphan batches: store rows whose batch has NO completed ledger
-          // row — the residue of a load killed between its append and its
-          // ledger commit (the in-process failure rollback can't run on a
-          // hard kill; the reference can't orphan because its load is one
-          // Postgres transaction). Detected in BOTH tables — the genotype
-          // append commits before the variants write, so a crash can
-          // orphan genotypes alone. `--drop-orphans` repairs with the
-          // surgical drop below. Don't run it while a load is in
-          // flight — an active batch is completed-less by definition.
-          val completedIds = spark.read.parquet(s"$db/ledger")
-            .filter($"status" === "completed")
-            .select($"load_batch_id").distinct()
-          // NULL batch ids are NOT orphans: they are legacy rows from a
-          // pre-ledger store (null-filled by a widening rewrite's
-          // unionByName) and must never reach the drop: they are no
-          // batch, and the "repair" must keep them
-          def orphansOf(df: DataFrame): Seq[String] =
-            df.select($"load_batch_id").filter($"load_batch_id".isNotNull)
-              .distinct()
-              .join(completedIds, Seq("load_batch_id"), "left_anti")
-              .collect().map(_.getString(0)).toSeq // batch-count-sized
-          val orphanV = orphansOf(variants)
-          val gDir = tbl(db, "genotypes")
-          val orphanG =
-            if (DbFs.exists(gDir) &&
-                spark.read.parquet(gDir).columns.contains("load_batch_id"))
-              orphansOf(spark.read.parquet(gDir))
-            else Seq.empty
-          if (orphanV.nonEmpty || orphanG.nonEmpty) {
-            println(s"orphan batch(es) with no completed ledger row: " +
-              (orphanV ++ orphanG).distinct.mkString(",") +
-              (if (has(args, "--drop-orphans")) ""
-               else " — run `validate --drop-orphans` to repair"))
-            if (has(args, "--drop-orphans")) {
-              // surgical repair, the same O(orphan) machinery as
-              // force-reload: an orphan is crash residue of a partial
-              // APPEND, so its rows live in their own footer-identified
-              // files across all four tables (appends stamp every table;
-              // only post-compact mixed files pay a filtered rewrite) —
-              // no store-sized rebuild to drop batch-sized residue
-              val allOrphans = (orphanV ++ orphanG).distinct
-              val dirs = (WritePlan.variants(db).dirs :+
-                s"$db/genotypes").filter(d => DbFs.exists(DbFs.resolvePath(d)))
-              allOrphans.foreach(b => WritePlan.dropKeys(
-                spark, dirs, Seq("load_batch_id" -> b)))
-              println(s"dropped orphan batch(es): " +
-                allOrphans.mkString(","))
-            }
-          }
-        }
-        // covering-projection freshness: the indexes commit in the same
-        // swap as the store, so a mismatch means someone rewrote the
-        // store out-of-band. Counts alone can't see a rewrite that
-        // preserves cardinality but changes served columns (a popmax/flag
-        // update is exactly that), so the check is CONTENT-level: an
-        // order-independent fingerprint — sum of per-row xxhash64 over the
-        // projection's columns — compared between the index and the
-        // eligible variants. Column-pruned scans; no join, no sort.
-        val staleIdx = scala.collection.mutable.ArrayBuffer[String]()
-        Seq(("rsid_idx", variants.filter($"rs_id".isNotNull)),
-            ("gene_idx", variants.filter($"gene".isNotNull)))
-          .foreach { case (idx, expectDf) =>
-            if (DbFs.exists(tbl(db, idx))) {
-              val idxDf = spark.read.parquet(tbl(db, idx))
-              // shared columns in a fixed order — the projection may be a
-              // column subset (gene_idx) or predate a since-added column
-              val cols = idxDf.columns.toSeq.filter(expectDf.columns.contains).sorted
-              def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
-                // decimal(38,0) sum: overflow-proof to ~1e19 rows, exact
-                val r = df
-                  .select(graft.sinks.Writers.rowHash(df.schema, cols)
-                    .cast("decimal(38,0)").as("h"))
-                  .agg(count(lit(1)).as("n"), sum($"h").as("s")).head()
-                (r.getLong(0),
-                  Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-              }
-              val (wantN, wantS) = fingerprint(expectDf.select(cols.map(col): _*))
-              val (gotN, gotS) = fingerprint(idxDf.select(cols.map(col): _*))
-              if (gotN == wantN && gotS == wantS)
-                println(s"$idx: ok ($gotN rows, content fingerprint match)")
-              else {
-                staleIdx += idx
-                println(
-                  if (gotN != wantN)
-                    s"$idx: STALE ($gotN rows vs $wantN eligible variants " +
-                      "— run `validate --rebuild` or `compact`)"
-                  else
-                    s"$idx: STALE (row counts match but served content " +
-                      "differs from the store — run `validate --rebuild` " +
-                      "or `compact`)")
-              }
-            }
-          }
-        // --rebuild: repair in place — regenerate ONLY the stale
-        // projections from the live store, in one all-or-nothing swap
-        // (the cheap targeted form of compact's full rebuild)
-        if (staleIdx.nonEmpty && has(args, "--rebuild")) {
-          // each through its own sink in the variants family: the one
-          // place a projection is paired with its writer
-          WritePlan.rewrite(spark,
-            WritePlan.variants(db).projections
-              .filter(p => staleIdx.contains(DbFs.baseName(p.dir)))
-              .map(p => WritePlan.Family(p) -> variants))
-          println(s"rebuilt ${staleIdx.mkString(", ")} from the live store")
-        }
+      case "validate" => Validate.run(spark, args, db)
 
       case "lookup" =>
         // the reference's indexed point SELECT face
         // (`test_query_latency.py:50-153`), served driver-side with no
         // Spark job (PointLookup): `lookup chr1:12345`, `lookup rs123`,
         // or `lookup gene:BRCA2` (the covering gene-index probe)
-        if (args.length < 2 || args(1).startsWith("--"))
-          sys.error("lookup expects a key: chrom:pos, rsID, or gene:NAME")
-        val key = args(1)
+        val key = operand(args, verb, "a key (chrom:pos, rsID, or gene:NAME)")
         def parsePos(s: String): Long =
           try s.toLong catch {
             case _: NumberFormatException =>
@@ -624,7 +336,8 @@ object Graft {
         println("ok: validation functions registered for the session")
 
       case "import-gwas" =>
-        val stats = graft.ingest.GwasReader.read(spark, args(1))
+        val tsv = operand(args, verb, "a summary-statistics TSV path")
+        val stats = graft.ingest.GwasReader.read(spark, tsv)
         val matched = graft.ingest.VariantMatching.matchToVariants(stats, variants)
         // J3: harmonize orientation against the matched variant's alleles,
         // with AF-proximity rescue for strand-ambiguous SNPs
@@ -643,7 +356,7 @@ object Graft {
         // rows are stamped so several studies coexist, as in the
         // reference's study_id-keyed gwas_stats table
         val accession = arg(args, "--study-accession").getOrElse(
-          DbFs.baseName(args(1))
+          DbFs.baseName(tsv)
             .replaceAll("\\.(tsv|txt|csv)(\\.gz)?$", ""))
         // one join execution: write (replacing this study's prior rows),
         // then count from the written parquet (matched) and the raw stats
@@ -665,7 +378,8 @@ object Graft {
         println(s"study=$accession imported=$n matched=$m unmatched=${n - m}")
 
       case "import-pgs" =>
-        val (meta, weights) = graft.ingest.PgsReader.read(spark, args(1))
+        val (meta, weights) = graft.ingest.PgsReader.read(spark,
+          operand(args, verb, "a PGS scoring-file path"))
         val matched = graft.ingest.VariantMatching.matchToVariants(
           weights, variants, chromCol = "chr_name", posCol = "chr_position")
         // per-score replace (weights are pgs_id-stamped by the reader) so
@@ -692,7 +406,8 @@ object Graft {
         val source = arg(args, "--source").getOrElse("gnomAD_v3")
         val subset = arg(args, "--subset").getOrElse("all")
         val prefix = arg(args, "--prefix").getOrElse("")
-        val freqVcf = graft.vcf.VcfReader.variants(spark, args(1))
+        val freqVcf = graft.vcf.VcfReader.variants(spark,
+          operand(args, verb, "a gnomAD-style VCF path"))
         val long = graft.transform.PopulationFreq.toLong(
           freqVcf, source = source, prefix = prefix, subset = subset)
         // per-(source,subset) replace — the reference upserts ON CONFLICT
@@ -733,7 +448,8 @@ object Graft {
         println(s"imported $nFreq population-frequency rows (source=$source)")
 
       case "load-reference" =>
-        val panel = graft.ingest.RefPanels.hapmap3(spark, args(1))
+        val panel = graft.ingest.RefPanels.hapmap3(spark,
+          operand(args, verb, "a HapMap3 TSV path"))
         val flagged = graft.ingest.VariantMatching.flagHapmap3(variants, panel)
         WritePlan.rewrite(spark, WritePlan.variants(db), flagged)
         // count from the WRITTEN parquet (the flag join ran once, in the
@@ -747,7 +463,8 @@ object Graft {
           .filter($"in_hapmap3").count())
 
       case "annotate-ld-blocks" =>
-        val blocks = graft.ingest.RefPanels.ldBlocks(spark, args(1),
+        val blocks = graft.ingest.RefPanels.ldBlocks(spark,
+          operand(args, verb, "an LD-block BED path"),
           arg(args, "--population").getOrElse("EUR"),
           arg(args, "--build").getOrElse("grch37"))
         val assigned = graft.ingest.LdBlocks.assignBlocks(variants, blocks,
@@ -887,6 +604,7 @@ object Graft {
         timings.foreach { case (n, t) => println(f"$n refreshed in $t%.2fs") }
 
       case "load-annotation" =>
+        val vcf = operand(args, verb, "an annotation VCF path")
         // S8: annotation VCF → <db>/anno_<name>/ with the echtvar field
         // config applied (cli.py annotation-load face)
         val name = arg(args, "--name").getOrElse(
@@ -895,7 +613,7 @@ object Graft {
           case Some(p) => graft.ingest.AnnotationLoader.loadFieldConfig(p)
           case None    => sys.error("load-annotation needs --config <json>")
         }
-        val src = graft.ingest.AnnotationLoader.load(spark, args(1), config)
+        val src = graft.ingest.AnnotationLoader.load(spark, vcf, config)
         // a staged replace: a failed load keeps the previous source,
         // which the registry still lists
         WritePlan.rewrite(spark, WritePlan.plain(s"$db/anno_$name"), src)
@@ -904,7 +622,7 @@ object Graft {
         // 130-253` register_source/update_variant_count/list_sources)
         WritePlan.upsert(spark, s"$db/annotation_sources", Seq(AnnotationEntry(
           name, arg(args, "--source-type").getOrElse("vcf"),
-          arg(args, "--version"), args(1),
+          arg(args, "--version"), vcf,
           config.map(_.alias).mkString(","), nSites,
           new java.sql.Timestamp(System.currentTimeMillis()))).toDF(), "name")
         println(s"loaded annotation source $name ($nSites sites, " +
@@ -1005,7 +723,7 @@ object Graft {
         DbFs.subdirNames(s"$db/views").foreach { n =>
           spark.read.parquet(s"$db/views/$n").createOrReplaceTempView(n)
         }
-        val result = spark.sql(args(1))
+        val result = spark.sql(operand(args, verb, "a SQL query"))
         arg(args, "--output") match {
           case Some(p) if arg(args, "--format").contains("json") =>
             graft.sinks.Writers.writeJson(result, p)
@@ -1014,6 +732,7 @@ object Graft {
         }
 
       case "export-plink" | "export-prscs" | "export-ldpred2" | "export-prsice" =>
+        val out = operand(args, verb, "an output path")
         // --study scopes the export to one study's stats (the reference's
         // exports are study-id-scoped, `cli.py:7249-7270`)
         if (!DbFs.exists(tbl(db, "gwas_stats")))
@@ -1036,7 +755,7 @@ object Graft {
           minInfo = arg(args, "--min-info").map(_.toDouble),
           minMaf = arg(args, "--min-maf").map(_.toDouble))
         val vSel = variants.select("variant_id", "chrom", "pos", "rs_id")
-        val out = verb match {
+        val rows = verb match {
           case "export-plink"   => graft.export.PrsFormats.plinkScore(stats, vSel, vf)
           case "export-prscs"   => graft.export.PrsFormats.prsCs(stats, vSel, vf = vf)
           case "export-ldpred2" => graft.export.PrsFormats.ldpred2(stats, vSel,
@@ -1044,910 +763,29 @@ object Graft {
             arg(args, "--sample-size").map(_.toLong), vf)
           case _                => graft.export.PrsFormats.prsice2(stats, vSel, vf)
         }
-        graft.sinks.Writers.writeTsv(out, args(1))
+        graft.sinks.Writers.writeTsv(rows, out)
         // count from the written TSV — don't re-run the export joins
         val nOut = spark.read.option("sep", "\t").option("header", "true")
-          .csv(args(1)).count()
-        println(s"exported $nOut rows to ${args(1)}")
+          .csv(out).count()
+        println(s"exported $nOut rows to $out")
 
-      case "audit-verify" =>
-        // the reference's `audit verify` face (`cli.py:2422-2500`):
-        // recompute every entry's hash against its predecessor's; any
-        // mismatch means the log was edited after the fact. Nonzero exit
-        // on tampering, as the reference documents.
-        // AuditLog.read, not a bare parquet read: a crash between the
-        // lock-file creation and the first parquet append leaves a
-        // directory holding only the .append.lock dotfile, which a bare
-        // read fails to infer a schema from
-        // `--start-date`/`--end-date` window the REPORT on event dates
-        // (`cli.py:2424-2426`; optional here where the reference requires
-        // them — unwindowed = whole log, a documented superset). The
-        // chain is verified WHOLE and the verdicts then windowed: each
-        // in-window entry's verdict matches the reference's
-        // seeded-subchain walk (`integrity.py:157-244` seeds from the
-        // entry before the window), and whole-log verification is
-        // strictly stronger. `--json` emits the IntegrityReport dict
-        // shape (`integrity.py:52-73`).
-        val vStart = arg(args, "--start-date")
-        val vEnd = arg(args, "--end-date")
-        (vStart.toSeq ++ vEnd).foreach { d =>
-          if (!d.matches("""\d{4}-\d{2}-\d{2}"""))
-            sys.error(s"--start-date/--end-date must be YYYY-MM-DD: $d")
-        }
-        val vJson = has(args, "--json")
-        val auditDf = new graft.audit.Audit.AuditLog(spark, s"$db/audit_log").read()
-        if (auditDf.isEmpty) {
-          if (vJson)
-            println(s"""{"start_date":${vStart.map(Json.str(_)).getOrElse("null")},""" +
-              s""""end_date":${vEnd.map(Json.str(_)).getOrElse("null")},""" +
-              """"total_entries":0,"verified_entries":0,"is_valid":true,""" +
-              """"coverage_percent":100.0,"violation_count":0,""" +
-              """"violations":[],"first_entry_hash":null,""" +
-              s""""last_entry_hash":null,"verification_time":${Json.str(
-                java.time.Instant.now().toString)}}""")
-          else println("no audit log")
-        }
-        else {
-          val all = graft.audit.Audit.verifyChain(auditDf)
-            .select($"audit_id", $"event_type", $"event_time", $"chain_valid",
-              $"duplicate_id", $"entry_hash", $"content_ok")
-            .orderBy($"audit_id")
-            .collect()
-          // event_time is an ISO-8601 instant: first 10 chars = UTC date
-          def inWindow(t: String): Boolean = {
-            val d = t.take(10)
-            vStart.forall(d >= _) && vEnd.forall(d <= _)
-          }
-          val checked = all.filter(r => inWindow(r.getString(2)))
-          val bad = checked.filterNot(_.getAs[Boolean]("chain_valid"))
-          if (vJson) {
-            // violation vocabulary per `integrity.py:14-18`: an EDITED
-            // entry (its recomputed hash disagrees with the stored one)
-            // is a hash_mismatch; a fork or a missing predecessor — the
-            // row's own content verifies but its link does not — is a
-            // chain_broken; capped at 100 like to_dict
-            val viol = bad.take(100).map { r =>
-              val dup = r.getAs[Boolean]("duplicate_id")
-              val edited = !r.getAs[Boolean]("content_ok")
-              val (status, msg) =
-                if (edited) ("hash_mismatch",
-                  "entry hash does not verify against content and predecessor")
-                else if (dup) ("chain_broken",
-                  "duplicate audit_id (concurrent append fork)")
-                else ("chain_broken",
-                  "no predecessor entry carries the claimed previous_hash " +
-                    "(deleted or spliced-out entry)")
-              s"""{"audit_id":${r.getLong(0)},"event_time":${Json.str(r.getString(2))},""" +
-                s""""status":${Json.str(status)},"message":${Json.str(msg)}}"""
-            }.mkString("[", ",", "]")
-            println(s"""{"start_date":${vStart.orElse(checked.headOption.map(
-                _.getString(2).take(10))).map(Json.str(_)).getOrElse("null")},""" +
-              s""""end_date":${vEnd.orElse(checked.lastOption.map(
-                _.getString(2).take(10))).map(Json.str(_)).getOrElse("null")},""" +
-              s""""total_entries":${checked.length},""" +
-              s""""verified_entries":${checked.length - bad.length},""" +
-              s""""is_valid":${bad.isEmpty},""" +
-              s""""coverage_percent":${if (checked.isEmpty) 100.0
-                else math.round((checked.length - bad.length) * 10000.0 /
-                  checked.length) / 100.0},""" +
-              s""""violation_count":${bad.length},"violations":$viol,""" +
-              s""""first_entry_hash":${checked.headOption.map(r =>
-                Json.str(r.getString(5))).getOrElse("null")},""" +
-              s""""last_entry_hash":${checked.lastOption.map(r =>
-                Json.str(r.getString(5))).getOrElse("null")},""" +
-              s""""verification_time":${Json.str(java.time.Instant.now().toString)}}""")
-            if (bad.nonEmpty)
-              sys.error(s"audit chain verification FAILED: " +
-                s"${bad.length} bad entries")
-          }
-          else if (bad.isEmpty) {
-            val windowNote =
-              if (vStart.isEmpty && vEnd.isEmpty) ""
-              else s" in window ${vStart.getOrElse("…")}..${vEnd.getOrElse("…")}"
-            println(s"audit chain ok (${checked.length} entries$windowNote)")
-          } else {
-            // failure stories named distinctly: an edited row (TAMPERED),
-            // a concurrent-append fork (operational race, not an edit),
-            // and a deleted/spliced-out predecessor (CHAIN BREAK)
-            bad.foreach { r =>
-              val label =
-                if (!r.getAs[Boolean]("content_ok")) "TAMPERED"
-                else if (r.getAs[Boolean]("duplicate_id")) "CONCURRENT APPEND"
-                else "CHAIN BREAK"
-              println(s"$label: audit_id=${r.getLong(0)} " +
-                s"${r.getString(1)} at ${r.getString(2)}")
-            }
-            sys.error(s"audit chain verification FAILED: " +
-              s"${bad.length} bad entries")
-          }
-        }
+      case "audit-verify"        => AuditVerbs.verify(spark, args, db)
+      case "audit-export"        => AuditVerbs.exportLog(spark, args, db)
+      case "audit-verify-backup" => AuditVerbs.verifyBackup(args)
+      case "audit-stats"         => AuditVerbs.stats(spark, db)
 
-      case "audit-export" =>
-        // `audit export` face (`cli.py:2503+` / `integrity.py:254-308`):
-        // the chained log as ONE JSON document with integrity metadata
-        // (entry_count, first/last hash, content checksum), so
-        // `audit-verify-backup` can prove the file untampered offline.
-        // --start/--end window the export on the entries' event dates —
-        // the reference's created_date range (`integrity.py:270-279`);
-        // metadata carries the window and the checksum covers the
-        // exported entries, so a windowed backup verifies the same way.
-        val startDate = arg(args, "--start")
-        val endDate = arg(args, "--end")
-        (startDate.toSeq ++ endDate).foreach { d =>
-          if (!d.matches("""\d{4}-\d{2}-\d{2}"""))
-            sys.error(s"--start/--end must be YYYY-MM-DD: $d")
-        }
-        val exportDf = new graft.audit.Audit.AuditLog(spark, s"$db/audit_log").read()
-        if (exportDf.isEmpty) println("no audit log")
-        else {
-          // event_time is an ISO-8601 instant, so its first 10 chars are
-          // the UTC date and string order IS date order
-          val eventDate = substring($"event_time", 1, 10)
-          val windowed = (startDate, endDate) match {
-            case (Some(s), Some(e)) => exportDf.filter(eventDate.between(s, e))
-            case (Some(s), None)    => exportDf.filter(eventDate >= s)
-            case (None, Some(e))    => exportDf.filter(eventDate <= e)
-            case (None, None)       => exportDf
-          }
-          val entries = windowed.orderBy($"audit_id")
-            .select($"audit_id", $"event_time", $"event_type", $"user_name",
-              $"action", $"success", $"previous_hash", $"entry_hash")
-            .collect() // audit-sized
-            .map(r => graft.audit.Audit.BackupEntry(r.getLong(0),
-              r.getString(1), r.getString(2), r.getString(3), r.getString(4),
-              r.getBoolean(5), r.getString(6), r.getString(7)))
-            .toSeq
-          graft.audit.Audit.writeBackup(entries, args(1), startDate, endDate)
-          val windowNote = (startDate.toSeq ++ endDate) match {
-            case Nil => ""
-            case _   => s" (window ${startDate.getOrElse("…")}" +
-              s"..${endDate.getOrElse("…")})"
-          }
-          println(s"exported ${entries.length} audit entries to ${args(1)}$windowNote")
-        }
+      case "phi-scan"          => PhiVerbs.scan(spark, args, db)
+      case "phi-sanitize"      => PhiVerbs.sanitize(spark, args)
+      case "phi-report"        => PhiVerbs.report(spark, args, db)
+      case "phi-stats"         => PhiVerbs.stats(spark, db)
+      case "phi-patterns-list" => PhiVerbs.patternsList(args, db)
+      case "phi-patterns-add"  => PhiVerbs.patternsAdd(args, db)
+      case "phi-patterns-test" => PhiVerbs.patternsTest(args)
 
-      case "phi-scan" =>
-        // standalone scan face (`cli.py:5465-5507` phi_scan + `:5651-5746`
-        // phi_detect): report PHI in headers, sample names and data rows
-        // WITHOUT loading. A report, not a gate — exit stays zero (the
-        // load verb's --fail-on-phi is the enforcing face). Sampling knobs
-        // match phi_detect's defaults: --sample-rate 1.0, --max-records
-        // unset = every record (`detector.py:159-195` — max_records caps
-        // the SCANNED count and the rate draw filters per record, so the
-        // scan covers the first N records that pass the draw). Unlike the
-        // reference's driver-side line loop, the data-row sweep is a
-        // distributed flatMap + groupBy — an unbounded full-file scan must
-        // not collect the file to the driver.
-        val vcf = args(1)
-        // DbFs, not java.io: the load verb accepts scheme-addressed VCFs
-        // through Hadoop IO, so the scan face must accept the same inputs
-        // (a user who loaded hdfs://x.vcf can phi-scan it)
-        if (!DbFs.exists(vcf))
-          sys.error(s"VCF file not found: $vcf")
-        val sampleRate = arg(args, "--sample-rate").map(_.toDouble).getOrElse(1.0)
-        if (sampleRate <= 0.0 || sampleRate > 1.0)
-          sys.error(s"--sample-rate must be in (0.0, 1.0]: $sampleRate")
-        val maxRecords = arg(args, "--max-records").map(_.toInt)
-        // output + coverage knobs matching phi detect (`cli.py:5659-5663`):
-        // --json emits the reference's report shape; --scan-headers is the
-        // default, --no-scan-headers restricts the scan to data records
-        val jsonOut = has(args, "--json")
-        val scanHeaders = !has(args, "--no-scan-headers")
-        // custom registry: explicit --patterns-config, else the per-db
-        // registry phi-patterns-add writes (when a --db was given and the
-        // file exists) — the reference persists to a config file the later
-        // scan loads (`cli.py:5857+`, `patterns.py:224-240`)
-        val custom = customPhiPatterns(args, db,
-          consultDbRegistry = arg(args, "--db").isDefined)
-        // name-keyed merge, custom wins — see the load verb's scan
-        val registry = graft.transform.PhiSanitizer.mergedRegistry(custom)
-        val allPats = registry.map(p => (p.regex, p.name))
-        // detector-parity envelope (`detector.py:99-125,160-214`): every
-        // detection carries its 1-based file line, ±20-char context and a
-        // masked value — both the text face and --json render from it
-        val headerLines = graft.vcf.VcfHeader.readHeaderLines(spark, vcf)
-        val headerFindings: Seq[graft.transform.PhiSanitizer.DetectionAt] =
-          if (!scanHeaders) Nil
-          else headerLines.zipWithIndex.flatMap { case (l, i) =>
-            graft.transform.PhiSanitizer.scanHeaderLineAt(l, i + 1L, allPats)
-          }
-        val nHeader = headerLines.length
-        val data = spark.read.textFile(vcf).filter(!$"value".startsWith("#"))
-        val recordsTotal = data.count()
-        // data rows carry their file line number (headers all precede
-        // data in a VCF, so header count + 0-based data index + 1 is the
-        // 1-based file line) — zipWithIndex is one extra cheap pass over
-        // the text, still fully distributed
-        val dataAt = spark.createDataset(data.rdd.zipWithIndex.map {
-          case (v, i) => (v, nHeader + i + 1) })
-        // rate draw first, then the scanned-count cap — mirrors the
-        // reference's per-record order; seed fixed so reruns see the same
-        // sample (documented deviation from random.random())
-        val drawn =
-          if (sampleRate < 1.0) dataAt.sample(withReplacement = false, sampleRate, 42L)
-          else dataAt
-        // DETECTIONS are cached, not the sampled text: the regex sweep is
-        // the dominant cost on a full-file scan and three consumers
-        // follow (count, category summary, first-findings) — without the
-        // cache each would re-read the file and re-run every pattern
-        val sampled = maxRecords.map(drawn.limit).getOrElse(drawn)
-        val detections = sampled.flatMap { case (l, ln) =>
-          graft.transform.PhiSanitizer.scanDataLineAt(l, ln, allPats) }
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-        val recordsScanned = sampled.count()
-        val dataSummary = detections.groupBy($"category").count()
-          .as[(String, Long)].collect().toMap
-        // the per-detection list is driver-bounded: the text face prints
-        // 10, the JSON face carries up to 1000 (a detections array beyond
-        // that adds no triage value; summary/severity stay exact). The
-        // reference collects everything — it is single-node anyway.
-        val dataFirst = detections.take(if (jsonOut) 1000 else 10).toSeq
-        val summary = (headerFindings.groupBy(_.category)
-          .map { case (c, fs) => c -> fs.length.toLong } ++
-          dataSummary.map { case (c, n) =>
-            c -> (headerFindings.count(_.category == c).toLong + n) }).toMap
-        val nFindings = summary.values.sum
-        val sevCounts = summary.toSeq
-          .groupBy { case (c, _) =>
-            graft.transform.PhiSanitizer.severityOf(c, registry) }
-          .map { case (s, xs) => s -> xs.map(_._2).sum }
-        // the reference's risk_level (`detector.py:67-77`): worst
-        // severity present, 'none' on a clean scan
-        val risk =
-          if (nFindings == 0) "none"
-          else Seq("critical", "high", "medium", "low")
-            .find(sevCounts.contains).getOrElse("low")
-        if (jsonOut) {
-          // phi detect --json report shape (`cli.py:5685-5712`); our
-          // registry carries no false-positive hints, so the key is an
-          // empty list for shape compatibility
-          val detJson = (headerFindings ++ dataFirst).take(1000).map { d =>
-            s"""{"pattern":${Json.str(d.category)},""" +
-              s""""severity":${Json.str(graft.transform.PhiSanitizer
-                .severityOf(d.category, registry))},""" +
-              s""""location":${Json.str(d.location)},"line":${d.line},""" +
-              s""""masked_value":${Json.str(graft.transform.PhiSanitizer
-                .maskValue(d.value))},""" +
-              s""""context":${Json.str(d.context.take(100))},""" +
-              s""""false_positive_hints":[]}"""
-          }.mkString("[", ",", "]")
-          val sumJson = summary.toSeq.sortBy(_._1)
-            .map { case (c, n) => s"${Json.str(c)}:$n" }.mkString("{", ",", "}")
-          val sevJson = sevCounts.toSeq.sortBy(_._1)
-            .map { case (s, n) => s"${Json.str(s)}:$n" }.mkString("{", ",", "}")
-          println(s"""{"has_phi":${nFindings > 0},"risk_level":${Json.str(risk)},""" +
-            s""""records_scanned":$recordsScanned,""" +
-            s""""records_total":$recordsTotal,"sample_rate":$sampleRate,""" +
-            s""""summary":$sumJson,"severity_summary":$sevJson,""" +
-            s""""detections":$detJson}""")
-        } else if (nFindings == 0) {
-          println("No PHI detected")
-          println(s"Records scanned: $recordsScanned / $recordsTotal")
-        } else {
-          println(s"PHI detected: $nFindings finding(s) (risk level: $risk)")
-          println(s"Records scanned: $recordsScanned / $recordsTotal")
-          println("Summary:")
-          summary.toSeq.sortBy(_._1).foreach {
-            case (cat, n) => println(s"  $cat: $n")
-          }
-          println("Summary by severity:")
-          sevCounts.toSeq.sortBy(_._1).foreach {
-            case (sev, n) => println(s"  $sev: $n")
-          }
-          println("Findings:")
-          (headerFindings ++ dataFirst).take(10).foreach(f =>
-            println(s"  [${f.category}] ${f.location} (line ${f.line}): " +
-              graft.transform.PhiSanitizer.maskValue(f.value)))
-          if (nFindings > 10)
-            println(s"  ... and ${nFindings - 10} more")
-        }
-        } finally detections.unpersist()
-
-      case "phi-sanitize" =>
-        // `phi sanitize` (`cli.py:5510-5573`): write a copy of the VCF
-        // with PHI-bearing header lines redacted; data lines stream
-        // through unchanged. --preview lists the planned redactions
-        // without writing. Driver-side streaming IO over one file — the
-        // same single-node shape as the reference (this is a file
-        // utility, not a table operator).
-        val vcf = args(1)
-        // DbFs, not java.io: same scheme-addressed input contract as load
-        if (!DbFs.exists(vcf))
-          sys.error(s"VCF file not found: $vcf")
-        val conf = spark.sparkContext.hadoopConfiguration
-        val inPath = new org.apache.hadoop.fs.Path(vcf)
-        val fs = inPath.getFileSystem(conf)
-        val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-        def reader() = {
-          val raw = fs.open(inPath)
-          val in = Option(codecs.getCodec(inPath))
-            .map(_.createInputStream(raw): java.io.InputStream).getOrElse(raw)
-          new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-        }
-        if (has(args, "--preview")) {
-          val r = reader()
-          try {
-            var n = 0
-            var line = r.readLine()
-            while (line != null && line.startsWith("#")) {
-              val (_, reds) = graft.transform.PhiSanitizer.sanitizeLine(line)
-              reds.foreach { red => n += 1
-                if (n <= 20) println(s"  [${red.category}] ${red.pattern}") }
-              line = r.readLine()
-            }
-            if (n > 20) println(s"  ... and ${n - 20} more")
-            println(s"Items to sanitize: $n")
-          } finally r.close()
-        } else {
-          // no --output = sanitized content to STDOUT, the reference's
-          // default face (`cli.py:5570-5572`)
-          val outPath = arg(args, "--output")
-          val w = outPath match {
-            case Some(p) =>
-              val oPath = new org.apache.hadoop.fs.Path(p)
-              val rawOut = oPath.getFileSystem(conf).create(oPath, true)
-              val out = Option(codecs.getCodec(oPath))
-                .map(_.createOutputStream(rawOut): java.io.OutputStream)
-                .getOrElse(rawOut)
-              new java.io.BufferedWriter(
-                new java.io.OutputStreamWriter(out, "UTF-8"))
-            case None =>
-              // Console.out, not System.out: test capture and the
-              // reference's stdout semantics both want the VERB's stdout
-              new java.io.BufferedWriter(
-                new java.io.OutputStreamWriter(Console.out, "UTF-8"))
-          }
-          val r = reader()
-          var removed = 0
-          try {
-            var inHeader = true
-            var line = r.readLine()
-            while (line != null) {
-              val toWrite =
-                if (inHeader && line.startsWith("#")) {
-                  val (s, reds) = graft.transform.PhiSanitizer.sanitizeLine(line)
-                  removed += reds.length
-                  s
-                } else { inHeader = false; line }
-              w.write(toWrite); w.newLine()
-              line = r.readLine()
-            }
-          } finally {
-            r.close()
-            // stdout stays open for the session — flush, never close it
-            if (outPath.isDefined) w.close() else w.flush()
-          }
-          outPath.foreach { p =>
-            println(s"Sanitized VCF written to $p")
-            println(s"Removed $removed PHI item(s)")
-          }
-        }
-
-      case "phi-report" =>
-        // `phi report <batch-id>` (`cli.py:5575+`): what the PHI scan
-        // found during that load — served from the ledger row's note
-        // (where the load records scan outcome per batch)
-        val batchId = args(1)
-        if (!DbFs.exists(s"$db/ledger"))
-          sys.error(s"Load batch not found: $batchId")
-        val row = spark.read.parquet(s"$db/ledger")
-          .filter($"load_batch_id" === batchId)
-          .orderBy($"completed_at".desc).limit(1).collect().headOption
-          .getOrElse(sys.error(s"Load batch not found: $batchId"))
-        val note = Option(row.getAs[String]("note")).getOrElse("")
-        // a note carries the --phi-scan outcome and/or the default
-        // header-sanitization clause; either is PHI-relevant here
-        println(s"batch $batchId (${row.getAs[String]("file_path")}): " +
-          (if (note.startsWith("phi_scan") ||
-               note.contains("header_sanitization")) note
-           else "no PHI scan recorded (load ran without --phi-scan)"))
-
-      case "phi-stats" =>
-        // `phi stats` (`cli.py:5377+`): anonymization + scan statistics —
-        // vault size (distinct anonymized ids) and per-batch scan notes
-        val vaultDir = s"$db/phi_vault/sample_id_mapping"
-        val nAnon =
-          if (DbFs.exists(vaultDir))
-            spark.read.parquet(vaultDir).select($"anon_id").distinct().count()
-          else 0L
-        println(s"anonymized_sample_ids=$nAnon")
-        if (DbFs.exists(s"$db/ledger")) {
-          val notes = spark.read.parquet(s"$db/ledger")
-            .filter($"status" === "completed" && $"note".startsWith("phi_scan"))
-            .select($"note").collect().map(_.getString(0))
-          val clean = notes.count(_ == "phi_scan: clean")
-          println(s"loads_scanned=${notes.length} clean=$clean " +
-            s"with_findings=${notes.length - clean}")
-        } else println("loads_scanned=0 clean=0 with_findings=0")
-
-      case "phi-patterns-list" =>
-        // `phi patterns list` (`cli.py:5749-5793`): the detection pattern
-        // registry — builtins plus any custom registry file
-        // (--patterns-config, or the per-db phi_patterns.toml written by
-        // phi-patterns-add). --severity filters like the reference's
-        // get_patterns_by_severity.
-        val custom = customPhiPatterns(args, db,
-          consultDbRegistry = arg(args, "--db").isDefined)
-        // name-keyed, custom wins: a listing must show the ACTIVE registry
-        val all = graft.transform.PhiSanitizer.mergedRegistry(custom)
-        val wanted = arg(args, "--severity") match {
-          case Some(s) =>
-            if (!graft.transform.PhiSanitizer.Severities.contains(s))
-              sys.error(s"Invalid severity: $s. Must be one of: " +
-                graft.transform.PhiSanitizer.Severities.mkString(", "))
-            all.filter(_.severity == s)
-          case None    => all
-        }
-        println(s"PHI detection patterns (${wanted.length} total)")
-        wanted.sortBy(p => (p.severity, p.name)).foreach { p =>
-          println(s"${p.severity}\t${p.name}\t${p.regex.pattern}\t${p.description}")
-        }
-
-      case "phi-patterns-add" =>
-        // `phi patterns add` (`cli.py:5823-5880`): persist a user-defined
-        // pattern into a TOML registry consumed by later scans. Severity
-        // vocabulary and regex compile are validated before anything is
-        // written; the registry file defaults to the per-db
-        // phi_patterns.toml so `phi-scan --db` and `load --phi-scan` pick
-        // the pattern up without an extra flag (the reference's default is
-        // ./phi_patterns.toml + explicit --config on the scan).
-        val name = arg(args, "--name").getOrElse(
-          sys.error("phi-patterns-add needs --name <name>"))
-        val pattern = arg(args, "--pattern").getOrElse(
-          sys.error("phi-patterns-add needs --pattern <regex>"))
-        val severity = arg(args, "--severity").getOrElse(
-          sys.error("phi-patterns-add needs --severity " +
-            "<critical|high|medium|low>"))
-        val description = arg(args, "--description").getOrElse("")
-        val cfg = patternsConfigArg(args).getOrElse {
-          if (arg(args, "--db").isEmpty)
-            sys.error("phi-patterns-add needs --db DIR (per-db registry) " +
-              "or --patterns-config FILE — refusing to write into the " +
-              "shared default db implicitly")
-          s"$db/phi_patterns.toml"
-        }
-        graft.transform.PhiPatternRegistry.append(
-          cfg, name, pattern, severity, description,
-          caseInsensitive = has(args, "--ignore-case"))
-        println(s"Pattern '$name' added to $cfg")
-
-      case "phi-patterns-test" =>
-        // `phi patterns test` (`cli.py:5796-5830`): compile a user regex
-        // and report its matches in the input; invalid patterns fail
-        // with the compile error
-        val pat = arg(args, "--pattern").getOrElse(
-          sys.error("phi-patterns-test needs --pattern <regex>"))
-        val input = arg(args, "--input").getOrElse(
-          sys.error("phi-patterns-test needs --input <text>"))
-        val flags = if (has(args, "--ignore-case"))
-          java.util.regex.Pattern.CASE_INSENSITIVE else 0
-        val compiled =
-          try java.util.regex.Pattern.compile(pat, flags)
-          catch { case e: java.util.regex.PatternSyntaxException =>
-            sys.error(s"Invalid regex pattern: ${e.getMessage}") }
-        val m = compiled.matcher(input)
-        val hits = scala.collection.mutable.ArrayBuffer[String]()
-        while (m.find()) hits += m.group()
-        if (hits.isEmpty) println("no match")
-        else hits.foreach(h => println(s"match: $h"))
-
-      case "audit-verify-backup" =>
-        // `audit verify-backup` (`cli.py:2577-2633`): check an exported
-        // backup file against its embedded checksums; nonzero exit on
-        // mismatch, as the reference documents
-        if (!new java.io.File(args(1)).exists())
-          sys.error(s"File not found: ${args(1)}")
-        val (ok, message) = graft.audit.Audit.verifyBackupFile(args(1))
-        if (ok) println(message)
-        else sys.error(s"Backup verification failed: $message")
-
-      case "audit-stats" =>
-        // `audit stats` face (`cli.py:2636+`): per-verb counts + range
-        val statsDf = new graft.audit.Audit.AuditLog(spark, s"$db/audit_log").read()
-        if (statsDf.isEmpty) println("no audit log")
-        else statsDf
-          .groupBy($"event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(when($"success", 1L).otherwise(0L)).as("n_success"),
-            min($"event_time").as("first_event"),
-            max($"event_time").as("last_event"))
-          .orderBy($"event_type")
-          .show(100, truncate = false)
-
-      // ---- pipeline verbs (r13 verdict next-round #2): the LLM-data
-      // operators get the same verb discipline as the genomics side —
-      // writer lock + audit row (they are in MutatingVerbs: each writes
-      // tables under --db) and a one-line `--json` report. Each verb is
-      // a thin face over the SAME oracle-keyed library calls the p01/
-      // p07/p14-p16 query-catalog entries run, so the verb path produces
-      // byte-identical outputs to the library path (GraftCliSpec pins
-      // this). Not reference surface — the reference has no document
-      // pipeline — so no cli.py citations here.
-
-      case "dedup" =>
-        // dedup CORPUS --db DIR [--method exact|minhash|simhash|embedding]
-        //   [--id-col doc_id] [--text-col text] [--threshold 0.5]
-        //   [--max-hamming 3] [--max-bucket N] [--shingle-k 3]
-        //   [--sig-len 64] [--bands 16] [--planes 12] [--dim 64]
-        //   [--vec-col embedding] [--staged | --use-staged] [--json]
-        // Writes: $db/dedup_corpus (kept docs — the output a training
-        // pipeline feeds downstream), $db/dedup_clusters (membership),
-        // and with --staged the method's derivation store: minhash →
-        // $db/dedup_signatures (the 0.5 KB/doc signature relation the
-        // scale path re-reads instead of re-hashing the corpus),
-        // embedding → $db/dedup_vec_buckets (id, vec, nrm, one bucket
-        // column per band — threshold/bands sweeps re-read it, fewer
-        // bands column-prune). --method embedding dedups a VECTOR
-        // corpus (default --id-col vec_id) by cosine >= --threshold
-        // (default 0.95) over sign-LSH buckets — p12/p18's operator;
-        // size --planes ~ log2(n / targetBucket) and --dim to the TRUE
-        // vector length (an overstated dim degrades bucketing, see
-        // Dedup.embeddingNearDup). --bands (1..dim/planes) is the
-        // embedding recall dial (disjoint-component bands, recall
-        // 1-(1-r)^bands at ~bands x candidate volume); for minhash it
-        // keeps its signature-banding meaning (default 16).
-        val corpusPath = positionalPath(args, "dedup", "CORPUS")
-        val method = arg(args, "--method").getOrElse("exact")
-        val idCol = arg(args, "--id-col").getOrElse(
-          if (method == "embedding") "vec_id" else "doc_id")
-        val textCol = arg(args, "--text-col").getOrElse("text")
-        val maxBucket = arg(args, "--max-bucket").map(_.toInt)
-        // --staged persists the method's re-readable derivation store
-        // (minhash: signatures; embedding: per-band buckets + norms);
-        // --use-staged derives pairs from the EXISTING store without
-        // re-staging — the sweep workflow (stage once at max dials,
-        // then threshold/bands sweeps re-read the store; a re-run with
-        // --staged would instead overwrite it at the new dials).
-        // exact/simhash have no such store — rejecting beats a silent
-        // no-op the caller believes landed
-        val stagedStoreMethods = Set("minhash", "embedding")
-        if (has(args, "--staged") && !stagedStoreMethods(method))
-          sys.error(s"dedup: --staged applies to --method minhash or " +
-            s"embedding only (got --method $method)")
-        if (has(args, "--use-staged") && !stagedStoreMethods(method))
-          sys.error(s"dedup: --use-staged applies to --method minhash " +
-            s"or embedding only (got --method $method)")
-        if (has(args, "--use-staged") && has(args, "--staged"))
-          sys.error("dedup: pick one of --staged (re-stage the store, " +
-            "then derive) or --use-staged (derive from the existing " +
-            "store without touching it)")
-        // --use-staged derives at the dials the store was STAGED with:
-        // embedding buckets fix --planes/--dim, minhash signatures fix
-        // --sig-len/--shingle-k. An explicit flag for a store-fixed
-        // dial would be silently overridden by the store — reject it
-        // (same class as the storeless-method guard above; r16
-        // advisory). The sweep dials — --threshold, --bands,
-        // --max-bucket — stay live.
-        if (has(args, "--use-staged")) {
-          val storeFixed =
-            if (method == "embedding") Seq("--planes", "--dim")
-            else Seq("--sig-len", "--shingle-k")
-          for (f <- storeFixed if arg(args, f).isDefined)
-            sys.error(s"dedup: $f is fixed by the staged store and " +
-              "would be ignored with --use-staged — re-stage with " +
-              s"--staged $f ... to change it (sweep dials: " +
-              "--threshold, --bands, --max-bucket)")
-        }
-        def stagedStore(table: String, stageHint: String): String = {
-          val src = tbl(db, table)
-          if (!graft.sinks.DbFs.exists(src))
-            sys.error(s"dedup: --use-staged found no $table under $db " +
-              s"— run `dedup ... $stageHint --staged` once to stage it")
-          src
-        }
-        // --staged: replace the store with the relation a later
-        // --use-staged sweep derives from
-        def stage(table: String, rows: DataFrame): Unit =
-          WritePlan.rewrite(spark, WritePlan.Family(
-            WritePlan.Sink(s"$db/$table",
-              (d, p, _) => graft.pipeline.Dedup.writeSignatures(d, p))), rows)
-        val corpus = spark.read.parquet(corpusPath)
-        // Single-pass report (r14 verdict #3): the input size is
-        // observed on the corpus scan that feeds the kept write
-        // (CollectMetrics is row-transparent, so the kept plan is
-        // byte-identical), and output sizes are observed on the written
-        // relations — no count() pre-pass over the input and no re-read
-        // of the outputs after the swap.
-        val obsIn = org.apache.spark.sql.Observation("dedup_in")
-        val obsKept = org.apache.spark.sql.Observation("dedup_kept")
-        val obsCl = org.apache.spark.sql.Observation("dedup_clusters")
-        val counted = corpus.observe(obsIn, count(lit(1)).as("n"))
-        import graft.pipeline.Dedup
-        // Note on the two writes below (r14 advisory): clusterPairs
-        // returns a localCheckpoint-BACKED relation (labels materialize
-        // eagerly each round), so writing `clusters` and deriving `kept`
-        // from it share ONE execution of the candidate-pair shuffle and
-        // the iterative clustering — neither write re-runs the pair DAG.
-        val (kept, clusters) = method match {
-          case "exact" =>
-            // clusters re-expressed in the near-dup (doc_id, cluster_id)
-            // membership shape — same contract as clusterPairs: only
-            // docs in a >1-member group appear, cluster_id = min id
-            (Dedup.exactDedup(counted, textCol, idCol),
-             Dedup.exactDupClusters(corpus, textCol, idCol)
-               .select(explode($"doc_ids").as("doc_id"),
-                 array_min($"doc_ids").as("cluster_id")))
-          case "minhash" =>
-            val shingleK = arg(args, "--shingle-k").map(_.toInt).getOrElse(3)
-            val sigLen = arg(args, "--sig-len").map(_.toInt).getOrElse(64)
-            val bands = arg(args, "--bands").map(_.toInt).getOrElse(16)
-            val threshold =
-              arg(args, "--threshold").map(_.toDouble).getOrElse(0.5)
-            // live / --staged: the width is sigLen, known up front —
-            // reject a too-wide --bands before the signature job runs
-            // (--use-staged checks against the store-probed width below)
-            if (!has(args, "--use-staged") && (bands < 1 || bands > sigLen))
-              sys.error(s"dedup: --bands $bands out of range for " +
-                s"--sig-len $sigLen — need 1 <= bands <= sig-len " +
-                "(an over-wide banding slices empty bands where every " +
-                "document collides)")
-            val pairs = if (has(args, "--use-staged")) {
-              val sigs = spark.read.parquet(
-                stagedStore("dedup_signatures", "--method minhash"))
-              // the stored signature width IS the dial (explicit
-              // --sig-len is rejected above): the store decides
-              // rowsPerBand, so a store staged at 128 hashes sweeps
-              // correctly with no flag. O(1) probe (one row); the
-              // default only survives on an empty store, where there
-              // are no pairs either way.
-              val stored = sigs.select(size(col("_sig")).as("n"))
-                .limit(1).collect()
-              val storedLen =
-                if (stored.nonEmpty) stored(0).getInt(0) else sigLen
-              // --bands stays a live sweep dial, but it sweeps WITHIN
-              // the stored width: more bands than stored hashes would
-              // slice empty bands where every doc collides (the Dedup
-              // require catches it too; fail here with the store's
-              // width in the message, before any job runs)
-              if (bands > storedLen)
-                sys.error(s"dedup: --bands $bands exceeds the staged " +
-                  s"signature width $storedLen — sweep with --bands <= " +
-                  s"$storedLen, or re-stage wider with " +
-                  s"--staged --sig-len N")
-              Dedup.minhashCandidatePairsFromSignatures(
-                sigs, idCol, "_sig", storedLen, bands, maxBucket)
-            } else if (has(args, "--staged")) {
-              stage("dedup_signatures", Dedup.minhashSignatures(corpus,
-                textCol, idCol, shingleK, sigLen))
-              Dedup.minhashCandidatePairsFromSignatures(
-                spark.read.parquet(tbl(db, "dedup_signatures")), idCol,
-                "_sig", sigLen, bands, maxBucket)
-            } else Dedup.minhashCandidatePairs(corpus, textCol, idCol,
-              shingleK, sigLen, bands, maxBucket)
-            val cl = Dedup.clusterPairs(
-              pairs.filter($"est_jaccard" >= threshold))
-            (Dedup.dropNearDuplicates(counted, cl, idCol), cl)
-          case "simhash" =>
-            val maxHamming =
-              arg(args, "--max-hamming").map(_.toInt).getOrElse(3)
-            val cl = Dedup.clusterPairs(
-              Dedup.simhashPairs(corpus, textCol, idCol, maxHamming,
-                maxBucket))
-            (Dedup.dropNearDuplicates(counted, cl, idCol), cl)
-          case "embedding" =>
-            val planes = arg(args, "--planes").map(_.toInt).getOrElse(12)
-            val dim = arg(args, "--dim").map(_.toInt).getOrElse(64)
-            val vecCol = arg(args, "--vec-col").getOrElse("embedding")
-            val threshold =
-              arg(args, "--threshold").map(_.toDouble).getOrElse(0.95)
-            // --bands: the measured recall dial (1−(1−r)^bands over
-            // disjoint component sets) at ~bands× candidate volume
-            val bands = arg(args, "--bands").map(_.toInt).getOrElse(1)
-            val pairs = if (has(args, "--use-staged")) {
-              // the sweep path: derive pairs from the store staged by a
-              // previous --staged run. An explicit --bands selects the
-              // first N staged bands (column-pruning the rest at the
-              // scan); without it, every staged band is used.
-              Dedup.embeddingNearDupFromBuckets(
-                spark.read.parquet(
-                  stagedStore("dedup_vec_buckets", "--method embedding")),
-                threshold, idCol, vecCol, maxBucket,
-                bands = arg(args, "--bands").map(_.toInt))
-            } else if (has(args, "--staged")) {
-              // stage the (id, vec, nrm, bucket_0..bands-1) relation —
-              // minhash's signature-store discipline for vectors: a
-              // later threshold/bands sweep (--use-staged) re-reads
-              // this pruned columnar relation (fewer --bands
-              // column-prune the unused buckets) instead of
-              // re-scanning the corpus
-              stage("dedup_vec_buckets", Dedup.embeddingBuckets(corpus,
-                idCol, vecCol, planes, dim, bands))
-              Dedup.embeddingNearDupFromBuckets(
-                spark.read.parquet(tbl(db, "dedup_vec_buckets")),
-                threshold, idCol, vecCol, maxBucket)
-            } else Dedup.embeddingNearDup(corpus, threshold, idCol,
-              vecCol, planes, dim, maxBucket, bands)
-            val cl = Dedup.clusterPairs(pairs)
-            (Dedup.dropNearDuplicates(counted, cl, idCol), cl)
-          case other => sys.error(s"dedup: unknown --method $other " +
-            "(expected exact|minhash|simhash|embedding)")
-        }
-        WritePlan.rewrite(spark, Seq(
-          WritePlan.plain(s"$db/dedup_corpus") ->
-            kept.observe(obsKept, count(lit(1)).as("n")),
-          WritePlan.plain(s"$db/dedup_clusters") ->
-            clusters.observe(obsCl, count(lit(1)).as("n"))))
-        val nDocs = obsIn.get("n").asInstanceOf[Long]
-        val nKept = obsKept.get("n").asInstanceOf[Long]
-        val nClustered = obsCl.get("n").asInstanceOf[Long]
-        if (has(args, "--json"))
-          println(s"""{"method":${Json.str(method)},"docs":$nDocs,""" +
-            s""""kept":$nKept,"dropped":${nDocs - nKept},""" +
-            s""""clustered_docs":$nClustered}""")
-        else println(s"dedup($method): $nDocs docs -> $nKept kept " +
-          s"(${nDocs - nKept} dropped, $nClustered in clusters)")
-
-      case "ann-topk" =>
-        // ann-topk --corpus P --queries P --db DIR [--mode brute|lsh|ivf]
-        //   [--k 10] [--planes 12] [--ncentroids 64] [--nprobe 4]
-        //   [--trained] [--id-col vec_id] [--vec-col embedding] [--json]
-        // Writes $db/ann_topk (query_id, neighbor_id, cosine, rank).
-        // --trained runs the k-means quantizer (DEPLOY: the sampled
-        // fallback loses on cluster-ordered ids).
-        val corpusPath = arg(args, "--corpus").getOrElse(
-          sys.error("ann-topk needs --corpus PARQUET"))
-        val queriesPath = arg(args, "--queries").getOrElse(
-          sys.error("ann-topk needs --queries PARQUET"))
-        val mode = arg(args, "--mode").getOrElse("brute")
-        val k = arg(args, "--k").map(_.toInt).getOrElse(10)
-        val idCol = arg(args, "--id-col").getOrElse("vec_id")
-        val vecCol = arg(args, "--vec-col").getOrElse("embedding")
-        def shaped(p: String) = spark.read.parquet(p)
-          .select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-        val corpus = shaped(corpusPath)
-        val queries = shaped(queriesPath)
-        import graft.pipeline.Similarity
-        val topk = mode match {
-          case "brute" => Similarity.bruteForceTopK(corpus, queries, k)
-          case "lsh" => Similarity.lshTopK(corpus, queries, k,
-            planes = arg(args, "--planes").map(_.toInt).getOrElse(12))
-          case "ivf" =>
-            val nCentroids =
-              arg(args, "--ncentroids").map(_.toInt).getOrElse(64)
-            val cents = if (has(args, "--trained"))
-              Some(Similarity.kmeansCentroids(corpus, nCentroids))
-            else None
-            Similarity.ivfTopK(corpus, queries, k, nCentroids = nCentroids,
-              nProbe = arg(args, "--nprobe").map(_.toInt).getOrElse(4),
-              centroids = cents)
-          case other => sys.error(s"ann-topk: unknown --mode $other " +
-            "(expected brute|lsh|ivf)")
-        }
-        // Single-pass report (r14 verdict #3): rows observed during the
-        // write; "queries" = rank-1 rows (every query with >=1 neighbor
-        // ranks from 1, so rank=1 rows == distinct query_ids in the
-        // output) — an exact count with no distinct and no output
-        // re-read. sum(when) is null on an empty output, hence the
-        // Option guard.
-        val obs = org.apache.spark.sql.Observation("ann_topk")
-        WritePlan.rewrite(spark, WritePlan.plain(s"$db/ann_topk"),
-          topk.observe(obs, count(lit(1)).as("rows"),
-            sum(when($"rank" === 1, 1L).otherwise(0L)).as("queries")))
-        val m = obs.get
-        val nRows = m("rows").asInstanceOf[Long]
-        val nQ = Option(m("queries")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        if (has(args, "--json"))
-          println(s"""{"mode":${Json.str(mode)},"k":$k,"queries":$nQ,""" +
-            s""""rows":$nRows}""")
-        else println(s"ann-topk($mode): $nQ queries, k=$k, $nRows rows")
-
-      case "text-quality" =>
-        // text-quality CORPUS --db DIR [--id-col doc_id] [--text-col text]
-        //   [--min-quality Q] [--min-lang-margin M] [--json]
-        // Writes $db/text_quality: the C4/Gopher-style quality ratios +
-        // language id with margin + fingerprint + token counts — the
-        // per-doc relation a corpus-filtering pipeline joins on.
-        // --min-quality additionally stamps a `pass` flag (the corpus
-        // itself is never filtered here: quality scoring is evidence,
-        // dropping is the caller's policy).
-        // --min-lang-margin M surfaces the measured precision dial
-        // (LangIdProbe: latin-vote margin >= 0.10 -> ~0.98 precision;
-        // out-of-set neighbors da->sv at 0.11, cs->pl at 0.035): a
-        // latin-script vote below M is counted as "unknown" in the
-        // REPORT histogram. Report-side only — the written per-doc
-        // relation keeps the raw (lang, lang_margin) pair so callers
-        // apply their own policy, and script-detected labels
-        // (ja/zh/ko/ru/ar, margin = character ratio on a different
-        // scale) are never reclassified.
-        val corpusPath = positionalPath(args, "text-quality", "CORPUS")
-        val idCol = arg(args, "--id-col").getOrElse("doc_id")
-        val textCol = arg(args, "--text-col").getOrElse("text")
-        val minQ = arg(args, "--min-quality").map(_.toDouble).getOrElse(0.5)
-        val minLangMargin = arg(args, "--min-lang-margin").map(_.toDouble)
-        val corpus = spark.read.parquet(corpusPath)
-        import graft.pipeline.TextAnalysis
-        val tq = TextAnalysis.withQuality(corpus, textCol)
-          .withColumn("_lm", TextAnalysis.langIdWithMargin(col(textCol)))
-          .select(col(idCol).as("doc_id"), $"n_chars", $"n_tokens",
-            TextAnalysis.bpeishTokenCount(col(textCol)).as("n_bpeish"),
-            $"mean_token_len", $"punct_ratio", $"upper_ratio",
-            $"stopword_ratio", $"quality_score",
-            $"_lm.lang".as("lang"), $"_lm.lang_margin".as("lang_margin"),
-            TextAnalysis.fingerprint(col(textCol)).as("fingerprint"),
-            ($"quality_score" >= minQ).as("pass"))
-        // Single-pass report (r14 verdict #3): every summary value —
-        // counts, pass count, mean quality, and the language histogram —
-        // is observed DURING the write. langIdWithMargin's label set is
-        // closed (11 latin families + 5 scripts + "unknown"), so the
-        // histogram is a fixed row of conditional counts; the "other"
-        // guard trips loudly if a new label is ever added to the
-        // classifier without registering it here. avg() is null on an
-        // empty corpus — report mean_quality as null instead of the NPE
-        // the old getDouble took (r14 advisory).
-        val latinLangs = Seq("en", "de", "fr", "es", "pt", "it", "nl",
-          "sv", "pl", "tr", "ro")
-        val langs = latinLangs ++
-          Seq("ja", "zh", "ko", "ru", "ar", "unknown")
-        // the histogram's lang under --min-lang-margin: one extra
-        // conditional inside the same observe (still single-pass)
-        val histLang = minLangMargin match {
-          case Some(m) => when($"lang".isin(latinLangs: _*) &&
-            $"lang_margin" < m, "unknown").otherwise($"lang")
-          case None => $"lang"
-        }
-        val obs = org.apache.spark.sql.Observation("text_quality")
-        val aggs = Seq(count(lit(1)).as("n"),
-          sum(when($"pass", 1L).otherwise(0L)).as("n_pass"),
-          avg($"quality_score").as("mean_q")) ++
-          labelHistAggs(langs, histLang, "lang")
-        WritePlan.rewrite(spark, WritePlan.plain(s"$db/text_quality"),
-          tq.observe(obs, aggs.head, aggs.tail: _*))
-        val m = obs.get
-        val n = m("n").asInstanceOf[Long]
-        val nPass = Option(m("n_pass")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        val meanQ = Option(m("mean_q")).map(_.asInstanceOf[Double])
-        val langHist = labelHistRender(langs, "lang", m, byCountDesc = true)
-        if (has(args, "--json"))
-          println(s"""{"docs":$n,"pass":$nPass,""" +
-            meanQ.map(q => "\"mean_quality\":%.4f,".formatLocal(
-              java.util.Locale.ROOT, q))
-              .getOrElse(""""mean_quality":null,""") +
-            s""""min_quality":$minQ,""" +
-            minLangMargin.map(m => s""""min_lang_margin":$m,""")
-              .getOrElse("") +
-            s""""langs":$langHist}""")
-        else println(s"text-quality: $n docs, $nPass pass >= $minQ, " +
-          meanQ.map(q => f"mean quality $q%.3f").getOrElse("mean quality n/a") +
-          minLangMargin.map(m => s", lang margin >= $m").getOrElse("") +
-          s", langs $langHist")
-
-      case "media-features" =>
-        // media-features CORPUS --db DIR [--from-documents] [--json]
-        // Writes $db/media_features (per-payload decode features: JDK
-        // imageio/wav codecs where they exist, the stub seam otherwise —
-        // the `decoder` column records which path each row took).
-        // --from-documents synthesizes the media relation from a
-        // documents table (the p11 demo shape); without it the corpus
-        // must already be MediaRow-shaped parquet.
-        val corpusPath = positionalPath(args, "media-features", "CORPUS")
-        import graft.pipeline.Multimodal
-        val media =
-          if (has(args, "--from-documents"))
-            Multimodal.mediaFromDocuments(spark.read.parquet(corpusPath))
-          else {
-            import spark.implicits._
-            spark.read.parquet(corpusPath).as[Multimodal.MediaRow]
-          }
-        val feats = Multimodal.extractFeatures(media).toDF()
-        // Single-pass report (r14 verdict #3): the decoder label set is
-        // closed by construction (Multimodal assigns only imageio |
-        // wav_pcm | ffmpeg | stub), so the histogram observes fixed
-        // conditional counts during the write; "other" trips loudly if a
-        // decoder is ever added without registering it here.
-        val decoders = Seq("imageio", "wav_pcm", "ffmpeg", "stub")
-        val obs = org.apache.spark.sql.Observation("media_features")
-        val aggs = count(lit(1)).as("n") +:
-          labelHistAggs(decoders, $"decoder", "dec")
-        WritePlan.rewrite(spark, WritePlan.plain(s"$db/media_features"),
-          feats.observe(obs, aggs.head, aggs.tail: _*))
-        val m = obs.get
-        val nMedia = m("n").asInstanceOf[Long]
-        val byDecoder = // decoder asc, as before
-          labelHistRender(decoders, "dec", m, byCountDesc = false)
-        if (has(args, "--json"))
-          println(s"""{"media":$nMedia,"decoders":$byDecoder}""")
-        else println(s"media-features: $nMedia payloads, decoders $byDecoder")
+      case "dedup"          => PipelineVerbs.dedup(spark, args, db)
+      case "ann-topk"       => PipelineVerbs.annTopK(spark, args, db)
+      case "text-quality"   => PipelineVerbs.textQuality(spark, args, db)
+      case "media-features" => PipelineVerbs.mediaFeatures(spark, args, db)
 
       case "benchmark" =>
         // the reference's quick benchmark face (`cli.py:666-762`):
@@ -2031,7 +869,9 @@ object Graft {
     }
   }
 
-  private def usage(): Unit = println(
+  private def usage(): Unit = println(Usage)
+
+  private[graft] val Usage: String =
     """graft <verb> [options]
       |  load <vcf> --db DIR [--no-normalize] [--force-reload] [--min-info-score X]
       |       [--imputation-source minimac4|beagle|impute2|auto]
@@ -2090,5 +930,5 @@ object Graft {
       |       [--id-col C] [--vec-col C] [--json]
       |  text-quality CORPUS --db DIR [--id-col C] [--text-col C]
       |       [--min-quality Q] [--min-lang-margin M] [--json]
-      |  media-features CORPUS --db DIR [--from-documents] [--json]""".stripMargin)
+      |  media-features CORPUS --db DIR [--from-documents] [--json]""".stripMargin
 }

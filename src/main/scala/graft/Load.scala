@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Graft.{arg, customPhiPatterns, has, tbl}
 import graft.sinks.{DbFs, WritePlan}
+import graft.transform.PhiSanitizer
 
 /** The `load` verb (`cli.py:245-497`, `loader.py`): one VCF becomes one
   * batch of the variants table, its covering projections and, with
@@ -17,7 +18,7 @@ object Load {
 
   def run(spark: SparkSession, args: Array[String], db: String): Unit = {
     import spark.implicits._
-    val vcf = args(1)
+    val vcf = Graft.operand(args, "load", "a VCF path")
     // `--report` (`cli.py:282-283,458-497`): a machine-readable JSON
     // load report for scripting — status/variants_loaded/
     // variants_skipped/load_batch_id/file_hash plus elapsed_seconds,
@@ -101,22 +102,26 @@ object Load {
       // the severity resolves to the shadowed builtin's
       val customNames = custom.map(_.name).toSet
       val customPats = custom.map(p => (p.regex, p.name))
-      val allPats = graft.transform.PhiSanitizer.mergedRegistry(custom)
-        .map(p => (p.regex, p.name))
+      val allPats = PhiSanitizer.mergedRegistry(custom).map(p => (p.regex, p.name))
       val headerLines = graft.vcf.VcfHeader.readHeaderLines(spark, vcf)
-      val meta = graft.transform.PhiSanitizer.sanitizeHeader(headerLines)
-        .redactions.filterNot(r => customNames(r.category)).map(r =>
-          graft.transform.PhiSanitizer.Detection(r.pattern, r.category, "HEADER")) ++
-        graft.transform.PhiSanitizer.scanHeaderCustom(headerLines, customPats)
-      val sampleIds = headerLines.filter(_.startsWith("#CHROM"))
-        .flatMap(l => graft.transform.PhiSanitizer.scanChromLine(l, allPats))
+      // ## lines: the builtins through the sanitizer's redaction scan
+      // (the header this load stores), plus the custom patterns; the
+      // #CHROM sample names and the data rows: every pattern
+      val meta = PhiSanitizer.sanitizeHeader(headerLines).redactions
+        .filterNot(r => customNames(r.category))
+        .map(r => (r.category, "HEADER")) ++
+        headerLines.zipWithIndex.flatMap { case (l, i) =>
+          PhiSanitizer.scanHeaderLineAt(l, i + 1L,
+            if (l.startsWith("##")) customPats else allPats)
+        }.map(d => (d.category, d.location))
       val dataRows = spark.read.textFile(vcf)
         .filter(!$"value".startsWith("#")).limit(1000).collect().toSeq
-        .flatMap(l => graft.transform.PhiSanitizer.scanDataLine(l, allPats))
-      val findings = meta ++ sampleIds ++ dataRows
+        .flatMap(l => PhiSanitizer.scanDataLineAt(l, 0L, allPats))
+        .map(d => (d.category, d.location))
+      val findings = meta ++ dataRows
       if (findings.nonEmpty) {
-        val cats = findings.map(_.category).distinct.sorted
-        val where = findings.map(_.context.takeWhile(_ != '[')).distinct.sorted
+        val cats = findings.map(_._1).distinct.sorted
+        val where = findings.map(_._2.takeWhile(_ != '[')).distinct.sorted
         ledgerNote = s"phi_scan: ${findings.length} findings " +
           cats.mkString("(", ",", ")") + " in " + where.mkString(",")
         println(s"WARNING: PHI detected in VCF: ${findings.length} items " +
@@ -205,11 +210,10 @@ object Load {
       // stays the explicit --phi-scan face.
       if (!hipaaOff && !has(args, "--no-scan-headers") &&
           !has(args, "--no-sanitize-headers")) {
-        val rep = graft.transform.PhiSanitizer.sanitizeHeader(header.lines)
+        val rep = PhiSanitizer.sanitizeHeader(header.lines)
         if (rep.redactions.nonEmpty) {
           val sev = rep.redactions.map(r =>
-            graft.transform.PhiSanitizer.severityOf(r.category,
-              graft.transform.PhiSanitizer.mergedRegistry(Nil)))
+            PhiSanitizer.severityOf(r.category, PhiSanitizer.BuiltinRegistry))
           val risk = Seq("critical", "high", "medium", "low")
             .find(sev.contains).getOrElse("low")
           println(s"header sanitization: detected " +

@@ -38,6 +38,9 @@ object Audit {
       completed_at: java.sql.Timestamp,
       note: String = "")     // e.g. PHI-scan outcome (loader.py:275-298)
 
+  /** `n_variants` of a ledger row that records none (a null count). */
+  val UnknownCount: Long = -1L
+
   /** Driver-side single-row parquet append. A 1-row `toDF().write`
     * schedules a full Spark job (~100-250 ms of scheduler + committer
     * overhead) for a metadata-table row; the ledger and audit log append
@@ -120,18 +123,15 @@ object Audit {
   /** Parquet-backed batch ledger (replaces `variant_load_audit`). */
   final class Ledger(spark: SparkSession, dir: String) {
 
-    /** K4 semantics (`loader.py:182-252`): an existing completed batch
-      * with the same file hash means "skip" unless force-reload; on
-      * force, the caller drops the previous batch's rows. Returns the
-      * LATEST completed batch for the hash, if any.
-      *
-      * Read on the driver, row by row, with no Spark job: the ledger is
-      * a few small files (one per driver-side append until a compact),
-      * and every load asks this before any other work. `completed_at`
-      * has two encodings: INT64 micros from [[appendRowDriverSide]],
-      * INT96 from Spark-written files (init-db's empty ledger,
-      * `compact --tables ledger`). */
-    def checkExisting(fileHash: String): Option[String] = {
+    /** Every ledger row, in listing order, read on the driver
+      * row by row with no Spark job: the ledger is a few small files (one
+      * per driver-side append until a compact), and every load asks it
+      * before any other work. `completed_at` has two encodings: INT64
+      * micros from [[appendRowDriverSide]], INT96 from Spark-written
+      * files (init-db's empty ledger, `compact --tables ledger`); an
+      * absent one reads as null. An absent `n_variants` reads as
+      * [[UnknownCount]], an absent `note` as "". */
+    def entries(): Seq[LedgerEntry] = {
       import org.apache.parquet.example.data.Group
       val conf = spark.sparkContext.hadoopConfiguration
       def rows(path: org.apache.hadoop.fs.Path): Seq[Group] = {
@@ -151,26 +151,48 @@ object Audit {
       def has(g: Group, f: String) =
         g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0
       def str(g: Group, f: String) =
-        if (has(g, f)) Some(g.getString(f, 0)) else None
-      // an absent completed_at sorts first, as in a descending SQL sort
-      def micros(g: Group): Long =
-        if (!has(g, "completed_at")) Long.MinValue
-        else if (g.getType.getType("completed_at").asPrimitiveType
-            .getPrimitiveTypeName.name == "INT96") {
-          // 8 bytes nanos-of-day, then 4 bytes Julian day, little-endian
-          val b = java.nio.ByteBuffer.wrap(g.getInt96("completed_at", 0)
-            .getBytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanos = b.getLong
-          (b.getInt - 2440588L) * 86400000000L + nanos / 1000L
-        } else g.getLong("completed_at", 0)
+        if (has(g, f)) g.getString(f, 0) else null
+      def completedAt(g: Group): java.sql.Timestamp =
+        if (!has(g, "completed_at")) null
+        else java.sql.Timestamp.from(java.time.Instant.EPOCH.plus(
+          if (g.getType.getType("completed_at").asPrimitiveType
+              .getPrimitiveTypeName.name == "INT96") {
+            // 8 bytes nanos-of-day, then 4 bytes Julian day, little-endian
+            val b = java.nio.ByteBuffer.wrap(g.getInt96("completed_at", 0)
+              .getBytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+            val nanos = b.getLong
+            (b.getInt - 2440588L) * 86400000000L + nanos / 1000L
+          } else g.getLong("completed_at", 0),
+          java.time.temporal.ChronoUnit.MICROS))
       graft.sinks.DbFs.children(dir).map(_.getPath)
         .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
         .flatMap(rows)
-        .filter(g => str(g, "file_hash").contains(fileHash) &&
-          str(g, "status").contains("completed"))
-        .flatMap(g => str(g, "load_batch_id").map(micros(g) -> _))
-        .maxByOption(_._1).map(_._2)
+        .map(g => LedgerEntry(str(g, "load_batch_id"), str(g, "file_path"),
+          str(g, "file_hash"), str(g, "status"),
+          if (has(g, "n_variants")) g.getLong("n_variants", 0) else UnknownCount,
+          completedAt(g), Option(str(g, "note")).getOrElse("")))
     }
+
+    /** The latest of `rows` by `completed_at`; an absent time sorts
+      * first, as in a descending SQL sort. */
+    private def latest(rows: Seq[LedgerEntry]): Option[LedgerEntry] =
+      rows.maxByOption(e => Option(e.completed_at))
+
+    /** Rows whose load committed. */
+    def completed(): Seq[LedgerEntry] = entries().filter(_.status == "completed")
+
+    /** K4 semantics (`loader.py:182-252`): an existing completed batch
+      * with the same file hash means "skip" unless force-reload; on
+      * force, the caller drops the previous batch's rows. Returns the
+      * LATEST completed batch for the hash, if any. */
+    def checkExisting(fileHash: String): Option[String] =
+      latest(completed().filter(e =>
+        e.file_hash == fileHash && e.load_batch_id != null))
+        .map(_.load_batch_id)
+
+    /** The latest row, whatever its status, written for one batch id. */
+    def latestFor(batchId: String): Option[LedgerEntry] =
+      latest(entries().filter(_.load_batch_id == batchId))
 
     def append(entry: LedgerEntry): Unit =
       appendRowDriverSide(dir, Seq(

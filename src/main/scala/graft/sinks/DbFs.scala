@@ -79,12 +79,6 @@ object DbFs {
     * detection at a table root that is hive-partitioned when healthy.) */
   def hasFlatParquet(dir: String): Boolean = parquetFileCount(dir) > 0
 
-  /** Any data-bearing child at all — a partition subdir or a flat
-    * parquet file? (Marker-only directories answer false.) */
-  def hasData(dir: String): Boolean =
-    children(dir).exists(s =>
-      s.isDirectory || s.getPath.getName.endsWith(".parquet"))
-
   /** Does any `.parquet` file exist anywhere under `dir`? */
   def hasParquetRecursive(dir: String): Boolean = {
     val p = new Path(dir)
@@ -206,6 +200,32 @@ object DbFs {
   def resolveTable(db: String, name: String): String =
     resolvePath(s"$db/$name")
 
+  /** A versioned table's inventory, as tokens: what its
+    * `<table>.current` pointer and `<table>.prev` sidecar name, and every
+    * `<table>.v-<token>` dir beside it. The retention rule is current +
+    * one read-grace copy: the swap GC (Writers) keeps exactly that and
+    * writes `.prev`; `validate` reports and reclaims against it;
+    * [[withReadRetry]] trusts a read of either. */
+  final case class Versions(current: Option[String], prev: Option[String],
+                            dirs: Seq[String]) {
+    def nonCurrent: Seq[String] = dirs.filterNot(current.contains)
+    /** The `.prev` version when it survives; else a SINGLE non-current
+      * version is presumed the grace copy (a swap predating the sidecar,
+      * or a crashed sidecar write). Anything more is crash residue. */
+    def grace: Option[String] = prev.filter(nonCurrent.contains)
+      .orElse(Some(nonCurrent).collect { case Seq(only) => only })
+    def residue: Seq[String] = nonCurrent.filterNot(grace.contains)
+  }
+
+  def versions(table: String): Versions = {
+    def token(path: String) = readString(path).map(_.trim).filter(_.nonEmpty)
+    val p = new Path(table)
+    val prefix = s"${p.getName}.v-"
+    Versions(token(pointerPath(table)), token(s"$table.prev"),
+      children(p.getParent.toString).map(_.getPath.getName)
+        .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix)).sorted)
+  }
+
   /** A read failure caused by files or directories vanishing mid-scan —
     * the versioned-swap residual exposure DEPLOY.md documents: read-grace
     * GC keeps exactly ONE previous version, so a reader whose scan spans
@@ -272,10 +292,8 @@ object DbFs {
           // also answer "empty" for a fully-deleted dir — a missing
           // chrom= partition is a genuine empty — so the vanish would
           // otherwise surface as a silent empty result.)
-          val curNow = resolvePath(table)
-          lazy val graceTok = readString(s"$table.prev").map(_.trim)
           val physTok = phys.substring(phys.lastIndexOf(".v-") + 3)
-          if (phys != curNow && !graceTok.contains(physTok))
+          if (phys != resolvePath(table) && !versions(table).prev.contains(physTok))
             throw new java.io.FileNotFoundException(
               s"version dir $phys left current+grace during read of $table")
         } else if (dangled && resolvePath(table) != table) {

@@ -290,32 +290,21 @@ object Writers {
         // instead (a plain dir coexisting with a pointer would read as
         // an unversioned table; that one migration swap keeps the
         // pre-pointer reader exposure).
-        val dstP = new org.apache.hadoop.fs.Path(dst)
-        val name = dstP.getName
-        val prevName = new org.apache.hadoop.fs.Path(prevPhysical).getName
         val keepPrev: Option[String] =
-          if (prevPhysical != tmp && prevName.startsWith(s"$name.v-"))
-            Some(prevName)
-          else None
+          if (prevPhysical == tmp) None
+          else Some(prevPhysical).filter(_.startsWith(s"$dst.v-"))
+            .map(_.stripPrefix(s"$dst.v-"))
         if (prevPhysical != tmp && keepPrev.isEmpty)
           fs.delete(new org.apache.hadoop.fs.Path(prevPhysical), true)
-        val parent = dstP.getParent
-        if (parent != null) {
-          val stale =
-            try fs.listStatus(parent).toSeq.map(_.getPath.getName)
-              .filter(n => n.startsWith(s"$name.v-") &&
-                n != s"$name.v-$suffix" && !keepPrev.contains(n))
-            catch { case _: java.io.FileNotFoundException => Nil }
-          stale.foreach(n =>
-            fs.delete(new org.apache.hadoop.fs.Path(parent, n), true))
-        }
+        DbFs.versions(dst).dirs
+          .filterNot(t => t == suffix || keepPrev.contains(t))
+          .foreach(t => fs.delete(new org.apache.hadoop.fs.Path(s"$dst.v-$t"), true))
         // record WHICH survivor is the grace copy in a `<table>.prev`
         // sidecar: version tokens are random, so without this a later
         // validate could not tell the deliberate grace copy from crash
         // residue (and could only report counts, not names)
         try keepPrev match {
-          case Some(n) =>
-            DbFs.writeStringAtomic(s"$dst.prev", n.stripPrefix(s"$name.v-"))
+          case Some(t) => DbFs.writeStringAtomic(s"$dst.prev", t)
           case None =>
             fs.delete(new org.apache.hadoop.fs.Path(s"$dst.prev"), false)
         } catch { case scala.util.control.NonFatal(_) => () }

@@ -179,44 +179,11 @@ object PhiSanitizer {
   // FORMAT and per-sample columns). MRN-style sample ids or embedded
   // emails/dates in INFO must be detectable, not just header text.
 
-  final case class Detection(value: String, category: String, context: String)
-
-  /** Run every pattern over one value (`detector.py:61-120`); preserved
-    * tokens are word-boundary matches, not substrings (see sanitizeLine).
-    * Pattern seq defaults to the builtins; phi-scan passes builtins ++
-    * custom registry patterns (`patterns.py:224-240` load_custom_patterns
-    * feeding the detector). */
-  def scanValue(value: String, context: String,
-      patterns: Seq[(Regex, String)] = BuiltinPatterns): Seq[Detection] =
-    // one matching rule set: the envelope form is the single source of
-    // truth; this lighter face just drops the line/context envelope
-    scanValueAt(value, context, 0L, patterns)
-      .map(d => Detection(d.value, d.category, d.location))
-
-  /** Scan the #CHROM column-header line's sample names
-    * (`detector.py:180-186`). */
-  def scanChromLine(line: String,
-      patterns: Seq[(Regex, String)] = BuiltinPatterns): Seq[Detection] = {
-    val parts = line.split("\t", -1)
-    if (!line.startsWith("#CHROM") || parts.length <= 9) Nil
-    else parts.drop(9).toSeq.zipWithIndex.flatMap { case (s, i) =>
-      scanValue(s, s"SAMPLE_ID[$i]", patterns)
-    }
-  }
-
-  /** Scan one data row's PHI-bearing fields: ID, INFO, FORMAT, sample
-    * columns (`detector.py:196-214`). Delegates to the envelope form so
-    * the column rules exist exactly once. */
-  def scanDataLine(line: String,
-      patterns: Seq[(Regex, String)] = BuiltinPatterns): Seq[Detection] =
-    scanDataLineAt(line, 0L, patterns)
-      .map(d => Detection(d.value, d.category, d.location))
-
   /** Detection with the reference detector's full envelope
     * (`phi/detector.py:99-125` scan_value): the 1-based source line
     * number and a ±20-char context window with ellipses. The scan faces
     * that report per-detection locations (phi-scan text + --json) run on
-    * this; the load gate keeps the lighter [[Detection]]. */
+    * this, and so does the load gate. */
   final case class DetectionAt(value: String, category: String,
       location: String, line: Long, context: String)
 
@@ -260,7 +227,7 @@ object PhiSanitizer {
       }
     } else Nil
 
-  /** scanDataLine with the full envelope: ID, INFO, FORMAT and sample
+  /** One data row's PHI-bearing fields: ID, INFO, FORMAT and sample
     * columns (`detector.py:196-214`). */
   def scanDataLineAt(line: String, lineNo: Long,
       patterns: Seq[(Regex, String)]): Seq[DetectionAt] = {
@@ -281,17 +248,4 @@ object PhiSanitizer {
       id ++ info ++ fmt ++ samples
     }
   }
-
-  /** Scan ## meta header lines with EXTRA (custom) patterns only — the
-    * builtin header coverage is sanitizeHeader's redaction scan; this adds
-    * the custom-registry sweep the reference gets for free by feeding one
-    * merged registry into its detector (`detector.py:168-178`). Preserve
-    * semantics match sanitizeLine: reference/assembly provenance lines are
-    * skipped. */
-  def scanHeaderCustom(lines: Seq[String],
-      patterns: Seq[(Regex, String)]): Seq[Detection] =
-    if (patterns.isEmpty) Nil
-    else lines.filter(_.startsWith("##"))
-      .filter(l => PreserveIdRe.findFirstIn(l).isEmpty)
-      .flatMap(l => scanValue(l, "HEADER", patterns))
 }

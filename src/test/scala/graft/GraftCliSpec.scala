@@ -1348,11 +1348,13 @@ class GraftCliSpec extends SparkSpec {
     // data-row PHI (an email smuggled into INFO) is caught by the sampled
     // record scan
     import graft.transform.PhiSanitizer
-    val hits = PhiSanitizer.scanDataLine(
-      "chr1\t100\t.\tA\tT\t50\tPASS\tNOTE=contact bob@example.com\tGT\t0/1")
-    assert(hits.exists(d => d.category == "email" && d.context == "INFO"))
-    assert(PhiSanitizer.scanChromLine(
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tMRN12345")
+    val hits = PhiSanitizer.scanDataLineAt(
+      "chr1\t100\t.\tA\tT\t50\tPASS\tNOTE=contact bob@example.com\tGT\t0/1",
+      0L, PhiSanitizer.BuiltinPatterns)
+    assert(hits.exists(d => d.category == "email" && d.location == "INFO"))
+    assert(PhiSanitizer.scanHeaderLineAt(
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tMRN12345",
+      0L, PhiSanitizer.BuiltinPatterns)
       .exists(_.category == "mrn"))
     // a clean VCF scans clean end-to-end (no false positives on GT rows)
     Graft.run(spark, Array("load", fixture("hapmap3_overlap.vcf"),

@@ -919,7 +919,8 @@ class PhiSanitizerSpec extends org.scalatest.funsuite.AnyFunSuite {
       ("fax", "fax:617-555-0199", "high"),
       ("device_id", "device_id:SN-8812", "medium"))
     probes.foreach { case (cat, text, sev) =>
-      val hits = PhiSanitizer.scanValue(text, "T")
+      val hits = PhiSanitizer.scanValueAt(text, "T", 0L,
+        PhiSanitizer.BuiltinPatterns)
       assert(hits.exists(_.category == cat), s"$cat missed in: $text")
       assert(PhiSanitizer.severityOf(cat, PhiSanitizer.BuiltinRegistry) == sev)
     }
