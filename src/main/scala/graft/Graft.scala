@@ -29,14 +29,38 @@ object Graft {
   }
   private[graft] def has(args: Array[String], flag: String): Boolean = args.contains(flag)
 
+  /** Each verb that takes a positional operand, with what it expects.
+    * `operand` reads the description from here, and `runInner` checks
+    * the operand before any verb body runs — before a mutating verb
+    * takes the writer lock, which creates the db directory. */
+  private[graft] val Operands: Map[String, String] = Map(
+    "load" -> "a VCF path",
+    "lookup" -> "a key (chrom:pos, rsID, or gene:NAME)",
+    "import-gwas" -> "a summary-statistics TSV path",
+    "import-pgs" -> "a PGS scoring-file path",
+    "import-frequencies" -> "a gnomAD-style VCF path",
+    "load-reference" -> "a HapMap3 TSV path",
+    "annotate-ld-blocks" -> "an LD-block BED path",
+    "load-annotation" -> "an annotation VCF path",
+    "annotation-query" -> "a SQL query",
+    "audit-export" -> "an output JSON path",
+    "audit-verify-backup" -> "a backup JSON path",
+    "phi-scan" -> "a VCF path",
+    "phi-sanitize" -> "a VCF path",
+    "phi-report" -> "a load batch id",
+    "dedup" -> "a CORPUS parquet path",
+    "text-quality" -> "a CORPUS parquet path",
+    "media-features" -> "a CORPUS parquet path") ++
+    Seq("export-plink", "export-prscs", "export-ldpred2", "export-prsice")
+      .map(_ -> "an output path")
+
   /** The verb's first positional operand (`args(1)`): a missing
     * operand or a flag in its place is a USAGE error, never a literal
     * path — `export-plink --db X` must not write its TSV to "./--db", and
     * a bare `phi-report` must not throw ArrayIndexOutOfBounds. */
-  private[graft] def operand(args: Array[String], verb: String,
-                             what: String): String = {
+  private[graft] def operand(args: Array[String], verb: String): String = {
     if (args.length < 2 || args(1).startsWith("--"))
-      sys.error(s"$verb expects $what as its first argument")
+      sys.error(s"$verb expects ${Operands(verb)} as its first argument")
     args(1)
   }
 
@@ -169,6 +193,7 @@ object Graft {
 
   private def runInner(spark: SparkSession, args: Array[String]): Unit = {
     val verb = args.head
+    if (Operands.contains(verb)) operand(args, verb)
     val mutates = (MutatingVerbs.contains(verb) &&
       // phi-patterns-add mutates DB state only when the per-db registry
       // is its destination; with an explicit patterns-config file
@@ -238,7 +263,7 @@ object Graft {
         // (`test_query_latency.py:50-153`), served driver-side with no
         // Spark job (PointLookup): `lookup chr1:12345`, `lookup rs123`,
         // or `lookup gene:BRCA2` (the covering gene-index probe)
-        val key = operand(args, verb, "a key (chrom:pos, rsID, or gene:NAME)")
+        val key = operand(args, verb)
         def parsePos(s: String): Long =
           try s.toLong catch {
             case _: NumberFormatException =>
@@ -336,7 +361,7 @@ object Graft {
         println("ok: validation functions registered for the session")
 
       case "import-gwas" =>
-        val tsv = operand(args, verb, "a summary-statistics TSV path")
+        val tsv = operand(args, verb)
         val stats = graft.ingest.GwasReader.read(spark, tsv)
         val matched = graft.ingest.VariantMatching.matchToVariants(stats, variants)
         // J3: harmonize orientation against the matched variant's alleles,
@@ -379,7 +404,7 @@ object Graft {
 
       case "import-pgs" =>
         val (meta, weights) = graft.ingest.PgsReader.read(spark,
-          operand(args, verb, "a PGS scoring-file path"))
+          operand(args, verb))
         val matched = graft.ingest.VariantMatching.matchToVariants(
           weights, variants, chromCol = "chr_name", posCol = "chr_position")
         // per-score replace (weights are pgs_id-stamped by the reader) so
@@ -407,7 +432,7 @@ object Graft {
         val subset = arg(args, "--subset").getOrElse("all")
         val prefix = arg(args, "--prefix").getOrElse("")
         val freqVcf = graft.vcf.VcfReader.variants(spark,
-          operand(args, verb, "a gnomAD-style VCF path"))
+          operand(args, verb))
         val long = graft.transform.PopulationFreq.toLong(
           freqVcf, source = source, prefix = prefix, subset = subset)
         // per-(source,subset) replace — the reference upserts ON CONFLICT
@@ -449,7 +474,7 @@ object Graft {
 
       case "load-reference" =>
         val panel = graft.ingest.RefPanels.hapmap3(spark,
-          operand(args, verb, "a HapMap3 TSV path"))
+          operand(args, verb))
         val flagged = graft.ingest.VariantMatching.flagHapmap3(variants, panel)
         WritePlan.rewrite(spark, WritePlan.variants(db), flagged)
         // count from the WRITTEN parquet (the flag join ran once, in the
@@ -464,7 +489,7 @@ object Graft {
 
       case "annotate-ld-blocks" =>
         val blocks = graft.ingest.RefPanels.ldBlocks(spark,
-          operand(args, verb, "an LD-block BED path"),
+          operand(args, verb),
           arg(args, "--population").getOrElse("EUR"),
           arg(args, "--build").getOrElse("grch37"))
         val assigned = graft.ingest.LdBlocks.assignBlocks(variants, blocks,
@@ -604,7 +629,7 @@ object Graft {
         timings.foreach { case (n, t) => println(f"$n refreshed in $t%.2fs") }
 
       case "load-annotation" =>
-        val vcf = operand(args, verb, "an annotation VCF path")
+        val vcf = operand(args, verb)
         // S8: annotation VCF → <db>/anno_<name>/ with the echtvar field
         // config applied (cli.py annotation-load face)
         val name = arg(args, "--name").getOrElse(
@@ -723,7 +748,7 @@ object Graft {
         DbFs.subdirNames(s"$db/views").foreach { n =>
           spark.read.parquet(s"$db/views/$n").createOrReplaceTempView(n)
         }
-        val result = spark.sql(operand(args, verb, "a SQL query"))
+        val result = spark.sql(operand(args, verb))
         arg(args, "--output") match {
           case Some(p) if arg(args, "--format").contains("json") =>
             graft.sinks.Writers.writeJson(result, p)
@@ -732,7 +757,7 @@ object Graft {
         }
 
       case "export-plink" | "export-prscs" | "export-ldpred2" | "export-prsice" =>
-        val out = operand(args, verb, "an output path")
+        val out = operand(args, verb)
         // --study scopes the export to one study's stats (the reference's
         // exports are study-id-scoped, `cli.py:7249-7270`)
         if (!DbFs.exists(tbl(db, "gwas_stats")))

@@ -18,7 +18,7 @@ object Load {
 
   def run(spark: SparkSession, args: Array[String], db: String): Unit = {
     import spark.implicits._
-    val vcf = Graft.operand(args, "load", "a VCF path")
+    val vcf = Graft.operand(args, "load")
     // `--report` (`cli.py:282-283,458-497`): a machine-readable JSON
     // load report for scripting — status/variants_loaded/
     // variants_skipped/load_batch_id/file_hash plus elapsed_seconds,

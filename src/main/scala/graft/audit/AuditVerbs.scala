@@ -23,7 +23,9 @@ object AuditVerbs {
       val d = eventTime.take(10)
       start.forall(d >= _) && end.forall(d <= _)
     }
-    def span: String = s"${start.getOrElse("…")}..${end.getOrElse("…")}"
+    /** ISO 8601-2's interval form, an open bound left empty
+      * (`2026-08-11..`) — ASCII, so any stdout encoding prints it. */
+    def span: String = s"${start.getOrElse("")}..${end.getOrElse("")}"
   }
 
   /** The window two flags name, both YYYY-MM-DD, rejected before any
@@ -130,7 +132,7 @@ object AuditVerbs {
     * verifies the same way. */
   def exportLog(spark: SparkSession, args: Array[String], db: String): Unit = {
     import spark.implicits._
-    val out = operand(args, "audit-export", "an output JSON path")
+    val out = operand(args, "audit-export")
     val w = dateWindow(args, "--start", "--end")
     val exportDf = log(spark, db)
     if (exportDf.isEmpty) { println("no audit log"); return }
@@ -152,7 +154,7 @@ object AuditVerbs {
     * backup file against its embedded checksums; nonzero exit on
     * mismatch. */
   def verifyBackup(args: Array[String]): Unit = {
-    val path = operand(args, "audit-verify-backup", "a backup JSON path")
+    val path = operand(args, "audit-verify-backup")
     if (!new java.io.File(path).exists()) sys.error(s"File not found: $path")
     val (ok, message) = Audit.verifyBackupFile(path)
     if (ok) println(message)

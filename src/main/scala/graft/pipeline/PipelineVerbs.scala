@@ -89,7 +89,7 @@ object PipelineVerbs {
     * keeps its signature-banding meaning (default 16). */
   def dedup(spark: SparkSession, args: Array[String], db: String): Unit = {
     import spark.implicits._
-    val corpusPath = operand(args, "dedup", "a CORPUS parquet path")
+    val corpusPath = operand(args, "dedup")
     val method = arg(args, "--method").getOrElse("exact")
     val idCol = arg(args, "--id-col").getOrElse(
       if (method == "embedding") "vec_id" else "doc_id")
@@ -341,7 +341,7 @@ object PipelineVerbs {
     * scale) are never reclassified. */
   def textQuality(spark: SparkSession, args: Array[String], db: String): Unit = {
     import spark.implicits._
-    val corpusPath = operand(args, "text-quality", "a CORPUS parquet path")
+    val corpusPath = operand(args, "text-quality")
     val idCol = arg(args, "--id-col").getOrElse("doc_id")
     val textCol = arg(args, "--text-col").getOrElse("text")
     val minQ = arg(args, "--min-quality").map(_.toDouble).getOrElse(0.5)
@@ -408,7 +408,7 @@ object PipelineVerbs {
     * must already be MediaRow-shaped parquet. */
   def mediaFeatures(spark: SparkSession, args: Array[String], db: String): Unit = {
     import spark.implicits._
-    val corpusPath = operand(args, "media-features", "a CORPUS parquet path")
+    val corpusPath = operand(args, "media-features")
     val media =
       if (has(args, "--from-documents"))
         Multimodal.mediaFromDocuments(spark.read.parquet(corpusPath))

@@ -15,10 +15,12 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.internal.column.columnindex.{ColumnIndex, OffsetIndex}
-import org.apache.parquet.internal.filter2.columnindex.{ColumnIndexFilter, ColumnIndexStore}
+import org.apache.parquet.internal.filter2.columnindex.{ColumnIndexFilter, ColumnIndexStore, RowRanges}
 import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO}
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
+
+import graft.sinks.Writers
 
 /** Driver-side point lookups on the parquet store — the serving-layer
   * analogue of the reference's indexed point SELECTs
@@ -40,19 +42,20 @@ import org.apache.spark.sql.SparkSession
   *
   * Per-probe costs are amortized the way Postgres amortizes them in
   * shared buffers:
-  *   - the Hadoop Configuration is built once (newHadoopConf copies the
-  *     whole Spark conf — milliseconds, pure overhead per probe);
+  *   - probes read through the SparkContext's Hadoop configuration, the
+  *     one every other driver-side reader and writer of the store uses;
   *   - directory listings are cached keyed by the directory's mtime
   *     (store swaps replace the directory, appends touch it — both bump
   *     mtime, so staleness is visible from one getFileStatus call);
-  *   - file footers are cached keyed by (mtime, length) — parquet files
+  *   - one file cache holds each file's metadata (footer, page indexes,
+  *     record-assembly tree) keyed by (mtime, length) — parquet files
   *     are write-once, a rewritten file gets a new identity;
   *   - before any stream is opened, the cached footer's row-group
   *     min/max statistics are tested against the probed key, so only
   *     the 1–2 candidate files that can contain it are ever opened.
-  * Both caches are bounded LRU (a long-lived serving session over a
-  * store that is swapped repeatedly must not accumulate entries for
-  * dead files).
+  * Both caches are LRUs of fixed capacity (a long-lived serving session
+  * over a store that is swapped repeatedly must not accumulate entries
+  * for dead files).
   *
   * Scale note: latency is O(files-in-one-partition-directory) for the
   * listing + footer-prune step and O(row-group) for the read, flat in
@@ -167,7 +170,7 @@ object PointLookup {
     graft.sinks.DbFs.withReadRetry(genotypes0) { genotypes =>
     val root = new Path(genotypes)
     val hiveDir = new Path(root, s"chrom=$chrom")
-    val fs = root.getFileSystem(hadoopConf(spark))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one metadata call decides the layout; a missing chrom dir on a
     // hive-layout table is a genuine empty answer, not a flat table
     val isHive = fs.exists(hiveDir) || {
@@ -204,28 +207,6 @@ object PointLookup {
           size() > maxEntries
       })
 
-  /** Cache capacities are system properties (read once at class load) so
-    * a long-lived serving driver over many stores can size them to its
-    * heap: footers are ~10-100 KB each, page indexes ~100 KB per file,
-    * listings a few KB per directory. Defaults fit a single-db server in
-    * a few hundred MB; a multi-tenant driver fronting hundreds of stores
-    * raises them, a memory-tight one lowers them. */
-  private def cacheEntries(prop: String, default: Int): Int =
-    sys.props.get(prop).flatMap(_.toIntOption).filter(_ > 0).getOrElse(default)
-
-  /** One Hadoop conf per SESSION: newHadoopConf() clones the full Spark
-    * conf (milliseconds, pure overhead per probe) and the result is
-    * identical across probes of the same session — but NOT across
-    * sessions, so the cache keys on the session rather than holding one
-    * JVM-wide slot (a later session with different Hadoop settings must
-    * not probe with the first session's configuration). */
-  private val confCache = lru[SparkSession, Configuration](8)
-  private def hadoopConf(spark: SparkSession): Configuration = {
-    var c = confCache.get(spark)
-    if (c == null) { c = spark.sessionState.newHadoopConf(); confCache.put(spark, c) }
-    c
-  }
-
   /** Directory listing cache: dir path -> (dir mtime, parquet files).
     * Swaps replace the directory and appends add files — both change the
     * directory mtime, so one getFileStatus validates the entry. Residual
@@ -246,14 +227,12 @@ object PointLookup {
     * lands in the same tick strictly AFTER two identical listings —
     * closed for same-JVM writers by invalidateListings, and vanishingly
     * narrow cross-JVM (two listings + an unchanged-mtime append inside
-    * one granularity tick). */
-  private val listingCache = lru[String, (Long, Seq[FileStatus])](
-    cacheEntries("graft.probe.listing.cache.entries", 256))
+    * one granularity tick). A few KB per directory. */
+  private val listingCache = lru[String, (Long, Seq[FileStatus])](256)
 
   /** Listings seen exactly once (mtime + file identity): promoted to
     * listingCache when a second listing observes the same state. */
-  private val pendingListing = lru[String, (Long, Seq[(String, Long)])](
-    cacheEntries("graft.probe.listing.cache.entries", 256))
+  private val pendingListing = lru[String, (Long, Seq[(String, Long)])](256)
 
   /** Drop cached listings for `dir` and its partition subdirectories —
     * called by same-session APPEND writers (the load's genotype append),
@@ -304,137 +283,88 @@ object PointLookup {
     }
   }
 
-  /** Footer cache: (mtime, length, parsed footer) by path. Immutable
-    * store files (parquet is write-once) make staleness checkable from
-    * FileStatus alone; a rewritten file gets a new mtime/length. */
-  private val footerCache = lru[String, (Long, Long, ParquetMetadata)](
-    cacheEntries("graft.probe.footer.cache.entries", 1024))
+  /** One store file's metadata, current while the file's (mtime, length)
+    * match those it was read under: parquet files are write-once, so a
+    * file rewritten at the same path shows a new identity. The footer is
+    * read when the entry is made. The page indexes (per row group, per
+    * column, the (column index, offset index) pair parquet stores after
+    * the data) and the record-assembly tree are built from it the first
+    * time a probe reads pages of the file, so a file the footer stats
+    * prune never pays for them. Both are pure functions of write-once
+    * metadata that would otherwise cost every probe of the file 1-2 ms
+    * (reading and thrift-parsing ~2×n_columns index structures) and
+    * ~1 ms (the assembly tree of a 30-column schema) — the move Postgres
+    * makes when a B-tree's upper levels stay pinned in shared buffers.
+    * `lazy val` initialization is synchronized, so concurrent probes
+    * build each once; a build that throws (the file vanished) is retried
+    * by the next probe. */
+  private final class FileMeta(conf: Configuration, val status: FileStatus) {
+    val footer: ParquetMetadata = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
+      try r.getFooter finally r.close()
+    }
 
-  /** Page-index cache: per file, per row group, per column the parsed
-    * (column index, offset index) pair — the page-level min/max statistics
-    * parquet stores after the data. Reading + thrift-parsing these for
-    * every column is 1-2 ms of every probe when done through
-    * `readNextFilteredRowGroup`; like the footers they are immutable
-    * file metadata, so they are read ONCE per file and the probe computes
-    * its page row-ranges from the memory-resident copy — the same move
-    * Postgres makes when a B-tree's upper levels stay pinned in shared
-    * buffers. ~100 KB per cached file. */
-  private val indexCache =
-    lru[String, (Long, Long, Seq[Map[ColumnPath, (ColumnIndex, OffsetIndex)]])](
-      cacheEntries("graft.probe.index.cache.entries", 256))
+    lazy val pageIndexes: IndexedSeq[Map[ColumnPath, (ColumnIndex, OffsetIndex)]] = {
+      val r = open()
+      try footer.getBlocks.asScala.toIndexedSeq.map { block =>
+        block.getColumns.asScala.map { c =>
+          c.getPath -> ((r.readColumnIndex(c), r.readOffsetIndex(c)))
+        }.toMap
+      } finally r.close()
+    }
 
-  /** ColumnIO cache: the record-assembly tree is a pure function of the
-    * file schema (~1 ms to build for a 30-column schema — pure CPU,
-    * identical on every probe of the same file). */
-  private val columnIOCache = lru[String, (Long, Long, MessageColumnIO)](
-    cacheEntries("graft.probe.index.cache.entries", 256))
+    lazy val columnIO: MessageColumnIO =
+      new ColumnIOFactory(footer.getFileMetaData.getCreatedBy)
+        .getColumnIO(footer.getFileMetaData.getSchema)
+
+    def isCurrent(s: FileStatus): Boolean =
+      s.getModificationTime == status.getModificationTime && s.getLen == status.getLen
+
+    /** A reader over the cached footer — ParquetFileReader.open would
+      * re-read and re-parse the footer this entry exists to amortize. No
+      * filter in the options: readFile selects row groups and pages
+      * itself, and the record filter applies at assembly. */
+    def open(): ParquetFileReader = {
+      val inputFile = HadoopInputFile.fromStatus(status, conf)
+      new ParquetFileReader(inputFile, footer,
+        HadoopReadOptions.builder(conf, status.getPath).build(),
+        inputFile.newStream())
+    }
+  }
+
+  /** The file cache: path -> FileMeta, at most 1,024 files. Worst-case
+    * heap is ~200 MB: a footer is ~10-100 KB and a read file's page
+    * indexes ~100 KB. The stores served today sit far below the bound:
+    * the cohort bench store holds 33 files (24 after `compact`), and
+    * `graft.Bench`'s fragmented store 24 per chrom directory. */
+  private val fileCache = lru[String, FileMeta](1024)
+
+  private def fileMeta(conf: Configuration, status: FileStatus): FileMeta = {
+    val key = status.getPath.toString
+    val cached = fileCache.get(key)
+    if (cached != null && cached.isCurrent(status)) cached
+    else {
+      val meta = new FileMeta(conf, status)
+      fileCache.put(key, meta)
+      meta
+    }
+  }
 
   /** `readFilteredRowGroup(blockIndex, rowRanges)` is public but returns
     * the package-private ColumnChunkPageReadStore, which scalac refuses
-    * to reference at a call site; invoke through a cached Method handle
-    * (javac would compile the direct call). None on a parquet runtime
-    * without the two-arg overload — probes then use the slow path. */
-  private lazy val readFilteredRowGroupM: Option[java.lang.reflect.Method] =
-    try Some(classOf[ParquetFileReader].getMethod("readFilteredRowGroup",
-      classOf[Int], classOf[org.apache.parquet.internal.filter2.columnindex.RowRanges]))
-    catch { case _: Throwable => None }
-
-  private def indexesFor(conf: Configuration, status: FileStatus,
-                         footer: ParquetMetadata)
-      : Seq[Map[ColumnPath, (ColumnIndex, OffsetIndex)]] = {
-    val key = status.getPath.toString
-    val cached = indexCache.get(key)
-    if (cached != null && cached._1 == status.getModificationTime &&
-        cached._2 == status.getLen) cached._3
-    else {
-      // construct with the CACHED footer — ParquetFileReader.open would
-      // re-read and re-thrift-parse the footer this cache exists to
-      // amortize, doubling the first-probe cost per file
-      val inputFile = HadoopInputFile.fromStatus(status, conf)
-      val r = new ParquetFileReader(inputFile, footer,
-        HadoopReadOptions.builder(conf, status.getPath).build(),
-        inputFile.newStream())
-      val idx =
-        try footer.getBlocks.asScala.toSeq.map { block =>
-          block.getColumns.asScala.map { c =>
-            c.getPath -> ((r.readColumnIndex(c), r.readOffsetIndex(c)))
-          }.toMap
-        } finally r.close()
-      indexCache.put(key, (status.getModificationTime, status.getLen, idx))
-      idx
-    }
-  }
-
-  private def columnIOFor(status: FileStatus, footer: ParquetMetadata)
-      : MessageColumnIO = {
-    val key = status.getPath.toString
-    val cached = columnIOCache.get(key)
-    if (cached != null && cached._1 == status.getModificationTime &&
-        cached._2 == status.getLen) cached._3
-    else {
-      val io = new ColumnIOFactory(footer.getFileMetaData.getCreatedBy)
-        .getColumnIO(footer.getFileMetaData.getSchema)
-      columnIOCache.put(key, (status.getModificationTime, status.getLen, io))
-      io
-    }
-  }
-
-  private def footerFor(conf: Configuration, status: FileStatus): ParquetMetadata = {
-    val key = status.getPath.toString
-    val cached = footerCache.get(key)
-    if (cached != null && cached._1 == status.getModificationTime &&
-        cached._2 == status.getLen) cached._3
-    else {
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
-      val f = try r.getFooter finally r.close()
-      footerCache.put(key, (status.getModificationTime, status.getLen, f))
-      f
-    }
-  }
-
-  /** Can any row group of this file intersect [lo, hi] in `column`, per
-    * the footer's min/max statistics? Missing/empty stats answer true
-    * (must read); a file whose every row group excludes the range is
-    * skipped without opening a stream. Point probes pass lo == hi. The
-    * stats comparator is the parquet-defined ordering for the physical
-    * type (signed for INT64, unsigned lexicographic for BINARY — the same
-    * order Spark sorts by at write time, so sorted-write min/max bounds
-    * are valid prune bounds). */
-  private def mayContain(footer: ParquetMetadata, column: String,
-                         lo: AnyRef, hi: AnyRef): Boolean =
-    footer.getBlocks.asScala.exists { block =>
-      block.getColumns.asScala.find(_.getPath.toDotString == column) match {
-        case None => true
-        case Some(chunk) =>
-          val s = chunk.getStatistics
-          if (s == null || s.isEmpty || !s.hasNonNullValue) true
-          else {
-            val cmp = s.comparator().asInstanceOf[java.util.Comparator[AnyRef]]
-            cmp.compare(s.genericGetMin.asInstanceOf[AnyRef], hi) <= 0 &&
-              cmp.compare(s.genericGetMax.asInstanceOf[AnyRef], lo) >= 0
-          }
-      }
-    }
+    * to reference at a call site; invoke through a Method handle (javac
+    * would compile the direct call). */
+  private val readFilteredRowGroup = classOf[ParquetFileReader].getMethod(
+    "readFilteredRowGroup", classOf[Int], classOf[RowRanges])
 
   /** Smallest row-group min of `column` across the file, with its stats
     * comparator — the file-ordering key for deterministic cross-file
     * results. None when the column has no usable statistics. */
   private def fileMin(footer: ParquetMetadata, column: String)
-      : Option[(AnyRef, java.util.Comparator[AnyRef])] = {
-    var best: AnyRef = null
-    var cmp: java.util.Comparator[AnyRef] = null
-    footer.getBlocks.asScala.foreach { block =>
-      block.getColumns.asScala.find(_.getPath.toDotString == column).foreach { chunk =>
-        val s = chunk.getStatistics
-        if (s != null && !s.isEmpty && s.hasNonNullValue) {
-          val c = s.comparator().asInstanceOf[java.util.Comparator[AnyRef]]
-          val m = s.genericGetMin.asInstanceOf[AnyRef]
-          if (best == null || c.compare(m, best) < 0) { best = m; cmp = c }
-        }
-      }
-    }
-    if (best == null) None else Some((best, cmp))
-  }
+      : Option[(AnyRef, java.util.Comparator[AnyRef])] =
+    footer.getBlocks.asScala.flatMap(Writers.rowGroupStats(_, column))
+      .map { case (mn, _, cmp, _) => (mn, cmp) }
+      .reduceOption((best, m) => if (m._2.compare(m._1, best._1) < 0) m else best)
 
   /** `prunes`: per-column [lo, hi] bounds, ALL applied at the footer
     * min/max pruning step (conjunction); the FIRST entry's column also
@@ -456,7 +386,7 @@ object PointLookup {
   private def readListed(spark: SparkSession, dir: Path, pred: FilterPredicate,
                          prunes: Seq[(String, AnyRef, AnyRef)])
       : Seq[Map[String, String]] = {
-    val conf = hadoopConf(spark)
+    val conf = spark.sparkContext.hadoopConfiguration
     val fs = dir.getFileSystem(conf)
     val (files, fromCache) = parquetFiles(fs, dir)
     if (files.isEmpty) return Nil
@@ -467,26 +397,24 @@ object PointLookup {
     // contractual on any filesystem, and byRegion's pos-ordered contract
     // spans files on the range-partitioned multi-file layout (files are
     // pos-disjoint, so min-ordering the files totally orders the rows).
-    val candidates = files.flatMap { status =>
-      val footer = footerFor(conf, status)
-      if (prunes.forall { case (c, lo, hi) => mayContain(footer, c, lo, hi) })
-        Some((status, footer, fileMin(footer, orderColumn)))
-      else None
-    }
+    val candidates = files.map(fileMeta(conf, _)).filter { meta =>
+      prunes.forall { case (c, lo, hi) =>
+        meta.footer.getBlocks.asScala.exists(Writers.rowGroupMayHold(_, c, lo, hi))
+      }
+    }.map(meta => (meta, fileMin(meta.footer, orderColumn)))
     val ordered = candidates.sortWith {
-      case ((s1, _, m1), (s2, _, m2)) =>
+      case ((f1, m1), (f2, m2)) =>
+        val (n1, n2) = (f1.status.getPath.getName, f2.status.getPath.getName)
         (m1, m2) match {
           case (Some((a, cmp)), Some((b, _))) =>
             val c = cmp.compare(a, b)
-            if (c != 0) c < 0 else s1.getPath.getName < s2.getPath.getName
+            if (c != 0) c < 0 else n1 < n2
           case (None, Some(_)) => true // statless files first, deterministically
           case (Some(_), None) => false
-          case (None, None)    => s1.getPath.getName < s2.getPath.getName
+          case (None, None)    => n1 < n2
         }
     }
-    val result = ordered.flatMap { case (status, footer, _) =>
-      readFile(conf, status, footer, filter)
-    }
+    val result = ordered.flatMap { case (meta, _) => readFile(meta, filter) }
     // A stale cached listing whose dead files were ALL footer-pruned
     // yields an empty result without touching any file, so the
     // FileNotFoundException recovery above never fires — the probe would
@@ -501,110 +429,72 @@ object PointLookup {
     result
   }
 
-  /** One file's matching rows. The fast path computes the page row-ranges
-    * itself from the CACHED page indexes (`indexCache`) and asks the
-    * reader for exactly those pages — per probe this skips re-reading and
-    * re-parsing ~2×n_columns index structures and rebuilding the
-    * assembly tree, which together cost more than the actual page decode.
-    * Any fast-path surprise (page indexes absent for a predicate column,
-    * parquet API drift, reflection failure) degrades to the stock
-    * filtered-row-group walk — never to an error or a wrong answer. Both
-    * paths keep the record-level filter at assembly time, so page
-    * granularity never leaks extra rows into the result. */
-  private def readFile(conf: Configuration, status: FileStatus,
-                       footer: ParquetMetadata, filter: FilterCompat.Filter)
-      : Seq[Map[String, String]] =
-    (try readFileFast(conf, status, footer, filter)
-     catch { case scala.util.control.NonFatal(_) => None })
-      .getOrElse(readFileSlow(conf, status, footer, filter))
-
-  private def readFileFast(conf: Configuration, status: FileStatus,
-                           footer: ParquetMetadata, filter: FilterCompat.Filter)
-      : Option[Seq[Map[String, String]]] =
-    readFilteredRowGroupM.map { readFiltered =>
-      val idx = indexesFor(conf, status, footer)
-      // Page row-ranges come ENTIRELY from cached metadata (footer +
-      // page indexes), so compute them for every row group BEFORE
-      // opening any stream: a file whose footer stats overlap the probe
-      // but whose pages all exclude it (common on fragmented cohort
-      // stores, where appended files' min/max spans overlap) is skipped
-      // without an open — on an object store that is one saved RTT per
-      // pruned file, locally ~0.2 ms each.
-      val blockRanges = footer.getBlocks.asScala.toSeq.zipWithIndex.map {
-        case (block, bi) =>
-          val rgIdx = idx(bi)
-          // `paths` = the columns PRESENT in this row group (parquet-mr's
-          // own contract for calculateRowRanges): a filter column absent
-          // from the set is evaluated as missing-from-file (all nulls),
-          // which is correct only for genuinely absent columns — deriving
-          // the set from the predicate's columns instead would silently
-          // drop rows for any probe whose predicate outgrew its prune
-          // column list.
-          val paths = new java.util.HashSet[ColumnPath]()
-          block.getColumns.asScala.foreach(c => paths.add(c.getPath))
-          val cis = new ColumnIndexStore {
-            def getColumnIndex(p: ColumnPath): ColumnIndex =
-              rgIdx.get(p).map(_._1).orNull
-            // a predicate column without an offset index makes page
-            // pruning unsound — calculateRowRanges catches the thrown
-            // Missing and selects ALL rows of the group (verified against
-            // parquet 1.16 bytecode), so the record filter still decides
-            def getOffsetIndex(p: ColumnPath): OffsetIndex =
-              rgIdx.get(p).map(_._2).filter(_ != null).getOrElse(
-                throw new ColumnIndexStore.MissingOffsetIndexException(p))
-          }
-          (bi, ColumnIndexFilter.calculateRowRanges(
-            filter, cis, paths, block.getRowCount))
-      }.filter(_._2.rowCount() > 0)
-      if (blockRanges.isEmpty) Seq.empty
-      else {
-        val inputFile = HadoopInputFile.fromStatus(status, conf)
-        // no filter in the options: row-group selection happened above
-        // via the cached indexes; the record filter applies at assembly
-        val options = HadoopReadOptions.builder(conf, status.getPath).build()
-        val reader = new ParquetFileReader(
-          inputFile, footer, options, inputFile.newStream())
-        try {
-          val columnIO = columnIOFor(status, footer)
-          val out = ArrayBuffer[Map[String, String]]()
-          blockRanges.foreach { case (bi, ranges) =>
-            val pages = readFiltered.invoke(reader, Int.box(bi), ranges)
-              .asInstanceOf[PageReadStore]
-            if (pages != null) assemble(pages, columnIO, footer, filter, out)
-          }
-          out.toSeq
-        } finally reader.close()
-      }
-    }
-
-  private def readFileSlow(conf: Configuration, status: FileStatus,
-                           footer: ParquetMetadata, filter: FilterCompat.Filter)
+  /** One file's matching rows. The page row-ranges come from the cached
+    * page indexes, and the reader is asked for exactly those pages. The
+    * record-level filter applies at assembly time, so page granularity
+    * never leaks extra rows into the result. A file without page indexes
+    * reads whole row groups: a null column index selects all rows, and a
+    * missing offset index is handled below. */
+  private def readFile(meta: FileMeta, filter: FilterCompat.Filter)
       : Seq[Map[String, String]] = {
-    val inputFile = HadoopInputFile.fromStatus(status, conf)
-    val options = HadoopReadOptions.builder(conf, status.getPath)
-      .withRecordFilter(filter).build()
-    // footer injected: the constructor prunes row groups against the
-    // predicate (stats/dictionary), readNextFilteredRowGroup applies
-    // column-index page pruning — only overlapping pages are decoded
-    val reader = new ParquetFileReader(
-      inputFile, footer, options, inputFile.newStream())
-    try {
-      val out = ArrayBuffer[Map[String, String]]()
-      var pages = reader.readNextFilteredRowGroup()
-      while (pages != null) {
-        assemble(pages, columnIOFor(status, footer), footer, filter, out)
-        pages = reader.readNextFilteredRowGroup()
-      }
-      out.toSeq
-    } finally reader.close()
+    // Page row-ranges come ENTIRELY from cached metadata (footer + page
+    // indexes), so compute them for every row group BEFORE opening any
+    // stream: a file whose footer stats overlap the probe but whose
+    // pages all exclude it (common on fragmented cohort stores, where
+    // appended files' min/max spans overlap) is skipped without an
+    // open — on an object store that is one saved RTT per pruned file,
+    // locally ~0.2 ms each.
+    val blockRanges = meta.footer.getBlocks.asScala.toSeq.zipWithIndex.map {
+      case (block, bi) =>
+        val rgIdx = meta.pageIndexes(bi)
+        // `paths` = the columns PRESENT in this row group (parquet-mr's
+        // own contract for calculateRowRanges): a filter column absent
+        // from the set is evaluated as missing-from-file (all nulls),
+        // which is correct only for genuinely absent columns — deriving
+        // the set from the predicate's columns instead would silently
+        // drop rows for any probe whose predicate outgrew its prune
+        // column list.
+        val paths = new java.util.HashSet[ColumnPath]()
+        block.getColumns.asScala.foreach(c => paths.add(c.getPath))
+        val cis = new ColumnIndexStore {
+          def getColumnIndex(p: ColumnPath): ColumnIndex =
+            rgIdx.get(p).map(_._1).orNull
+          // a predicate column without an offset index makes page
+          // pruning unsound — calculateRowRanges catches the thrown
+          // Missing and selects ALL rows of the group (verified against
+          // parquet 1.16 bytecode), so the record filter still decides
+          def getOffsetIndex(p: ColumnPath): OffsetIndex =
+            rgIdx.get(p).map(_._2).filter(_ != null).getOrElse(
+              throw new ColumnIndexStore.MissingOffsetIndexException(p))
+        }
+        (bi, ColumnIndexFilter.calculateRowRanges(
+          filter, cis, paths, block.getRowCount))
+    }.filter(_._2.rowCount() > 0)
+    if (blockRanges.isEmpty) Seq.empty
+    else {
+      val reader = meta.open()
+      try {
+        val out = ArrayBuffer[Map[String, String]]()
+        blockRanges.foreach { case (bi, ranges) =>
+          // unwrapped, so a file that vanishes mid-read reaches read's
+          // relist-once as the FileNotFoundException it is
+          val pages =
+            try readFilteredRowGroup.invoke(reader, Int.box(bi), ranges)
+              .asInstanceOf[PageReadStore]
+            catch { case e: java.lang.reflect.InvocationTargetException =>
+              throw e.getCause }
+          if (pages != null) assemble(pages, meta, filter, out)
+        }
+        out.toSeq
+      } finally reader.close()
+    }
   }
 
-  private def assemble(pages: PageReadStore, columnIO: MessageColumnIO,
-                       footer: ParquetMetadata, filter: FilterCompat.Filter,
+  private def assemble(pages: PageReadStore, meta: FileMeta,
+                       filter: FilterCompat.Filter,
                        out: ArrayBuffer[Map[String, String]]): Unit = {
-    val schema = footer.getFileMetaData.getSchema
-    val rr = columnIO.getRecordReader(
-      pages, new GroupRecordConverter(schema), filter)
+    val rr = meta.columnIO.getRecordReader(pages,
+      new GroupRecordConverter(meta.footer.getFileMetaData.getSchema), filter)
     var i = 0L
     val n = pages.getRowCount
     while (i < n) {

@@ -486,6 +486,35 @@ object Writers {
     (due.length, dirs.length)
   }
 
+  /** One row group's usable footer statistics for `column`: (min, max,
+    * the statistics' own comparator, null count). None when the chunk is
+    * absent or its statistics are missing or empty — nothing then
+    * excludes a value. The comparator is the parquet-defined order for
+    * the physical type (signed for INT64, unsigned lexicographic for
+    * BINARY — the order the stats were written under, and the order
+    * Spark sorts by at write time); a signed-byte compare would order
+    * multi-byte UTF-8 values before ASCII and exclude them wrongly. */
+  private[graft] def rowGroupStats(
+      block: org.apache.parquet.hadoop.metadata.BlockMetaData, column: String)
+      : Option[(AnyRef, AnyRef, java.util.Comparator[AnyRef], Long)] =
+    block.getColumns.asScala.find(_.getPath.toDotString == column)
+      .map(_.getStatistics)
+      .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
+      .map(s => (s.genericGetMin.asInstanceOf[AnyRef],
+        s.genericGetMax.asInstanceOf[AnyRef],
+        s.comparator().asInstanceOf[java.util.Comparator[AnyRef]],
+        s.getNumNulls))
+
+  /** Can this row group hold a `column` value in [lo, hi], per its footer
+    * min/max? Absent or empty statistics answer true (must read). The
+    * one statistics test of the store: the probes' file pruning
+    * (`PointLookup`) and `dropKeyFiles`' classification both use it. */
+  private[graft] def rowGroupMayHold(
+      block: org.apache.parquet.hadoop.metadata.BlockMetaData, column: String,
+      lo: AnyRef, hi: AnyRef): Boolean =
+    rowGroupStats(block, column).forall { case (mn, mx, cmp, _) =>
+      cmp.compare(mn, hi) <= 0 && cmp.compare(mx, lo) >= 0 }
+
   /** Single-key form of `dropKeyFiles`. */
   def dropKeyFiles(spark: SparkSession, dir: String, keyCol: String,
                    value: String): (Int, Int) =
@@ -539,42 +568,19 @@ object Writers {
           val fields = r.getFileMetaData.getSchema.getFields.asScala
             .map(_.getName).toSet
           if (bins.forall(b => fields.contains(b._1))) {
-            // classify per row group, conjunctively over all keys
-            var anyMay = false
-            var allPure = true
-            r.getRowGroups.asScala.foreach { rg =>
-              var rgCovers = true
-              var rgPure = true
-              bins.foreach { case (keyCol, idBin) =>
-                val st = rg.getColumns.asScala
-                  .find(_.getPath.toDotString == keyCol)
-                  .map(_.getStatistics).orNull
-                if (st == null || st.isEmpty || !st.hasNonNullValue) {
-                  // no usable stats: cannot exclude the value — treat as
-                  // covering but never pure
-                  rgPure = false
-                } else {
-                  // compare with the STATISTICS' own comparator (unsigned
-                  // lexicographic for UTF8 binary — the order the stats
-                  // were written under); Binary.compareTo is signed-byte
-                  // and disagrees for multi-byte UTF-8 key values, which
-                  // user-supplied accessions/sources can carry
-                  val cmp = st.comparator()
-                    .asInstanceOf[java.util.Comparator[AnyRef]]
-                  val mn = st.genericGetMin.asInstanceOf[AnyRef]
-                  val mx = st.genericGetMax.asInstanceOf[AnyRef]
-                  val covers = cmp.compare(mn, idBin) <= 0 &&
-                    cmp.compare(mx, idBin) >= 0
-                  if (!covers) rgCovers = false
-                  if (!(covers && cmp.compare(mn, mx) == 0 &&
-                      st.getNumNulls == 0)) rgPure = false
-                }
-              }
-              if (rgCovers) anyMay = true
-              if (!(rgCovers && rgPure)) allPure = false
+            // classify per row group, conjunctively over all keys: a
+            // group covers when every key's stats may hold its value, and
+            // is pure when every key's stats are also pinned (min == max,
+            // no nulls) — stats that cannot exclude a value never pin it
+            val groups = r.getRowGroups.asScala.map { rg =>
+              val covers = bins.forall { case (c, v) => rowGroupMayHold(rg, c, v, v) }
+              covers -> (covers && bins.forall { case (c, _) =>
+                rowGroupStats(rg, c).exists { case (mn, mx, cmp, nulls) =>
+                  nulls == 0 && cmp.compare(mn, mx) == 0 }
+              })
             }
-            if (anyMay && allPure) pure += f.getPath
-            else if (anyMay) mixed += f.getPath
+            if (groups.nonEmpty && groups.forall(_._2)) pure += f.getPath
+            else if (groups.exists(_._1)) mixed += f.getPath
           }
           // a key column missing entirely: rows predate key stamping and
           // cannot match a just-stamped import — untouched

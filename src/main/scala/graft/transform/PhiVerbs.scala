@@ -24,7 +24,7 @@ object PhiVerbs {
     * driver. */
   def scan(spark: SparkSession, args: Array[String], db: String): Unit = {
     import spark.implicits._
-    val vcf = operand(args, "phi-scan", "a VCF path")
+    val vcf = operand(args, "phi-scan")
     // DbFs, not java.io: load accepts scheme-addressed VCFs through
     // Hadoop IO, so the scan face accepts the same inputs
     if (!DbFs.exists(vcf))
@@ -145,7 +145,7 @@ object PhiVerbs {
     * Driver-side streaming IO over one file — the same single-node shape
     * as the reference (a file utility, not a table operator). */
   def sanitize(spark: SparkSession, args: Array[String]): Unit = {
-    val vcf = operand(args, "phi-sanitize", "a VCF path")
+    val vcf = operand(args, "phi-sanitize")
     // DbFs, not java.io: same scheme-addressed input contract as load
     if (!DbFs.exists(vcf))
       sys.error(s"VCF file not found: $vcf")
@@ -207,7 +207,7 @@ object PhiVerbs {
     * during that load — the ledger row's note, where the load records
     * the scan outcome and/or the header-sanitization clause. */
   def report(spark: SparkSession, args: Array[String], db: String): Unit = {
-    val batchId = operand(args, "phi-report", "a load batch id")
+    val batchId = operand(args, "phi-report")
     val row = new graft.audit.Audit.Ledger(spark, s"$db/ledger")
       .latestFor(batchId)
       .getOrElse(sys.error(s"Load batch not found: $batchId"))

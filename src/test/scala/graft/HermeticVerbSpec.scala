@@ -93,8 +93,11 @@ class HermeticVerbSpec extends SparkSpec {
     assert(captured("audit-verify", "--db", db).trim ==
       "audit chain ok (3 entries)")
     // 08-11 and 08-12 fall on or after the start date
-    assert(captured("audit-verify", "--db", db, "--start-date", "2026-08-11")
-      .trim == "audit chain ok (2 entries in window 2026-08-11..…)")
+    val windowed = captured("audit-verify", "--db", db,
+      "--start-date", "2026-08-11").trim
+    assert(windowed == "audit chain ok (2 entries in window 2026-08-11..)")
+    // the open bound prints as nothing, so any stdout encoding shows it
+    assert(windowed.forall(_ < 128), windowed)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val rep = om.readTree(captured("audit-verify", "--db", db, "--json"))
     assert(rep.get("is_valid").asBoolean())

@@ -33,4 +33,19 @@ class VerbDispatchSpec extends SparkSpec {
     assert(Graft.MutatingVerbs.subsetOf(usageVerbs.toSet),
       Graft.MutatingVerbs -- usageVerbs)
   }
+
+  test("a mutating verb missing its operand fails before it creates the db") {
+    // the writer lock mkdirs the db, and a failed run appends an
+    // audit_log row there: a typo'd --db must not come into being
+    val verbs = Seq("load", "import-gwas", "import-pgs", "import-frequencies",
+      "load-reference", "annotate-ld-blocks", "load-annotation", "dedup",
+      "text-quality", "media-features")
+    assert(verbs.toSet.subsetOf(Graft.MutatingVerbs))
+    verbs.foreach { verb =>
+      val db = Files.createTempDirectory("operanddb").toString + "/absent"
+      val e = intercept[RuntimeException](Graft.run(spark, Array(verb, "--db", db)))
+      assert(e.getMessage.startsWith(s"$verb expects "), s"$verb: ${e.getMessage}")
+      assert(!new java.io.File(db).exists, s"$verb created $db")
+    }
+  }
 }

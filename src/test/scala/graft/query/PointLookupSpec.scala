@@ -320,6 +320,76 @@ class PointLookupSpec extends SparkSpec {
     assert(PointLookup.byGene(spark, s"$base/gene_idx", "NO_SUCH_GENE").isEmpty)
   }
 
+  test("a file replaced at the same path serves its new footer and page index") {
+    // the file cache keys each file's footer and page indexes on its
+    // (mtime, length): a same-path rewrite with other rows and another
+    // length must be read through its NEW page index, not the cached
+    // one whose page offsets point into the old bytes
+    val base = Files.createTempDirectory("replaced").toString
+    val store = s"$base/variants"
+    val dir = new java.io.File(s"$store/chrom=chr1")
+    assert(dir.mkdirs())
+    val target = new java.io.File(dir, "part-00000.parquet").toPath
+    def place(rows: Seq[(Long, String, String)], name: String): Unit = {
+      rows.toDF("pos", "ref", "alt").coalesce(1).sortWithinPartitions($"pos")
+        .write.option("parquet.page.row.count.limit", "512")
+        .parquet(s"$base/$name")
+      val part = new java.io.File(s"$base/$name").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, target,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    val v1 = (1L to 3000L).map(p => (p, "A", "G"))
+    place(v1, "w1")
+    val len1 = target.toFile.length
+    // read pages of the first file, so its page indexes are cached
+    assert(PointLookup.byPosition(spark, store, "chr1", 1500L)
+      .map(_("alt")) == Seq("G"))
+    val v2 = (2L to 6000L by 2L).map(p => (p, "C", s"T$p"))
+    place(v2, "w2")
+    assert(target.toFile.length != len1)
+    PointLookup.invalidateListings(store)
+    Seq(2L, 1500L, 2999L, 3000L, 4500L, 6000L).foreach { p =>
+      val got = PointLookup.byPosition(spark, store, "chr1", p)
+        .map(r => (r("pos").toLong, r("ref"), r("alt")))
+      assert(got == v2.filter(_._1 == p), s"pos $p")
+    }
+    val region = PointLookup.byRegion(spark, store, "chr1", 1000L, 2000L)
+      .map(r => (r("pos").toLong, r("ref"), r("alt")))
+    assert(region == v2.filter { case (p, _, _) => p >= 1000L && p <= 2000L })
+  }
+
+  test("byGene prunes multi-byte UTF-8 gene names by unsigned order") {
+    // parquet BINARY stats order unsigned: a file holding "ABC1" and
+    // "ΩMEGA" has min "ABC1", max "ΩMEGA". A signed-byte compare reads
+    // the 0xC3/0xCE-leading names as LESS than ASCII, so it would prune
+    // that file for an "ÄRG1" probe and answer empty
+    val base = Files.createTempDirectory("utf8gene").toString
+    val genes = Seq("ABC1", "BRCA2", "TP53", "ÄRG1", "ΩMEGA", "ZNF9")
+    val variants = genes.zipWithIndex.flatMap { case (g, i) =>
+      (0 until 3).map(j => (g, "chr1", 100L * i + j, "A", "G", "HIGH",
+        "missense_variant", s"v$i-$j"))
+    }.toDF(graft.sinks.Writers.GeneIndexColumns: _*)
+    graft.sinks.Writers.writeGeneIndex(variants, s"$base/gene_idx")
+    val df = spark.read.parquet(s"$base/gene_idx")
+    val fileOf = df.withColumn("f", input_file_name())
+      .select($"gene", $"f").distinct().collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(genes.filterNot(_.head < 128).exists(g =>
+      genes.exists(a => a.head < 128 && fileOf(a) == fileOf(g))),
+      "no file mixes ASCII and multi-byte gene names")
+    genes.foreach { g =>
+      val direct = PointLookup.byGene(spark, s"$base/gene_idx", g)
+        .map(m => (m("gene"), m("chrom"), m("pos").toLong, m("variant_id")))
+      val viaSpark = df.filter($"gene" === g)
+        .select($"gene", $"chrom", $"pos", $"variant_id").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3)))
+        .toSeq.sortBy(_._3)
+      assert(direct == viaSpark, s"gene $g")
+      assert(direct.length == 3, s"gene $g")
+    }
+  }
+
   test("nested columns render: info map entries and filter arrays surface") {
     val df = spark.read.parquet(store)
     val probe = df.filter(element_at($"info", "DP").isNotNull)
